@@ -7,6 +7,14 @@ object Bench {
     String.format(java.util.Locale.ROOT, "%.3f", v)
   private def shortName(n: String): String = n.takeWhile(_ != '_')
 
+  /** The `"sf":<number>,` field of the named line, from a data directory
+    * ending in `sf<number>` (an optional trailing `/` is ignored). The
+    * number must be a valid JSON number, so `sf1.` or `sf.5` give no
+    * field at all. */
+  def sfField(sfDir: String): String =
+    """sf(\d+(?:\.\d+)?)$""".r.findFirstMatchIn(sfDir.stripSuffix("/"))
+      .map(m => s""""sf":${m.group(1)},""").getOrElse("")
+
   /** The driver-parsed metric line, built from (name, seconds) pairs
     * ordered by ascending query number.
     *
@@ -224,13 +232,9 @@ object Bench {
     // still lands on the compact queries_cs record below, exactly as in
     // r13–r17. The named line cannot evict the compact ones (it precedes
     // them), so the worst case is the r17 status quo.
-    val sfField = {
-      val m = "sf([0-9.]+)$".r.findFirstMatchIn(sfDir.stripSuffix("/"))
-      m.map(mm => s""""sf":${mm.group(1)},""").getOrElse("")
-    }
     if (only.isEmpty) {
       println(s"""{"metric":"total","value":${fmt(results.values.sum)},"unit":"sec",""" +
-        sfField + "\"queries\":" +
+        sfField(sfDir) + "\"queries\":" +
         ordered.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
           .mkString("{", ",", "}") + "}")
     }

@@ -27,9 +27,11 @@ object Trajectories {
   val TimeCol = "t"
   val FeatCol = "features"
 
-  /** Read a named testdata table. */
+  /** Read a named testdata table with its [[TableCatalog]] schema, so the
+    * read launches no schema-inference job; an undeclared name infers. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    TableCatalog.schemas.get(name).fold(spark.read)(spark.read.schema(_))
+      .parquet(s"$dir/$name.parquet")
 
   /** events table with `ts` normalized to NANOSECONDS-since-epoch as LONG,
     * whatever the physical parquet type of the column:

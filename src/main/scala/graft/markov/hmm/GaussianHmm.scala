@@ -409,13 +409,6 @@ object GaussianHmm {
           localThreshold: Long = BayesianHmm.LocalSweepThreshold): GaussianHmmModel = {
     val spark = traj.sparkSession
     import spark.implicits._
-    var model = init match {
-      case "gmm" => initialGuessGmm(traj, nHidden, valueCol, reversible,
-        localThreshold = localThreshold)
-      case "quantile" => initialGuess(traj, nHidden, valueCol)
-      case other => throw new IllegalArgumentException(
-        s"Unknown init '$other'. Must be one of gmm, quantile.")
-    }
     val m = nHidden
     // Size dispatch (the Hmm.fit / BayesianHmm LocalSweepThreshold
     // discipline, VERDICT r17 task 8): Baum-Welch is inherently
@@ -429,14 +422,29 @@ object GaussianHmm {
     // its merge order varies with partition completion). Above the
     // bound, one tagged job per iteration reduces only O(m²+m) moments —
     // the 100 TB shape. `localThreshold = 0` forces distributed.
+    // The size is taken before the initial guess, so an empty frame fails
+    // here with the precondition rather than inside the GMM seeding.
     val trajs = trajectories(traj, valueCol).cache()
-    val nTotal = trajs.map(_._2.length.toLong).reduce(_ + _)
+    val nTotal = trajs.rdd.map(_._2.length.toLong).fold(0L)(_ + _)
+    if (nTotal == 0) {
+      trajs.unpersist()
+      throw new IllegalArgumentException(
+        "GaussianHmm.fit: requires a non-empty observation frame " +
+          s"(no (traj_id, t, $valueCol) rows)")
+    }
     val localArr: Option[IndexedSeq[Array[Double]]] =
       if (nTotal <= localThreshold) {
         val arr = trajs.collect().sortBy(_._1).map(_._2)
         trajs.unpersist()
         Some(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
       } else None
+    var model = init match {
+      case "gmm" => initialGuessGmm(traj, nHidden, valueCol, reversible,
+        localThreshold = localThreshold)
+      case "quantile" => initialGuess(traj, nHidden, valueCol)
+      case other => throw new IllegalArgumentException(
+        s"Unknown init '$other'. Must be one of gmm, quantile.")
+    }
     var lastLl = Double.NegativeInfinity
     var iter = 0
     var converged = false

@@ -2128,10 +2128,13 @@ object ScaleAudit {
     * single-scan all-pair indicator-ACF fan-out
     * (markov/EffectiveCounts.scala, q35/q36) at 15M frames. The scale
     * contract under audit: the reference's O(nnz · N) serial per-pair
-    * ACF loop is replaced by ONE conditional-frame scan whose explode
-    * (× |lags|) is reduced MAP-SIDE — the ×25 row blowup must never
-    * cross a shuffle, and the driver sees at most n² · |lags| aggregated
-    * sufficient-statistic rows regardless of corpus size. Correctness
+    * ACF loop is replaced by one pass. The shape stage audits the
+    * window-frame formulation (`acfPairCounts`): its explode (× |lags|)
+    * is reduced MAP-SIDE — the ×25 row blowup must never cross a
+    * shuffle, and the driver sees at most n³ · |lags| aggregated
+    * sufficient-statistic rows regardless of corpus size. The estimator
+    * stages run the streaming kernel behind `inefficienciesAndCounts`,
+    * which must reproduce the analytic values below. Correctness
     * is analytic by planting an i.i.d.-state chain (all transition rows
     * = uniform π): every conditional target sequence is i.i.d., so all
     * indicator ACFs vanish, every statistical inefficiency is 1 and

@@ -101,4 +101,12 @@ class BenchManifestSpec extends AnyFunSuite {
       s"metric line ${line.length} bytes at 270 cap-level entries — " +
         "less than 800 bytes of tail headroom; shrink the encoding")
   }
+
+  test("sfField emits a valid JSON number or no field") {
+    assert(graft.Bench.sfField("/data/sf0.1") == "\"sf\":0.1,")
+    assert(graft.Bench.sfField("/data/sf10/") == "\"sf\":10,")
+    assert(graft.Bench.sfField("sf1") == "\"sf\":1,")
+    Seq("/data/sf1.", "/data/sf.5", "/data/sf1.2.3", "/data/sf", "/data/tpch")
+      .foreach(d => assert(graft.Bench.sfField(d) == "", d))
+  }
 }

@@ -321,4 +321,16 @@ class HmmSpec extends SparkSpec with Matchers {
     loc.iterations shouldBe dist.iterations
     math.abs(loc.logLikelihood - dist.logLikelihood) should be < 1e-5
   }
+
+  test("GaussianHmm.fit on an empty frame raises the non-empty precondition") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long, Double)].toDF("traj_id", "t", "value")
+    for (init <- Seq("gmm", "quantile")) {
+      val e = intercept[IllegalArgumentException] {
+        GaussianHmm.fit(empty, 2, init = init)
+      }
+      e.getMessage should include("GaussianHmm.fit")
+      e.getMessage should include("non-empty")
+    }
+  }
 }
