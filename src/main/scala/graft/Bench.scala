@@ -72,10 +72,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder0 = SparkSession.builder()
-    val builder = if (sys.env.get("SPARK_GRAFT_NO_EXT").isEmpty)
-      builder0.withExtensions(new graft.functions.GraftExtensions) else builder0
-    val spark = builder
+    val spark = SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -124,9 +122,7 @@ object Bench {
     // the accumulation class that OOM'd 8 GiB drivers in AuditBattery's
     // late families. unpersist(blocking=false) runs OUTSIDE the timed
     // window so the pinned baselines (measured pre-unfreeze) stay
-    // comparable. SPARK_GRAFT_NO_UNFREEZE=true restores the old behavior
-    // (the A/B knob the heap-ledger reading was recorded with).
-    val unfreeze = sys.env.get("SPARK_GRAFT_NO_UNFREEZE").isEmpty
+    // comparable.
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
       var df: org.apache.spark.sql.DataFrame = null
       val t0 = System.nanoTime()
@@ -136,7 +132,7 @@ object Bench {
           false
       }
       val t = (System.nanoTime() - t0) / 1e9
-      if (unfreeze && df != null)
+      if (df != null)
         try graft.util.Materialize.unfreeze(df) catch { case _: Throwable => () }
       (t, ok)
     }
@@ -176,7 +172,7 @@ object Bench {
     // from the driver's 2000-byte stdout tail
     System.err.println(s"[bench] driver heap peak: " +
       s"${graft.util.HeapStat.fmt(graft.util.HeapStat.peakGiB)} GiB " +
-      s"(unfreeze=$unfreeze, max ${Runtime.getRuntime.maxMemory / (1L << 30)} GiB)")
+      s"(max ${Runtime.getRuntime.maxMemory / (1L << 30)} GiB)")
     // ordering is BenchManifest's — the single definition the committed
     // tools/bench_names.json decoder manifest is generated from, so the
     // rank array and the manifest cannot drift independently

@@ -72,9 +72,6 @@ object Verify {
     // against 29 Materialize.frozen sites — without eager unfreeze the
     // localCheckpoint blocks accumulate until the GC ContextCleaner gets
     // to them, the 8 GiB-driver OOM class AuditBattery already fixed.
-    // SPARK_GRAFT_NO_UNFREEZE=true restores the old behavior (the A/B
-    // knob the recorded heap-ledger reading was measured with).
-    val unfreeze = sys.env.get("SPARK_GRAFT_NO_UNFREEZE").isEmpty
     // SPARK_GRAFT_MUTATION_SMOKE=<query>: the oracle-gate meta-check
     // (VERDICT r16 task 5) — deliberately corrupt ONE query's output
     // (first numeric column + 1) so tools/mutation_smoke.py can assert
@@ -102,8 +99,7 @@ object Verify {
             perturb(df)
           } else df
           out.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          if (unfreeze)
-            try graft.util.Materialize.unfreeze(df) catch { case _: Throwable => () }
+          try graft.util.Materialize.unfreeze(df) catch { case _: Throwable => () }
         }
         try attempt()
         catch { case e1: Throwable =>
@@ -143,7 +139,7 @@ object Verify {
     // localCheckpoint-accumulation class has a trend line
     System.err.println(s"[verify] driver heap peak: " +
       s"${graft.util.HeapStat.fmt(graft.util.HeapStat.peakGiB)} GiB " +
-      s"(unfreeze=$unfreeze, max ${Runtime.getRuntime.maxMemory / (1L << 30)} GiB)")
+      s"(max ${Runtime.getRuntime.maxMemory / (1L << 30)} GiB)")
     spark.stop()
   }
 }

@@ -249,40 +249,23 @@ object KMeans {
   * never shuffled and nothing but k*(d+1) doubles crosses the network. */
 object LloydKMeans {
 
-  /** Size crossover for the sequential Lloyd loop (the MiniBatchKMeans /
-    * BayesianHmm dispatch discipline), in VALUES (rows × dim, ≤ 64 MB of
-    * doubles): at or below, the persisted training frame is collected
-    * once and the loop runs driver-local — each distributed iteration
-    * was one cluster-wide job of tiny useful work on the ≤65k-row capped
-    * samples callers pass by contract; above, one job per iteration with
-    * k×(d+1)-double reduces — the 100 TB shape for full-corpus fits.
-    * Both transports run the SAME per-row body (q267 gates their parity;
-    * centers can differ only in float summation order). */
+  /** The [[graft.util.Transport]] threshold of the Lloyd loop, in VALUES
+    * (rows × dim, ≤ 64 MB of doubles): callers pass ≤65k-row capped
+    * samples by contract (semDedup/IVF/PQ), which run driver-local;
+    * full-corpus fits run one job per iteration with k×(d+1)-double
+    * reduces (q267 gates the parity of the two). */
   val LocalLloydThreshold: Long = 8000000L
 
-  /** Deterministic parallel statistics over a LOCAL-transport array:
-    * fixed-size ordered chunks processed in parallel (Par.mapOrdered),
-    * merged SEQUENTIALLY in chunk order. Chunking is constant-sized and
-    * the merge order fixed, so the result is deterministic for ANY core
-    * count (the bench re-runs at lower SPARK_GRAFT_CPUS); it differs
-    * from the single sequential pass only by float re-association at
-    * chunk boundaries (~1e-15 relative), which every consumer gate
-    * absorbs — the q266/q267 transport-parity clamps sit at 1e-7 and
-    * the distributed transport's own partition-merge order was never
-    * pinned. Arrays at or under one chunk take the sequential path
-    * unchanged (bit-identical at the small correctness SFs). */
+  /** Rows per local-leg chunk of the k-means transports: fixed, so the
+    * chunked merge is the same for any core count; arrays of at most one
+    * chunk take the single sequential pass. */
   private[clustering] val LocalChunkRows = 32768
-  private[clustering] def chunkedLocal[S](arr: Array[Array[Double]],
-      perChunk: Iterator[Array[Double]] => S)(merge: (S, S) => S): S = {
-    if (arr.length <= LocalChunkRows) perChunk(arr.iterator)
-    else {
-      val ranges = (0 until arr.length by LocalChunkRows)
-        .map(s => (s, math.min(s + LocalChunkRows, arr.length)))
-      graft.util.Par.mapOrdered(ranges) { case (s, e) =>
-        perChunk((s until e).iterator.map(arr(_)))
-      }.reduce(merge)
-    }
-  }
+
+  /** Per-center (sums, counts) merge of [[iterStats]] partials. */
+  private[clustering] def mergeSums(a: (Array[Array[Double]], Array[Long]),
+      b: (Array[Array[Double]], Array[Long])): (Array[Array[Double]], Array[Long]) =
+    (a._1.zip(b._1).map { case (ra, rb) => Array.tabulate(ra.length)(i => ra(i) + rb(i)) },
+      a._2.zip(b._2).map(t => t._1 + t._2))
 
   /** One Lloyd iteration's statistics over `it`: per-center (sums,
     * counts) under `m`-metric assignment. The SAME body runs
@@ -318,71 +301,37 @@ object LloydKMeans {
     val spark = traj.sparkSession
     import spark.implicits._
     // persist the training frame across the Lloyd iterations: every
-    // iteration is one job over `data`, and without the persist each of
+    // iteration is one pass over `data`, and without the persist each of
     // them (plus the seeder's count + sample) re-ran the caller's whole
     // input pipeline — scan + unit-normalize per iteration (q99/q171
     // measured the fit at ~4x its data cost on exactly that). Callers
-    // pass capped samples by contract (semDedup/IVF/PQ train on <= ~65k
-    // rows), so the footprint is bounded; unpersisted before returning.
-    val data = traj.select(col(featCol).cast("array<double>")).as[Seq[Double]]
+    // pass capped samples by contract, so the footprint is bounded.
+    val data = traj.select(col(featCol).cast("array<double>")).as[Array[Double]]
       .persist()
     try {
-    // one stats job sizes the dispatch (and fills the cache, so the
-    // seeder's count/sample below read cached partitions)
-    val statsRow = data.toDF(featCol).agg(count(lit(1)).as("n"),
-      max(size(col(featCol))).as("d")).collect()(0)
-    val n = statsRow.getLong(0)
-    val dim = if (statsRow.isNullAt(1)) 1 else math.max(1, statsRow.getInt(1))
-    val localArr: Option[Array[Array[Double]]] =
-      if (n * dim <= localThreshold) Some(data.collect().map(_.toArray))
-      else None
-    // seeding is shared by both transports (count + sample + collect on
-    // the cached frame; D²-weighting is driver-side already); callers
-    // that run fit twice with identical seeding (the q267 parity gate)
-    // pass the seed once via `init`
-    var centers = init.getOrElse(
-      KMeansPlusPlus.seed(data.toDF(featCol), k, seed, featCol = featCol))
-    val m = metric
-    var iter = 0
-    var moved = Double.MaxValue
-    while (iter < maxIter && moved > tol) {
-      val (sums, counts) = localArr match {
-        case Some(arr) =>
-          // chunk-parallel local transport; merge matches the
-          // distributed reduce below
-          chunkedLocal(arr, (it: Iterator[Array[Double]]) =>
-            iterStats(it, centers, m)) { (a, b) =>
-            (a._1.zip(b._1).map { case (ra, rb) =>
-              Array.tabulate(ra.length)(i => ra(i) + rb(i)) },
-              a._2.zip(b._2).map(t => t._1 + t._2))
-          }
-        case None =>
-          val bc = spark.sparkContext.broadcast(centers)
-          // tagged per-iteration job (UI legibility + the cluster100
-          // scheduler-level transport audit keys on this description);
-          // JobTag restores the caller's own description afterwards
-          try {
-            graft.util.JobTag.withDescription(spark.sparkContext,
-                s"LloydKMeans iteration $iter") {
-              data
-                .mapPartitions(it =>
-                  Iterator.single(iterStats(it.map(_.toArray), bc.value, m)))
-                .reduce { (a, b) =>
-                  (a._1.zip(b._1).map { case (ra, rb) =>
-                    Array.tabulate(ra.length)(i => ra(i) + rb(i)) },
-                    a._2.zip(b._2).map(t => t._1 + t._2))
-                }
-            }
-          } finally { bc.destroy(); () }
+      // the sizing job fills the cache, so the seeder below reads cached
+      // partitions
+      val transport = graft.util.Transport(data, localThreshold, LocalChunkRows)(_.length.toLong)
+      // seeding is shared by both legs; callers that run fit twice with
+      // identical seeding (the q267 parity gate) pass the seed once via
+      // `init`
+      var centers = init.getOrElse(
+        KMeansPlusPlus.seed(data.toDF(featCol), k, seed, featCol = featCol))
+      val m = metric
+      var iter = 0
+      var moved = Double.MaxValue
+      while (iter < maxIter && moved > tol) {
+        val cs = centers
+        val (sums, counts) = transport.sweep(s"LloydKMeans iteration $iter")(
+          iterStats(_, cs, m))(mergeSums)
+        val next = centers.indices.map { j =>
+          if (counts(j) > 0) sums(j).map(_ / counts(j)) else centers(j)
+        }.toArray
+        moved = centers.indices.map(j => m.dist(centers(j), next(j))).max
+        centers = next
+        iter += 1
       }
-      val next = centers.indices.map { j =>
-        if (counts(j) > 0) sums(j).map(_ / counts(j)) else centers(j)
-      }.toArray
-      moved = centers.indices.map(j => m.dist(centers(j), next(j))).max
-      centers = next
-      iter += 1
-    }
-    ClusterModel(centers)
+      ClusterModel(centers)
     } finally data.unpersist()
   }
 }

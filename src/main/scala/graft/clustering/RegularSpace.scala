@@ -128,20 +128,15 @@ object RegularSpace {
   * broadcast-centers map + one tiny aggregation of (sum, count) per
   * center — the full table is never shuffled, and each batch job reduces
   * only k×d sums. The batch CHAIN is inherently sequential (each update
-  * needs the previous centers), so each batch is one cluster-wide job —
-  * which at driver SFs makes scheduling the dominant cost. Below
-  * [[MiniBatchKMeans.LocalBatchThreshold]] the projected frame is
-  * therefore collected ONCE and the chain runs driver-local (VERDICT r14
-  * task 5: ~30 sequential batch jobs collapse to one collect), the
-  * BayesianHmm LocalSweepThreshold / GlobalIndex Auto dispatch
-  * discipline. Both transports run the SAME per-row body on the SAME
-  * hash-drawn batches, differing only in float summation order. */
+  * needs the previous centers), so each batch is one
+  * [[graft.util.Transport]] sweep — driver-local below
+  * [[MiniBatchKMeans.LocalBatchThreshold]]. Both legs run the SAME per-row
+  * body on the SAME hash-drawn batches, differing only in float summation
+  * order. */
 object MiniBatchKMeans {
 
-  /** Size crossover for the sequential batch loop, in VALUES (rows ×
-    * dim, ≤ 64 MB of doubles): at or below, collect once + driver-local
-    * chain; above, one job per batch with model-sized reduces — the
-    * 100 TB shape. */
+  /** The [[graft.util.Transport]] threshold of the batch chain, in VALUES
+    * (rows × dim, ≤ 64 MB of doubles). */
   val LocalBatchThreshold: Long = 8000000L
 
   /** Deterministic per-(row, batch) Bernoulli membership: an FNV-style
@@ -208,71 +203,42 @@ object MiniBatchKMeans {
     // without the cache each sequential batch job re-scans the source
     // (parquet + any upstream window) — the same many-small-jobs
     // pathology that blew up q73 under driver contention.
-    val data = traj.select(col(featCol).cast("array<double>").as("x")).cache()
+    val data = traj.select(col(featCol).cast("array<double>").as("x"))
+      .as[Array[Double]].cache()
     try {
-    // one stats job sizes the dispatch (and fills the cache)
-    val statsRow = data.agg(count(lit(1)).as("n"),
-      max(size(col("x"))).as("d")).collect()(0)
-    val n = statsRow.getLong(0)
-    val dim = if (statsRow.isNullAt(1)) 1 else math.max(1, statsRow.getInt(1))
-    val localArr: Option[Array[Array[Double]]] =
-      if (n * dim <= localThreshold)
-        Some(data.as[Seq[Double]].collect().map(_.toArray))
-      else None
-    // init: k-means|| on one batch (reference init_strategy kmeans++) —
-    // shared by both transports (a handful of jobs on the sampled frame);
-    // callers that run fit twice with identical seeding (the q266 parity
-    // gate) pass the seed once via `init`
-    var centers = init.getOrElse(KMeans.fit(
-      data.sample(withReplacement = false, math.min(1.0, batchFraction), seed)
-        .select(col("x").as(featCol)), k, maxIter = 5, seed = seed,
-      featCol = featCol).centers)
-    var lastCost = Double.MaxValue
-    var converged = false
-    var batch = 0
-    val totalBatches = maxEpochs * batchesPerEpoch
-    val frac = math.min(1.0, batchFraction)
-    while (batch < totalBatches && !converged) {
-      val bIdx = batch
-      val (sums, counts, cost) = localArr match {
-        case Some(arr) =>
-          // chunk-parallel local transport (LloydKMeans.chunkedLocal);
-          // merge matches the distributed reduce below
-          LloydKMeans.chunkedLocal(arr, (it: Iterator[Array[Double]]) =>
-            batchStats(it, centers, seed, bIdx, frac)) { (a, b) =>
-            (a._1.zip(b._1).map { case (ra, rb) =>
-              Array.tabulate(ra.length)(i => ra(i) + rb(i)) },
-              a._2.zip(b._2).map(t => t._1 + t._2),
-              a._3 + b._3)
-          }
-        case None =>
-          val bc = spark.sparkContext.broadcast(centers)
-          // tagged per-batch job (UI legibility + scheduler-level audits);
-          // JobTag restores the caller's own description afterwards
-          try {
-            graft.util.JobTag.withDescription(spark.sparkContext,
-                s"MiniBatchKMeans batch $bIdx") {
-              data.as[Seq[Double]]
-                .mapPartitions(it => Iterator.single(
-                  batchStats(it.map(_.toArray), bc.value, seed, bIdx, frac)))
-                .reduce { (a, b) =>
-                  val sums = a._1.zip(b._1).map { case (ra, rb) =>
-                    Array.tabulate(ra.length)(i => ra(i) + rb(i)) }
-                  val counts = a._2.zip(b._2).map(t => t._1 + t._2)
-                  (sums, counts, a._3 + b._3)
-                }
-            }
-          } finally { bc.destroy(); () }
+      // the sizing job fills the cache
+      val transport = graft.util.Transport(data, localThreshold,
+        LloydKMeans.LocalChunkRows)(_.length.toLong)
+      // init: k-means|| on one batch (reference init_strategy kmeans++) —
+      // shared by both legs (a handful of jobs on the sampled frame);
+      // callers that run fit twice with identical seeding (the q266 parity
+      // gate) pass the seed once via `init`
+      var centers = init.getOrElse(KMeans.fit(
+        data.sample(withReplacement = false, math.min(1.0, batchFraction), seed)
+          .select(col("x").as(featCol)), k, maxIter = 5, seed = seed,
+        featCol = featCol).centers)
+      var lastCost = Double.MaxValue
+      var converged = false
+      var batch = 0
+      val totalBatches = maxEpochs * batchesPerEpoch
+      val frac = math.min(1.0, batchFraction)
+      while (batch < totalBatches && !converged) {
+        val bIdx = batch
+        val cs = centers
+        val (sums, counts, cost) = transport.sweep(s"MiniBatchKMeans batch $bIdx")(
+          batchStats(_, cs, seed, bIdx, frac)) { (a, b) =>
+          val (s, c) = LloydKMeans.mergeSums((a._1, a._2), (b._1, b._2))
+          (s, c, a._3 + b._3)
+        }
+        centers = centers.indices.map { j =>
+          if (counts(j) > 0) sums(j).map(_ / counts(j)) else centers(j)
+        }.toArray
+        val relChange = if (cost != 0.0) math.abs(cost - lastCost) / cost else 0.0
+        if (relChange <= tolerance) converged = true
+        lastCost = cost
+        batch += 1
       }
-      centers = centers.indices.map { j =>
-        if (counts(j) > 0) sums(j).map(_ / counts(j)) else centers(j)
-      }.toArray
-      val relChange = if (cost != 0.0) math.abs(cost - lastCost) / cost else 0.0
-      if (relChange <= tolerance) converged = true
-      lastCost = cost
-      batch += 1
-    }
-    ClusterModel(centers)
+      ClusterModel(centers)
     } finally { data.unpersist(); () }
   }
 }

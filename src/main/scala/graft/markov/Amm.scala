@@ -133,8 +133,6 @@ object Amm {
       s.updateXAndPi()
       val t = DenseMatrix.tabulate(s.n, s.n)((i, j) => s.x(i, j) / s.pi(i))
       llNew = s.llBiased(c, t)
-      if (sys.env.contains("AMM_DEBUG"))
-        println(f"[amm] lam=${s.lagrange(0)}%.4f dl=${dl(0)}%.4f frac=$frac%.4g mhat=${s.mHat(0)}%.4f slope=${s.slopeObs(0)}%.4f ll=$llNew%.3f")
       if (llNew >= llRef - 1e-12) accepted = true
       else frac *= 0.1
     }

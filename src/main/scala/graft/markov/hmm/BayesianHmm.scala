@@ -109,21 +109,13 @@ object BayesianHmm {
       graft.util.QuantityStatistics.gather(samples, f, quantity, conf)
   }
 
-  /** Size crossover for the Gibbs sweep transport (the GlobalIndex Auto /
-    * duplicateClusters discipline): a Gibbs chain is inherently
-    * sequential — each sweep is one cluster-wide job whose useful work is
-    * tiny at driver SFs, so below this many TOTAL observations the
-    * trajectories are collected ONCE (id-sorted, model-sized by the
-    * bound) and every sweep runs driver-local with the SAME per-(sweep,
-    * traj) seeded RNG: counts are integer-valued, so the result is
-    * IDENTICAL to the distributed reduce, minus ~nSweeps × stride job
-    * launches. Above the bound, sweeps stay one-job-per-sweep with only
-    * O(m² + m·nObs) statistics reduced — the 100 TB shape. */
+  /** The [[graft.util.Transport]] threshold of the HMM fits, in TOTAL
+    * observations: a Gibbs chain (or EM loop) is inherently sequential, so
+    * below it every sweep runs driver-local. Per-trajectory RNGs are keyed
+    * by (sweep, traj id), so the discrete counts are IDENTICAL on both
+    * legs. */
   val LocalSweepThreshold: Long = 2000000L
 
-  /** Gibbs sampler seeded from a maximum-likelihood model (the reference
-    * initializes from an :class:`MaximumLikelihoodHMM` fit). `stride`
-    * sweeps separate retained samples to decorrelate the chain. */
   /** The discrete per-trajectory grouping `sample` consumes — exposed so
     * a caller running BOTH transports over the same input (the q265
     * parity gate) can build + cache it once and pass it via
@@ -136,90 +128,64 @@ object BayesianHmm {
       .mapGroups { (id, it) => (id, it.toArray.sortBy(_._2).map(_._3)) }
   }
 
+  /** Gibbs sampler seeded from a maximum-likelihood model (the reference
+    * initializes from an :class:`MaximumLikelihoodHMM` fit). `stride`
+    * sweeps separate retained samples to decorrelate the chain. */
   def sample(dtraj: DataFrame, mlModel: Hmm.HmmModel, nObs: Int, nSamples: Int = 50,
              stride: Int = 2, reversible: Boolean = true, seed: Long = 42L,
              priorPseudocount: Double = 1e-2,
              localThreshold: Long = LocalSweepThreshold,
-             groupedOpt: Option[Dataset[(Long, Array[Int])]] = None): BayesianHmmPosterior = {
-    val spark = dtraj.sparkSession
-    import spark.implicits._
-    val m = mlModel.transition.rows
-    // ONE evaluation of the input lineage: the cache fills while the
-    // observation count (== dtraj row count) reduces from it; the local
-    // branch then collects FROM the cache and releases it (r13 review:
-    // the dtraj.count()-then-cache shape scanned the input twice in the
-    // at-scale branch). A caller-supplied grouping (groupedOpt) is
-    // caller-cached and caller-owned — never unpersisted here.
-    val ownGrouping = groupedOpt.isEmpty
-    val trajs = groupedOpt.getOrElse(groupDiscrete(dtraj).cache())
-    val nTotal = trajs.map(_._2.length.toLong).reduce(_ + _)
-    val localArr: Option[Array[(Long, Array[Int])]] =
-      if (nTotal <= localThreshold) {
-        val arr = trajs.collect().sortBy(_._1)
-        if (ownGrouping) trajs.unpersist()
-        Some(arr)
-      } else None
-
-    var a = mlModel.transition.copy
-    var b = mlModel.emission.copy
-    var piV = mlModel.initial.copy
-    val rng = new java.util.SplittableRandom(seed)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Hmm.HmmModel]
-    var sweep = 0
-    while (out.length < nSamples) {
-      val aF = graft.linalg.LinAlg.toFlat(a)
-      val bF = graft.linalg.LinAlg.toFlat(b)
-      val piF = piV.toArray
-      val sweepSeed = rng.nextLong()
-      // ONE per-trajectory body for both transports — a function VALUE
-      // capturing only the flat model arrays + sweep seed (Scala 2.12+
-      // lambdas reach module methods through the static MODULE$, so
-      // nothing non-serializable is captured; this is exactly how the
-      // distributed branch already called ffbsCounts). Keeping a single
-      // copy keeps the seed derivation bit-identical by construction.
-      val body = (t: (Long, Array[Int])) => {
-        val trng = new java.util.SplittableRandom(sweepSeed ^ (t._1 * 0x9E3779B97F4A7C15L))
-        ffbsCounts(t._2, aF, bF, piF, m, nObs, trng)
+             groupedOpt: Option[Dataset[(Long, Array[Int])]] = None): BayesianHmmPosterior =
+    withGrouping(groupedOpt, groupDiscrete(dtraj)) { trajs =>
+      val transport = graft.util.Transport.byId(trajs, localThreshold)(_.length)
+        .requireNonEmpty("BayesianHmm.sample",
+          "state trajectory frame (no (traj_id, t, state) rows)")
+      val m = mlModel.transition.rows
+      var a = mlModel.transition.copy
+      var b = mlModel.emission.copy
+      var piV = mlModel.initial.copy
+      val rng = new java.util.SplittableRandom(seed)
+      val out = scala.collection.mutable.ArrayBuffer.empty[Hmm.HmmModel]
+      var sweep = 0
+      while (out.length < nSamples) {
+        val aF = graft.linalg.LinAlg.toFlat(a)
+        val bF = graft.linalg.LinAlg.toFlat(b)
+        val piF = piV.toArray
+        val sweepSeed = rng.nextLong()
+        val stats = transport.sweep(s"BayesianHmm FFBS sweep $sweep")(_.map { t =>
+          val trng = new java.util.SplittableRandom(sweepSeed ^ (t._1 * 0x9E3779B97F4A7C15L))
+          ffbsCounts(t._2, aF, bF, piF, m, nObs, trng)
+        }.reduce(_ merge _))(_ merge _)
+        // (2) transition posterior
+        val transCounts = graft.linalg.LinAlg.fromFlat(stats.trans, m) +:+ priorPseudocount
+        a = if (reversible)
+          TmatrixSampler.sampleReversible(transCounts, 1, rng.nextLong(), nSteps = 1, burnIn = 0).head
+        else TmatrixSampler.sampleNonReversible(transCounts, rng)
+        // (3) emission posterior: Dirichlet per hidden state
+        for (k <- 0 until m) {
+          val alpha = Array.tabulate(nObs)(o => stats.emit(k * nObs + o) + priorPseudocount)
+          val row = RandomVariates.dirichlet(rng, alpha)
+          (0 until nObs).foreach(o => b(k, o) = row(o))
+        }
+        // initial distribution posterior
+        val piDraw = RandomVariates.dirichlet(rng,
+          Array.tabulate(m)(k => stats.init(k) + priorPseudocount))
+        piV = DenseVector(piDraw)
+        sweep += 1
+        if (sweep % stride == 0)
+          out += Hmm.HmmModel(a.copy, b.copy, piV.copy, Double.NaN, sweep)
       }
-      val stats = localArr match {
-        // parallel per-trajectory FFBS, SEQUENTIAL id-ordered merge —
-        // bit-identical to the old iterator fold (per-trajectory RNG is
-        // keyed by traj id, merge order unchanged); only the expensive
-        // FFBS passes spread across the app's cores
-        case Some(arr) =>
-          graft.util.Par.mapOrdered(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))(body)
-            .reduce((x, y) => x.merge(y))
-        case None =>
-          // tag the per-sweep reduce job (UI legibility + the bayes100
-          // scheduler-level transport audit keys on this description);
-          // JobTag restores the caller's own description afterwards
-          graft.util.JobTag.withDescription(spark.sparkContext,
-              s"BayesianHmm FFBS sweep $sweep") {
-            trajs.map(body).reduce((x, y) => x.merge(y))
-          }
-      }
-      // (2) transition posterior
-      val transCounts = graft.linalg.LinAlg.fromFlat(stats.trans, m) +:+ priorPseudocount
-      a = if (reversible)
-        TmatrixSampler.sampleReversible(transCounts, 1, rng.nextLong(), nSteps = 1, burnIn = 0).head
-      else TmatrixSampler.sampleNonReversible(transCounts, rng)
-      // (3) emission posterior: Dirichlet per hidden state
-      for (k <- 0 until m) {
-        val alpha = Array.tabulate(nObs)(o => stats.emit(k * nObs + o) + priorPseudocount)
-        val row = RandomVariates.dirichlet(rng, alpha)
-        (0 until nObs).foreach(o => b(k, o) = row(o))
-      }
-      // initial distribution posterior
-      val piDraw = RandomVariates.dirichlet(rng,
-        Array.tabulate(m)(k => stats.init(k) + priorPseudocount))
-      piV = DenseVector(piDraw)
-      sweep += 1
-      if (sweep % stride == 0)
-        out += Hmm.HmmModel(a.copy, b.copy, piV.copy, Double.NaN, sweep)
+      BayesianHmmPosterior(mlModel, out.toSeq)
     }
-    if (localArr.isEmpty && ownGrouping) trajs.unpersist()
-    BayesianHmmPosterior(mlModel, out.toSeq)
+
+  /** Runs `body` over the caller's grouping (caller-cached, caller-owned)
+    * or over `build`, cached for the run and released afterwards. */
+  private def withGrouping[A, R](groupedOpt: Option[Dataset[A]], build: => Dataset[A])(
+      body: Dataset[A] => R): R = groupedOpt match {
+    case Some(g) => body(g)
+    case None =>
+      val g = build.cache()
+      try body(g) finally g.unpersist()
   }
 
   /** Convenience: ML fit then posterior sampling. `localThreshold = 0`
@@ -332,13 +298,6 @@ object BayesianHmm {
       graft.util.QuantityStatistics.gather(samples, f, quantity, conf)
   }
 
-  /** Gibbs sampler over GAUSSIAN output models (_bayesian_hmm.py `_update`
-    * with GaussianOutputModel.sample, _output_model.py:435): per sweep,
-    * (1) FFBS hidden paths (one Spark pass, sufficient stats reduced
-    * tree-wise), (2) emission posterior per state —
-    * μ_k ~ N(mean_k, σ_k/√n_k), then σ_k = √(mean((x−μ_k)²)) /
-    * √(χ²(n_k−1)/n_k) under the Jeffreys prior P(μ,σ²) ∝ 1/σ —
-    * (3) transition + initial posterior draws as in the discrete case. */
   /** Gaussian twin of [[groupDiscrete]] (the q265 shared-grouping hook). */
   def groupGaussian(traj: DataFrame,
                     valueCol: String = "value"): Dataset[(Long, Array[Double])] = {
@@ -351,93 +310,72 @@ object BayesianHmm {
       .mapGroups { (id, it) => (id, it.toArray.sortBy(_._2).map(_._3)) }
   }
 
+  /** Gibbs sampler over GAUSSIAN output models (_bayesian_hmm.py `_update`
+    * with GaussianOutputModel.sample, _output_model.py:435): per sweep,
+    * (1) FFBS hidden paths (one transport sweep of sufficient
+    * statistics), (2) emission posterior per state —
+    * μ_k ~ N(mean_k, σ_k/√n_k), then σ_k = √(mean((x−μ_k)²)) /
+    * √(χ²(n_k−1)/n_k) under the Jeffreys prior P(μ,σ²) ∝ 1/σ —
+    * (3) transition + initial posterior draws as in the discrete case. */
   def sampleGaussian(traj: DataFrame, mlModel: GaussianHmm.GaussianHmmModel,
                      nSamples: Int = 50, stride: Int = 2, reversible: Boolean = true,
                      seed: Long = 42L, valueCol: String = "value",
                      priorPseudocount: Double = 1e-2,
                      localThreshold: Long = LocalSweepThreshold,
-                     groupedOpt: Option[Dataset[(Long, Array[Double])]] = None): BayesianGaussianHmmPosterior = {
-    val spark = traj.sparkSession
-    import spark.implicits._
-    val m = mlModel.transition.rows
-    // same crossover as `sample`: per-trajectory statistics are computed
-    // by identical seeded code either way; the id-sorted local merge and
-    // the distributed reduce differ only in float sum ORDER of (Σx, Σx²)
-    // partials — and the distributed order is itself nondeterministic, so
-    // callers already cannot rely on it
-    val ownGrouping = groupedOpt.isEmpty
-    val trajs = groupedOpt.getOrElse(groupGaussian(traj, valueCol).cache())
-    val nTotal = trajs.map(_._2.length.toLong).reduce(_ + _)
-    val localArr: Option[Array[(Long, Array[Double])]] =
-      if (nTotal <= localThreshold) {
-        val arr = trajs.collect().sortBy(_._1)
-        if (ownGrouping) trajs.unpersist()
-        Some(arr)
-      } else None
-
-    var a = mlModel.transition.copy
-    var means = mlModel.means.clone()
-    var sigmas = mlModel.sigmas.clone()
-    var piV = mlModel.initial.copy
-    val rng = new java.util.SplittableRandom(seed)
-    val out = scala.collection.mutable.ArrayBuffer.empty[GaussianHmm.GaussianHmmModel]
-    var sweep = 0
-    while (out.length < nSamples) {
-      val aF = graft.linalg.LinAlg.toFlat(a)
-      val meansF = means.clone(); val sigmasF = sigmas.clone()
-      val piF = piV.toArray
-      val sweepSeed = rng.nextLong()
-      // one shared per-trajectory body (see `sample`)
-      val body = (t: (Long, Array[Double])) => {
-        val trng = new java.util.SplittableRandom(sweepSeed ^ (t._1 * 0x9E3779B97F4A7C15L))
-        ffbsGaussCounts(t._2, aF, meansF, sigmasF, piF, m, trng)
-      }
-      val stats = localArr match {
-        // parallel per-trajectory FFBS, SEQUENTIAL id-ordered merge —
-        // bit-identical to the old iterator fold (see `sample`)
-        case Some(arr) =>
-          graft.util.Par.mapOrdered(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))(body)
-            .reduce((x, y) => x.merge(y))
-        case None =>
-          graft.util.JobTag.withDescription(spark.sparkContext,
-              s"BayesianHmm Gaussian FFBS sweep $sweep") {
-            trajs.map(body).reduce((x, y) => x.merge(y))
+                     groupedOpt: Option[Dataset[(Long, Array[Double])]] = None): BayesianGaussianHmmPosterior =
+    withGrouping(groupedOpt, groupGaussian(traj, valueCol)) { trajs =>
+      val transport = graft.util.Transport.byId(trajs, localThreshold)(_.length)
+        .requireNonEmpty("BayesianHmm.sampleGaussian",
+          s"observation frame (no (traj_id, t, $valueCol) rows)")
+      val m = mlModel.transition.rows
+      var a = mlModel.transition.copy
+      var means = mlModel.means.clone()
+      var sigmas = mlModel.sigmas.clone()
+      var piV = mlModel.initial.copy
+      val rng = new java.util.SplittableRandom(seed)
+      val out = scala.collection.mutable.ArrayBuffer.empty[GaussianHmm.GaussianHmmModel]
+      var sweep = 0
+      while (out.length < nSamples) {
+        val aF = graft.linalg.LinAlg.toFlat(a)
+        val meansF = means.clone(); val sigmasF = sigmas.clone()
+        val piF = piV.toArray
+        val sweepSeed = rng.nextLong()
+        val stats = transport.sweep(s"BayesianHmm Gaussian FFBS sweep $sweep")(_.map { t =>
+          val trng = new java.util.SplittableRandom(sweepSeed ^ (t._1 * 0x9E3779B97F4A7C15L))
+          ffbsGaussCounts(t._2, aF, meansF, sigmasF, piF, m, trng)
+        }.reduce(_ merge _))(_ merge _)
+        // (2) Gaussian emission posterior per state (reference order: μ with
+        // the CURRENT σ, then σ with the NEW μ; skip empty states)
+        for (k <- 0 until m) {
+          val nk = stats.n(k)
+          if (nk > 0) {
+            val xbar = stats.sx(k) / nk
+            means(k) = rng.nextGaussian() * sigmas(k) / math.sqrt(nk) + xbar
           }
-      }
-      // (2) Gaussian emission posterior per state (reference order: μ with
-      // the CURRENT σ, then σ with the NEW μ; skip empty states)
-      for (k <- 0 until m) {
-        val nk = stats.n(k)
-        if (nk > 0) {
-          val xbar = stats.sx(k) / nk
-          means(k) = rng.nextGaussian() * sigmas(k) / math.sqrt(nk) + xbar
+          if (nk > 1) {
+            val chi2 = 2.0 * RandomVariates.gamma(rng, (nk - 1.0) / 2.0)
+            // mean((x-μ)²) from the sufficient statistics
+            val sigmahat2 = stats.sxx(k) / nk - 2.0 * means(k) * stats.sx(k) / nk +
+              means(k) * means(k)
+            sigmas(k) = math.sqrt(math.max(sigmahat2, 1e-12)) /
+              math.sqrt(math.max(chi2, 1e-12) / nk)
+          }
         }
-        if (nk > 1) {
-          val chi2 = 2.0 * RandomVariates.gamma(rng, (nk - 1.0) / 2.0)
-          // mean((x-μ)²) from the sufficient statistics
-          val sigmahat2 = stats.sxx(k) / nk - 2.0 * means(k) * stats.sx(k) / nk +
-            means(k) * means(k)
-          sigmas(k) = math.sqrt(math.max(sigmahat2, 1e-12)) /
-            math.sqrt(math.max(chi2, 1e-12) / nk)
-        }
+        // (3) transition + initial posterior
+        val transCounts = graft.linalg.LinAlg.fromFlat(stats.trans, m) +:+ priorPseudocount
+        a = if (reversible)
+          TmatrixSampler.sampleReversible(transCounts, 1, rng.nextLong(), nSteps = 1, burnIn = 0).head
+        else TmatrixSampler.sampleNonReversible(transCounts, rng)
+        val piDraw = RandomVariates.dirichlet(rng,
+          Array.tabulate(m)(k => stats.init(k) + priorPseudocount))
+        piV = DenseVector(piDraw)
+        sweep += 1
+        if (sweep % stride == 0)
+          out += GaussianHmm.GaussianHmmModel(a.copy, means.clone(), sigmas.clone(),
+            piV.copy, Double.NaN, sweep)
       }
-      // (3) transition + initial posterior
-      val transCounts = graft.linalg.LinAlg.fromFlat(stats.trans, m) +:+ priorPseudocount
-      a = if (reversible)
-        TmatrixSampler.sampleReversible(transCounts, 1, rng.nextLong(), nSteps = 1, burnIn = 0).head
-      else TmatrixSampler.sampleNonReversible(transCounts, rng)
-      val piDraw = RandomVariates.dirichlet(rng,
-        Array.tabulate(m)(k => stats.init(k) + priorPseudocount))
-      piV = DenseVector(piDraw)
-      sweep += 1
-      if (sweep % stride == 0)
-        out += GaussianHmm.GaussianHmmModel(a.copy, means.clone(), sigmas.clone(),
-          piV.copy, Double.NaN, sweep)
+      BayesianGaussianHmmPosterior(mlModel, out.toSeq)
     }
-    if (localArr.isEmpty && ownGrouping) trajs.unpersist()
-    BayesianGaussianHmmPosterior(mlModel, out.toSeq)
-  }
 
   /** Convenience: Gaussian ML (Baum-Welch) fit then posterior sampling.
     * `localThreshold = 0` forces the distributed per-sweep reduce. */

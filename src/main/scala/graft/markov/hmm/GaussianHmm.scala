@@ -246,18 +246,10 @@ object GaussianHmm {
     // round over the cached partitions — the same sanctioned shape as the
     // HMM EM loop. Accumulator layout: [r_j, rx_j, rxx_j]*m, ll, n.
     //
-    // Size dispatch (the BayesianHmm LocalSweepThreshold discipline): EM
-    // is inherently sequential — each iteration is one cluster-wide job
-    // whose useful work is tiny at driver SFs, so at or below
-    // `localThreshold` observations (nTot is already in hand from the
-    // seed aggregation) the value column is collected ONCE and every
-    // iteration runs the SAME accumulation body driver-local over
-    // fixed-size ordered chunks (Par.mapOrdered, sequential in-chunk-
-    // order merge — deterministic for any core count). Results differ
-    // from the distributed transport only in the float merge order of
-    // the partials, which the treeAggregate path itself never pinned
-    // (its combOp order varies with the partition count). Above the
-    // bound, one job per iteration — the 100 TB shape.
+    // Size dispatch: the graft.util.Transport policy (nTot is already in
+    // hand from the seed aggregation), written out here because the local
+    // leg loops over an UNBOXED value column — a generic Transport item
+    // type would box every value in every EM iteration.
     @inline def seqBody(acc: Array[Double], v: Double, w: Array[Double],
                         mu: Array[Double], sg: Array[Double], mm: Int): Array[Double] = {
       var tot = 0.0
@@ -407,89 +399,53 @@ object GaussianHmm {
           reversible: Boolean = true,
           init: String = "gmm",
           localThreshold: Long = BayesianHmm.LocalSweepThreshold): GaussianHmmModel = {
-    val spark = traj.sparkSession
-    import spark.implicits._
     val m = nHidden
-    // Size dispatch (the Hmm.fit / BayesianHmm LocalSweepThreshold
-    // discipline, VERDICT r17 task 8): Baum-Welch is inherently
-    // sequential — each iteration is one cluster-wide job whose useful
-    // work is tiny at driver SFs, so at or below `localThreshold` TOTAL
-    // observations the trajectories are collected once (id-sorted) and
-    // the loop runs the SAME forward-backward kernel and M-step through
-    // Par.mapOrdered with a sequential id-ordered merge. Results differ
-    // from the distributed loop only in the float merge order of the
-    // E-statistics (which the Dataset.reduce path itself never pinned —
-    // its merge order varies with partition completion). Above the
-    // bound, one tagged job per iteration reduces only O(m²+m) moments —
-    // the 100 TB shape. `localThreshold = 0` forces distributed.
     // The size is taken before the initial guess, so an empty frame fails
-    // here with the precondition rather than inside the GMM seeding.
+    // with the precondition rather than inside the GMM seeding.
     val trajs = trajectories(traj, valueCol).cache()
-    val nTotal = trajs.rdd.map(_._2.length.toLong).fold(0L)(_ + _)
-    if (nTotal == 0) {
-      trajs.unpersist()
-      throw new IllegalArgumentException(
-        "GaussianHmm.fit: requires a non-empty observation frame " +
-          s"(no (traj_id, t, $valueCol) rows)")
-    }
-    val localArr: Option[IndexedSeq[Array[Double]]] =
-      if (nTotal <= localThreshold) {
-        val arr = trajs.collect().sortBy(_._1).map(_._2)
-        trajs.unpersist()
-        Some(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
-      } else None
-    var model = init match {
-      case "gmm" => initialGuessGmm(traj, nHidden, valueCol, reversible,
-        localThreshold = localThreshold)
-      case "quantile" => initialGuess(traj, nHidden, valueCol)
-      case other => throw new IllegalArgumentException(
-        s"Unknown init '$other'. Must be one of gmm, quantile.")
-    }
-    var lastLl = Double.NegativeInfinity
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val a = graft.linalg.LinAlg.toFlat(model.transition)
-      val pi = model.initial.toArray
-      val means = model.means; val sigmas = model.sigmas
-      val stats = localArr match {
-        // parallel per-trajectory E-step, SEQUENTIAL id-ordered merge
-        // (the Hmm.fitArrays shape — Par.mapOrdered only spreads the
-        // expensive forward-backward passes across the app's cores)
-        case Some(arr) =>
-          graft.util.Par.mapOrdered(arr)(
-              obs => forwardBackward(obs, a, pi, means, sigmas, m))
-            .reduce((x, y) => x.merge(y))
-        case None =>
-          graft.util.JobTag.withDescription(spark.sparkContext,
-              s"GaussianHmm Baum-Welch iteration $iter") {
-            trajs
-              .map { case (_, obs) => forwardBackward(obs, a, pi, means, sigmas, m) }
-              .reduce((x, y) => x.merge(y))
-          }
+    try {
+      val transport = graft.util.Transport.byId(trajs, localThreshold)(_.length)
+        .requireNonEmpty("GaussianHmm.fit",
+          s"observation frame (no (traj_id, t, $valueCol) rows)")
+      var model = init match {
+        case "gmm" => initialGuessGmm(traj, nHidden, valueCol, reversible,
+          localThreshold = localThreshold)
+        case "quantile" => initialGuess(traj, nHidden, valueCol)
+        case other => throw new IllegalArgumentException(
+          s"Unknown init '$other'. Must be one of gmm, quantile.")
       }
-      val xiM = graft.linalg.LinAlg.fromFlat(stats.xi, m)
-      val aNew = if (reversible) TransitionMatrixMle.reversible(xiM)
-                 else TransitionMatrixMle.nonReversible(xiM)
-      val meansNew = new Array[Double](m)
-      val sigmasNew = new Array[Double](m)
-      for (j <- 0 until m) {
-        val w = stats.gw(j)
-        if (w > 1e-12) {
-          meansNew(j) = stats.gwx(j) / w
-          val v = stats.gwxx(j) / w - meansNew(j) * meansNew(j)
-          sigmasNew(j) = math.sqrt(math.max(v, 1e-12))
-        } else { meansNew(j) = model.means(j); sigmasNew(j) = model.sigmas(j) }
+      var lastLl = Double.NegativeInfinity
+      var iter = 0
+      var converged = false
+      while (iter < maxIter && !converged) {
+        val a = graft.linalg.LinAlg.toFlat(model.transition)
+        val pi = model.initial.toArray
+        val means = model.means; val sigmas = model.sigmas
+        val stats = transport.sweep(s"GaussianHmm Baum-Welch iteration $iter")(
+            _.map(t => forwardBackward(t._2, a, pi, means, sigmas, m)).reduce(_ merge _))(
+            _ merge _)
+        val xiM = graft.linalg.LinAlg.fromFlat(stats.xi, m)
+        val aNew = if (reversible) TransitionMatrixMle.reversible(xiM)
+                   else TransitionMatrixMle.nonReversible(xiM)
+        val meansNew = new Array[Double](m)
+        val sigmasNew = new Array[Double](m)
+        for (j <- 0 until m) {
+          val w = stats.gw(j)
+          if (w > 1e-12) {
+            meansNew(j) = stats.gwx(j) / w
+            val v = stats.gwxx(j) / w - meansNew(j) * meansNew(j)
+            sigmasNew(j) = math.sqrt(math.max(v, 1e-12))
+          } else { meansNew(j) = model.means(j); sigmasNew(j) = model.sigmas(j) }
+        }
+        val piSum = stats.g0.sum
+        val piNew = DenseVector(stats.g0.map(v => if (piSum > 0) v / piSum else 1.0 / m))
+        converged = math.abs(stats.loglik - lastLl) < tol * math.abs(stats.loglik)
+        lastLl = stats.loglik
+        model = GaussianHmmModel(aNew, meansNew, sigmasNew, piNew, stats.loglik, iter + 1)
+        iter += 1
       }
-      val piSum = stats.g0.sum
-      val piNew = DenseVector(stats.g0.map(v => if (piSum > 0) v / piSum else 1.0 / m))
-      converged = math.abs(stats.loglik - lastLl) < tol * math.abs(stats.loglik)
-      lastLl = stats.loglik
-      model = GaussianHmmModel(aNew, meansNew, sigmasNew, piNew, stats.loglik, iter + 1)
-      iter += 1
-    }
-    if (localArr.isEmpty) trajs.unpersist()
-    model
+      model
+    } finally trajs.unpersist()
   }
 
   /** True data log-likelihood of a fitted model: the scaled forward pass

@@ -312,8 +312,7 @@ object Hmm {
       }
   }
 
-  /** One M-step from merged E-statistics (shared by the distributed and
-    * driver-local EM loops). */
+  /** One M-step from merged E-statistics. */
   private def mStep(stats: EStats, m: Int, nObs: Int, reversible: Boolean,
                     iter: Int): HmmModel = {
     val xiM = graft.linalg.LinAlg.fromFlat(stats.xi, m)
@@ -332,55 +331,24 @@ object Hmm {
   }
 
   /** Baum-Welch EM. `reversible` applies the detailed-balance MLE to the
-    * hidden transition counts in the M-step.
-    *
-    * Size dispatch (the BayesianHmm LocalSweepThreshold discipline, r15):
-    * EM is inherently sequential — each iteration is one cluster-wide job
-    * whose useful work is tiny at driver SFs — so at or below
-    * `localThreshold` TOTAL observations the trajectories are collected
-    * once (id-sorted) and the loop runs through [[fitArrays]] with the
-    * SAME initial guess and the SAME forward-backward/M-step kernels;
-    * results differ from the distributed loop only in the float merge
-    * order of the E-statistics (q268 gates the parity). Above the bound,
-    * one tagged job per iteration reduces only O(m² + m·nObs) statistics
-    * — the 100 TB shape hmm100 pins at 15M frames. */
+    * hidden transition counts in the M-step. Each iteration is one
+    * [[graft.util.Transport]] sweep: driver-local at or below
+    * `localThreshold` TOTAL observations, else one tagged job reducing
+    * only O(m² + m·nObs) statistics (the 100 TB shape hmm100 pins at 15M
+    * frames). `localThreshold = 0` forces the distributed leg (q268
+    * gates the parity). */
   def fit(dtraj: DataFrame, nHidden: Int, nObs: Int, lagtime: Int = 1,
           maxIter: Int = 100, tol: Double = 1e-6,
           reversible: Boolean = true,
           localThreshold: Long = BayesianHmm.LocalSweepThreshold): HmmModel = {
-    val spark = dtraj.sparkSession
-    import spark.implicits._
-    var model = initialGuess(dtraj, nHidden, nObs, lagtime)
-    val m = model.transition.rows
     val trajs = trajectories(if (lagtime == 1) dtraj
       else dtraj.where((org.apache.spark.sql.functions.col("t") % lagtime) === 0)).cache()
-    val nTotal = trajs.map(_._2.length.toLong).reduce(_ + _)
-    if (nTotal <= localThreshold) {
-      val arr = trajs.collect().sortBy(_._1).map(_._2)
-      trajs.unpersist()
-      return fitArrays(arr.toIndexedSeq, nHidden, nObs, maxIter, tol,
-        reversible, init = Some(model))
-    }
-    var lastLl = Double.NegativeInfinity
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val a = graft.linalg.LinAlg.toFlat(model.transition)
-      val b = graft.linalg.LinAlg.toFlat(model.emission)
-      val pi = model.initial.toArray
-      val stats = graft.util.JobTag.withDescription(spark.sparkContext,
-          s"Hmm Baum-Welch iteration $iter") {
-        trajs
-          .map { case (_, obs) => forwardBackward(obs, a, b, pi, m, nObs) }
-          .reduce((x, y) => x.merge(y))
-      }
-      converged = math.abs(stats.loglik - lastLl) < tol * math.abs(stats.loglik)
-      lastLl = stats.loglik
-      model = mStep(stats, m, nObs, reversible, iter)
-      iter += 1
-    }
-    trajs.unpersist()
-    model
+    try {
+      val transport = graft.util.Transport.byId(trajs, localThreshold)(_.length)
+        .requireNonEmpty("Hmm.fit", "state trajectory frame (no (traj_id, t, state) rows)")
+      baumWelch(transport, (t: (Long, Array[Int])) => t._2,
+        initialGuess(dtraj, nHidden, nObs, lagtime), nObs, maxIter, tol, reversible)
+    } finally trajs.unpersist()
   }
 
   /** Driver-local Baum-Welch over already-collected observation arrays:
@@ -391,9 +359,19 @@ object Hmm {
   def fitArrays(obsTrajs: Seq[Array[Int]], nHidden: Int, nObs: Int,
                 maxIter: Int = 100, tol: Double = 1e-6,
                 reversible: Boolean = true,
-                init: Option[HmmModel] = None): HmmModel = {
-    var model = init.getOrElse(initialGuessFromCounts(
-      TransitionCounting.slidingCountsLocal(obsTrajs, 1, nObs), nHidden, nObs, 1))
+                init: Option[HmmModel] = None): HmmModel =
+    baumWelch(graft.util.Transport.local(obsTrajs.toIndexedSeq, unit = 1),
+      (obs: Array[Int]) => obs,
+      init.getOrElse(initialGuessFromCounts(
+        TransitionCounting.slidingCountsLocal(obsTrajs, 1, nObs), nHidden, nObs, 1)),
+      nObs, maxIter, tol, reversible)
+
+  /** The Baum-Welch loop from `init`: one transport sweep of
+    * per-trajectory forward-backward statistics per iteration. */
+  private def baumWelch[T](transport: graft.util.Transport[T],
+      obs: T => Array[Int], init: HmmModel, nObs: Int, maxIter: Int,
+      tol: Double, reversible: Boolean): HmmModel = {
+    var model = init
     val m = model.transition.rows
     var lastLl = Double.NegativeInfinity
     var iter = 0
@@ -402,13 +380,9 @@ object Hmm {
       val a = graft.linalg.LinAlg.toFlat(model.transition)
       val b = graft.linalg.LinAlg.toFlat(model.emission)
       val pi = model.initial.toArray
-      // parallel per-trajectory E-step, SEQUENTIAL in-order merge: the
-      // merge sequence (and so every float bit of the stats) is identical
-      // to the old .view fold — Par.mapOrdered only spreads the expensive
-      // forward-backward passes across the app's cores
-      val stats = graft.util.Par.mapOrdered(obsTrajs.toIndexedSeq)(
-          obs => forwardBackward(obs, a, b, pi, m, nObs))
-        .reduce((x, y) => x.merge(y))
+      val stats = transport.sweep(s"Hmm Baum-Welch iteration $iter")(
+          _.map(t => forwardBackward(obs(t), a, b, pi, m, nObs)).reduce(_ merge _))(
+          _ merge _)
       converged = math.abs(stats.loglik - lastLl) < tol * math.abs(stats.loglik)
       lastLl = stats.loglik
       model = mStep(stats, m, nObs, reversible, iter)

@@ -33,14 +33,10 @@ private[graft] object StreamingQueries extends QueryFamily {
   private def streamSession(s0: SparkSession): SparkSession = {
     val s = s0.newSession()
     s.conf.set("spark.sql.shuffle.partitions", 4)
-    // SPARK_GRAFT_STREAM_STORE=rocksdb: A/B knob for the state-store
-    // backend (VERDICT r17 item 7). Default stays the HDFS-backed
-    // in-memory provider — measured FASTER for these model-sized states
-    // (plans/r18/streaming_ab.md); RocksDB's native column-family setup
-    // per store dominates at this state size.
-    if (sys.env.get("SPARK_GRAFT_STREAM_STORE").contains("rocksdb"))
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // state store: the default HDFS-backed in-memory provider; RocksDB
+    // measured 1.06x slower on these model-sized states
+    // (plans/r18/streaming_ab.md) — its native column-family setup per
+    // store dominates at this state size.
     s
   }
   val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(

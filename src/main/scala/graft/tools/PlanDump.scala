@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Round-deliverable plan dumper: writes `explain("formatted")` of the
   * named registry queries into <outDir>/<query>_<suffix>.txt, one session
-  * for the whole list (PlanAudit is the single-query stdout variant).
+  * for the whole list.
   *
   * Usage: sbt "runMain graft.tools.PlanDump <outDir> <suffix> <q1,q2,...>"
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * IvfTune, ProfileScoring, DedupProfile, DedupPhase) folded into one
   * documented entry point. These are tuning/attribution notebooks, not
   * part of the durable audit surface (that is ScaleAudit / PlanChecks /
-  * PlanAudit / EntrySmoke).
+  * PlanDump / EntrySmoke).
   *
   * Usage: sbt "runMain graft.tools.Profile <mode> [sfDir]"
   *   q21recall  — exact >=0.6-jaccard pairs vs minhash-banding candidates

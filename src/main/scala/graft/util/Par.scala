@@ -37,10 +37,8 @@ object Par {
     // q267 0.81x). The cap still honors the driver's low-core scaling
     // run (min(8, 8) = 8; below 8 cores the allotment rules), and it
     // touches only the size-dispatched LOCAL legs — at 100 TB the
-    // transports dispatch distributed. SPARK_GRAFT_PAR_WIDTH overrides
-    // for A/B.
-    sys.env.get("SPARK_GRAFT_PAR_WIDTH").map(_.trim.toInt)
-      .filter(_ > 0).getOrElse(math.min(base, 8))
+    // transports dispatch distributed.
+    math.min(base, 8)
   }
 
   // shared daemon pool: per-iteration callers (a 100-sweep TRAM fixed

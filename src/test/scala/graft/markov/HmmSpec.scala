@@ -304,6 +304,20 @@ class HmmSpec extends SparkSpec with Matchers {
     loc.iterations shouldBe dist.iterations
   }
 
+  test("Hmm.fit local and distributed transports agree to 1e-7") {
+    val data = discreteHmmData(4, 400, seed = 43L).select("traj_id", "t", "state").cache()
+    val loc = Hmm.fit(data, nHidden = 2, nObs = 4, maxIter = 5, tol = 0.0,
+      localThreshold = Long.MaxValue)
+    val dist = Hmm.fit(data, nHidden = 2, nObs = 4, maxIter = 5, tol = 0.0,
+      localThreshold = 0L)
+    def flat(m: Hmm.HmmModel): Array[Double] =
+      m.transition.toArray ++ m.emission.toArray ++ m.initial.toArray
+    flat(loc).zip(flat(dist)).foreach { case (p, q) =>
+      p shouldBe q +- 1e-7
+    }
+    loc.iterations shouldBe dist.iterations
+  }
+
   test("gmmFit local and distributed transports agree to 1e-7") {
     import spark.implicits._
     val rng = new java.util.SplittableRandom(73L)
@@ -332,5 +346,25 @@ class HmmSpec extends SparkSpec with Matchers {
       e.getMessage should include("GaussianHmm.fit")
       e.getMessage should include("non-empty")
     }
+  }
+
+  test("Hmm.fit and the BayesianHmm samplers on an empty frame raise the " +
+    "non-empty precondition") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long, Double)].toDF("traj_id", "t", "value")
+    val emptyStates = Seq.empty[(Long, Long, Int)].toDF("traj_id", "t", "state")
+    def fails(op: String)(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      e.getMessage should include(op)
+      e.getMessage should include("non-empty")
+    }
+    fails("Hmm.fit")(Hmm.fit(emptyStates, nHidden = 2, nObs = 4))
+    val ml = Hmm.HmmModel(DenseMatrix((0.9, 0.1), (0.1, 0.9)),
+      DenseMatrix((0.5, 0.5), (0.5, 0.5)), DenseVector(0.5, 0.5),
+      Double.NegativeInfinity, 0)
+    fails("BayesianHmm.sample")(BayesianHmm.sample(emptyStates, ml, nObs = 2))
+    val mlG = GaussianHmm.GaussianHmmModel(DenseMatrix((0.9, 0.1), (0.1, 0.9)),
+      Array(0.0, 1.0), Array(1.0, 1.0), DenseVector(0.5, 0.5), Double.NegativeInfinity, 0)
+    fails("BayesianHmm.sampleGaussian")(BayesianHmm.sampleGaussian(empty, mlG))
   }
 }
