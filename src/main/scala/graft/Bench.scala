@@ -71,32 +71,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark-default AQE coalescing restored (VERDICT r17 item 1: the
-      // r17 parallelismFirst=false default coalesced every KB-sized
-      // shuffle to ONE task, serializing post-shuffle stages on a
-      // 32-core box — the driver's full-protocol record regressed 43%
-      // raw and 8 cores beat 32). parallelismFirst only changes behavior
-      // when shuffle bytes / advisory size < core count, i.e. at BENCH
-      // SFs — at 100 TB the bytes dominate and both settings coalesce to
-      // the same advisory-sized partitions, so the production shape
-      // loses nothing. r18 full-sweep A/B/A (plans/r18/): false 184.7 s
-      // @ drift 1.16 vs true 221.0 s @ drift 1.43 — geomean ratio 1.198
-      // ≈ the canary drift ratio 1.23, i.e. config-neutral at sf0.1; the
-      // Spark default additionally keeps reduce-stage parallelism for
-      // the driver's 8-vs-32-core scaling measurement. Env knob kept for
-      // byte-sized-partition experiments.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // optional comma-separated query-name filter for targeted timing
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
@@ -210,7 +185,7 @@ object Bench {
     //      maintenance thread cannot wake up mid-shutdown and stack-trace;
     //   3. spark.stop();
     //   4. a short drain sleep for any async logger flush;
-    //   5. print the metric line twice, flush, exit.
+    //   5. print the metric line once, flush, exit.
     spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
     try {
       val cls = Class.forName(
@@ -226,15 +201,14 @@ object Bench {
     // it is printed FIRST: a comparator that scans the whole captured
     // stdout finds a complete named map, while a tail-window parser
     // still lands on the compact queries_cs record below, exactly as in
-    // r13–r17. The named line cannot evict the compact ones (it precedes
-    // them), so the worst case is the r17 status quo.
+    // r13–r17. The named line cannot evict the compact one (it precedes
+    // it), so the worst case is the r17 status quo.
     if (only.isEmpty) {
       println(s"""{"metric":"total","value":${fmt(results.values.sum)},"unit":"sec",""" +
         sfField(sfDir) + "\"queries\":" +
         ordered.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
           .mkString("{", ",", "}") + "}")
     }
-    println(line)
     println(line)
     System.out.flush()
   }

@@ -1,12 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_RELIABLE=true runs the WHOLE oracle battery with
     // Materialize's reliable-checkpoint path engaged (the preemptible-
     // cluster configuration): every frozen frame goes through a real fs
@@ -20,34 +18,19 @@ object Verify {
       case other => throw new IllegalArgumentException(
         s"SPARK_GRAFT_RELIABLE='$other' — expected true/false (or 1/0, yes/no)")
     }
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long (used only
-      // for ordering, where long-of-nanos sorts identically)
-      .config(graft.util.Materialize.ReliableConfKey, reliable.toString)
+    val spark = GraftSession(extra = Seq(
+      graft.util.Materialize.ReliableConfKey -> reliable.toString,
       // GC'd frozen frames must release their reliable-checkpoint files
       // (ADVICE r13: a 265-query battery otherwise accumulates one
       // checkpoint per frozen frame for the whole run); core conf, so
       // it must be set BEFORE context creation
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // mirrors the Bench session's AQE setting so Verify executes the
-      // same plans the bench times — Spark default restored in r18
-      // (VERDICT r17 item 1; rationale in Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true"))
     if (reliable) {
       val explicit = sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
       val ckpt = explicit.getOrElse(
         Files.createTempDirectory("graft_ckpt").toString)
       spark.sparkContext.setCheckpointDir(ckpt)
-      // the context cleaner (cleanCheckpoints=true, set in the builder)
+      // the context cleaner (cleanCheckpoints=true, set in the session)
       // removes GC'd frames' checkpoint files during the run; an
       // AUTO-CREATED temp dir is additionally deleted outright on
       // shutdown (an explicit dir is the caller's to manage)

@@ -100,10 +100,6 @@ case class ClusterModel(centers: Array[Array[Double]]) {
     traj.withColumn("state", assignColumn(col(featCol), metric))
 }
 
-/** Lloyd k-means on the canonical trajectory frame via Spark MLlib
-  * (reference clustering/_kmeans.py; MLlib = broadcast centers +
-  * treeAggregate partial sums, the exact distributed shape SURVEY §2.7
-  * prescribes). Deterministic via fixed seed. */
 /** Standalone k-means++ seeding (reference clustering/_kmeans.py exports
   * `kmeans_plusplus`; MLlib's fit path uses k-means|| internally — this is
   * the composable initializer for custom loops). D^2-weighted selection
@@ -117,7 +113,8 @@ object KMeansPlusPlus {
     val rows = graft.util.Sampling.rowCap(traj, maxSampleRows, seedVal)
       .select(col(featCol).cast("array<double>"))
       .collect().map(_.getSeq[Double](0).toArray)
-    require(rows.nonEmpty, "empty input")
+    if (rows.isEmpty) throw new IllegalArgumentException(
+      s"KMeansPlusPlus.seed: requires a non-empty feature frame (no $featCol rows)")
     val rnd = new java.util.Random(seedVal)
     def d2(a: Array[Double], b: Array[Double]): Double = {
       var s = 0.0; var i = 0
@@ -148,6 +145,10 @@ object KMeansPlusPlus {
   }
 }
 
+/** Lloyd k-means on the canonical trajectory frame via Spark MLlib
+  * (reference clustering/_kmeans.py; MLlib = broadcast centers +
+  * treeAggregate partial sums, the exact distributed shape SURVEY §2.7
+  * prescribes). Deterministic via fixed seed. */
 object KMeans {
   def fit(traj: DataFrame, k: Int, maxIter: Int = 50, seed: Long = 42L,
           featCol: String = FeatCol, tol: Double = 1e-4): ClusterModel = {

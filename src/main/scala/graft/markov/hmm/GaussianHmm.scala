@@ -400,6 +400,8 @@ object GaussianHmm {
           init: String = "gmm",
           localThreshold: Long = BayesianHmm.LocalSweepThreshold): GaussianHmmModel = {
     val m = nHidden
+    if (init != "gmm" && init != "quantile") throw new IllegalArgumentException(
+      s"GaussianHmm.fit: unknown init '$init'. Must be one of gmm, quantile.")
     // The size is taken before the initial guess, so an empty frame fails
     // with the precondition rather than inside the GMM seeding.
     val trajs = trajectories(traj, valueCol).cache()
@@ -407,13 +409,10 @@ object GaussianHmm {
       val transport = graft.util.Transport.byId(trajs, localThreshold)(_.length)
         .requireNonEmpty("GaussianHmm.fit",
           s"observation frame (no (traj_id, t, $valueCol) rows)")
-      var model = init match {
-        case "gmm" => initialGuessGmm(traj, nHidden, valueCol, reversible,
+      var model =
+        if (init == "gmm") initialGuessGmm(traj, nHidden, valueCol, reversible,
           localThreshold = localThreshold)
-        case "quantile" => initialGuess(traj, nHidden, valueCol)
-        case other => throw new IllegalArgumentException(
-          s"Unknown init '$other'. Must be one of gmm, quantile.")
-      }
+        else initialGuess(traj, nHidden, valueCol)
       var lastLl = Double.NegativeInfinity
       var iter = 0
       var converged = false

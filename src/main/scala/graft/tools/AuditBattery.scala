@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Headless CI entry point for the scale-audit battery (VERDICT r10
   * item 6): the named 100x audits were a manual `main` with env vars,
   * and PlanChecksSpec proved that promoting plan claims into a runnable
@@ -27,21 +25,13 @@ object AuditBattery {
     val src = sys.env.getOrElse("SCALE_SRC", "/root/testdata/sf0.1")
     val out10 = sys.env.getOrElse("SCALE_DIR", "/tmp/graft_sf1")
     val out100 = sys.env.getOrElse("SCALE_DIR_100", "/tmp/graft_sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val round = sys.env.get("GRAFT_ROUND").flatMap(_.toIntOption)
     val families: Seq[String] =
       if (args.nonEmpty) args.toSeq
       else round.map(r =>
         Seq(ScaleAudit.families100(r % ScaleAudit.families100.size))).getOrElse(Seq.empty)
 
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     // tee stdout: everything the audits print lands in the ledger too
     val buf = new java.io.ByteArrayOutputStream()
@@ -73,10 +63,10 @@ object AuditBattery {
       // warning above warns but records nothing — print each family's
       // peak driver heap (JMX pool high-water, reset per family) so the
       // localCheckpoint-accumulation class has a trend line in the
-      // ledger like the orderstats tripwire got. Soft band: any single
-      // family peaking above ~0.75x of max heap is the OOM precursor the
-      // r15 failures showed; documented in BASELINE.md (trend check, not
-      // a gate — corpus sizes differ per family by design).
+      // ledger. Soft band: any single family peaking above ~0.75x of max
+      // heap is the OOM precursor the r15 failures showed; documented in
+      // BASELINE.md (trend check, not a gate — corpus sizes differ per
+      // family by design).
       def heapLine(tag: String): Unit = {
         println(s"[audit-battery] heap[$tag]: peak " +
           s"${graft.util.HeapStat.fmt(graft.util.HeapStat.peakGiB)} GiB, " +
@@ -86,29 +76,6 @@ object AuditBattery {
       graft.util.HeapStat.resetPeak()
       failures += ScaleAudit.run10x(spark, src, out10)
       heapLine("10x")
-      // per-round order-statistics constant-factor tripwire (VERDICT r14
-      // task 7): the OrderStatsBench medians are recorded in every
-      // round's ledger so a GenericRow-style regression on the Tungsten
-      // passes cannot land silently (trend check, not a gate — absolute
-      // numbers need canary normalization on this box). Settle the heap
-      // first: the 10x families leave tens of GB of old-gen residue
-      // whose collection otherwise lands INSIDE the timed reps (r16:
-      // in-battery rows_excl read 15.06 s vs 8.97 s solo at the same
-      // binary and drift — a 1.7x phantom the trend check would chase)
-      System.gc(); Thread.sleep(2000)
-      println("[audit-battery] --- orderstats tripwire ---")
-      OrderStatsBench.run(spark, n = 6000000L)
-      heapLine("orderstats")
-      // per-round sequential-chain transport tripwire (VERDICT r15 task
-      // 6): the MiniBatchBench A/B that justified the r15 size dispatch
-      // (49 jobs/7.47 s distributed -> 20 jobs/1.43 s local at sf0.1),
-      // recorded every round so a scheduling regression in the
-      // sequential-chain paths (minibatch, Lloyd, Hmm EM share the
-      // dispatch pattern) cannot land silently
-      System.gc(); Thread.sleep(2000) // same settle: orderstats frames precede
-      println("[audit-battery] --- minibatch transport A/B tripwire ---")
-      MiniBatchBench.run(spark, src)
-      heapLine("minibatch_ab")
       families.foreach { f =>
         println(s"[audit-battery] --- 100x family: $f ---")
         failures += ScaleAudit.run100x(spark, f, src, out100)

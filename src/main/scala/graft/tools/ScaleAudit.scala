@@ -2360,15 +2360,7 @@ object ScaleAudit {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SCALE_SRC", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SCALE_DIR", "/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     if (args.headOption.exists(families100.contains)) {
       val out100 = sys.env.getOrElse("SCALE_DIR_100", "/tmp/graft_sf10")
       val failures = run100x(spark, args.head, src, out100)

@@ -92,14 +92,7 @@ object ScaleSf {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SCALE_SRC", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SCALE_SF1_DIR", "/tmp/graft_sf1full")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     build(spark, src, out)
     spark.stop()
   }

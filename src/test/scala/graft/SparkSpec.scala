@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -8,22 +10,41 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sc = spark.sparkContext
+
+  /** Spark jobs launched by `body`, counted by a listener. The listener
+    * bus is asynchronous, so a marker job is run afterwards in its own
+    * group and the count is read once the marker's end has arrived (the
+    * bus delivers events in order). */
+  def jobsLaunchedBy(body: => Unit): Int = {
+    val probe = "spark-spec-probe"
+    val marker = "spark-spec-marker"
+    val started = new AtomicInteger
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`probe`) => started.incrementAndGet()
+          case Some(`marker`) => markerJobs.add(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) markerDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(probe, probe)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job's end never reached the listener")
+      started.get()
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    val s = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", wh)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = GraftSession(4, Seq("spark.sql.warehouse.dir" ->
+    java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }

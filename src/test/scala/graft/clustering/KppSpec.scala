@@ -27,4 +27,12 @@ class KppSpec extends SparkSpec with Matchers {
     val traj = Seq((1L, 0L, Seq(1.0)), (1L, 1L, Seq(2.0))).toDF("traj_id", "t", "features")
     KMeansPlusPlus.seed(traj, k = 5, seedVal = 1L).length shouldBe 2
   }
+
+  test("an empty frame raises the named non-empty precondition") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long, Seq[Double])].toDF("traj_id", "t", "features")
+    val e = intercept[IllegalArgumentException](KMeansPlusPlus.seed(empty, k = 3))
+    e.getMessage should include("KMeansPlusPlus.seed")
+    e.getMessage should include("non-empty")
+  }
 }

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.scalatest.matchers.should.Matchers
 import graft.SparkSpec
 
@@ -27,37 +25,6 @@ class TableCatalogSpec extends SparkSpec with Matchers {
       TableCatalog.schemas(name) shouldBe inferred
       Trajectories.table(spark, dir, name).schema shouldBe inferred
     }
-
-  /** Spark jobs launched by `body`, counted by a listener. The listener
-    * bus is asynchronous, so a marker job is run afterwards in its own
-    * group and the count is read once the marker's end has arrived (the
-    * bus delivers events in order). */
-  private def jobsLaunchedBy(body: => Unit): Int = {
-    val probe = "table-catalog-probe"
-    val marker = "table-catalog-marker"
-    val started = new AtomicInteger
-    val markerDone = new java.util.concurrent.CountDownLatch(1)
-    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`probe`) => started.incrementAndGet()
-          case Some(`marker`) => markerJobs.add(e.jobId)
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markerJobs.contains(e.jobId)) markerDone.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(probe, probe)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
-      started.get()
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("a declared read launches no Spark job; an inferred read does") {
     val dir = dirs.last

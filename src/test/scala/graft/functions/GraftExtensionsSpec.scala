@@ -1,47 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.matchers.should.Matchers
 
 /** SparkSessionExtensions integration: SQL-registered native functions and
-  * the dot-product fusion optimizer rule. Uses its own session (extensions
-  * are fixed at session build time). */
-class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll with Matchers {
-
-  private var _spark: SparkSession = _
-  private lazy val spark: SparkSession = _spark
-  private var prevDefault: Option[SparkSession] = None
-  private var prevActive: Option[SparkSession] = None
-
-  override def beforeAll(): Unit = {
-    // other suites share one session in this JVM: clear the default so
-    // getOrCreate builds a NEW session (with our extensions) on the shared
-    // SparkContext instead of silently returning the extensionless one
-    prevDefault = SparkSession.getDefaultSession
-    prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    _spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = {
-    // never stop: the SparkContext is shared with every other suite;
-    // just restore the previous session bindings
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    prevDefault.foreach(SparkSession.setDefaultSession)
-    prevActive.foreach(SparkSession.setActiveSession)
-  }
+  * the dot-product fusion optimizer rule, on the shared spec session. */
+class GraftExtensionsSpec extends SparkSpec with Matchers {
 
   test("array_dot / array_cosine callable from SQL") {
     val row = spark.sql(

@@ -348,6 +348,17 @@ class HmmSpec extends SparkSpec with Matchers {
     }
   }
 
+  test("GaussianHmm.fit rejects an unknown init before any Spark job") {
+    import spark.implicits._
+    val data = Seq((0L, 0L, 0.5), (0L, 1L, 1.5)).toDF("traj_id", "t", "value")
+    var e: IllegalArgumentException = null
+    jobsLaunchedBy {
+      e = intercept[IllegalArgumentException](GaussianHmm.fit(data, 2, init = "kmeans"))
+    } shouldBe 0
+    e.getMessage should include("GaussianHmm.fit")
+    e.getMessage should include("unknown init 'kmeans'")
+  }
+
   test("Hmm.fit and the BayesianHmm samplers on an empty frame raise the " +
     "non-empty precondition") {
     import spark.implicits._
