@@ -163,22 +163,53 @@ object KMeans {
   /** Exact Lloyd fixed point for 1-d features via distinct-value
     * pre-aggregation (reference clustering/_kmeans.py Lloyd loop; the
     * histogram trick is the standard low-dimensional scale path — BIRCH /
-    * grid k-means family). One `groupBy(value).count()` scan compresses the
-    * corpus to its distinct values; because every row EQUALS its value, the
-    * weighted Lloyd iteration on (value, count) makes the IDENTICAL
+    * grid k-means family): [[valueHistogram]] compresses the corpus to its
+    * distinct values in one aggregation, and [[fitHistogram]] runs the
+    * weighted Lloyd iteration on (value, count) on the driver. Because
+    * every row EQUALS its value, that iteration makes the IDENTICAL
     * assignment and mean-update decisions as full-data Lloyd — the fixed
     * point reached is exactly the full-data fixed point, at driver cost
     * instead of one full scan per iteration. At 100 TB a quantized 1-d
-    * measurement has bounded distinct values; if the cap is exceeded we
-    * fall back to the general MLlib path. */
+    * measurement has bounded distinct values; above `maxDistinct` of them
+    * the fit falls back to the general MLlib path. */
   def fit1dExact(traj: DataFrame, k: Int, seed: Long = 42L,
                  maxIter: Int = 500, maxDistinct: Int = 1 << 20,
                  featCol: String = FeatCol): ClusterModel = {
-    val hist = traj.groupBy(col(featCol).getItem(0).as("v")).count()
-      .limit(maxDistinct + 1).collect()
+    val hist = valueHistogram(traj, maxDistinct, featCol)
+    if (hist.length > maxDistinct) fit1dLarge(traj, k, seed, featCol)
+    else {
+      requireValues(hist, "KMeans.fit1dExact", s"feature frame (no $featCol rows)")
+      fitHistogram(hist, k, seed, maxIter)
+    }
+  }
+
+  /** The 1-d fit above [[fit1dExact]]'s distinct-value cap: MLlib k-means
+    * run to a tight tolerance. */
+  private[graft] def fit1dLarge(traj: DataFrame, k: Int, seed: Long,
+                                featCol: String): ClusterModel =
+    fit(traj, k, maxIter = 50, seed = seed, featCol = featCol, tol = 1e-9)
+
+  /** The (value, count) histogram of the first feature, in the order the
+    * aggregation returns it (that order seeds [[fitHistogram]]'s
+    * k-means++). At most `cap + 1` entries are collected, so a result
+    * longer than `cap` means the frame has more than `cap` distinct
+    * values. One aggregation job. */
+  def valueHistogram(traj: DataFrame, cap: Int,
+                     featCol: String = FeatCol): Array[(Double, Long)] =
+    traj.groupBy(col(featCol).getItem(0).as("v")).count()
+      .limit(cap + 1).collect()
       .map(r => (r.getDouble(0), r.getLong(1)))
-    if (hist.length > maxDistinct)
-      return fit(traj, k, maxIter = 50, seed = seed, featCol = featCol, tol = 1e-9)
+
+  /** Raises `op`'s non-empty precondition on an empty histogram. */
+  private[graft] def requireValues(hist: Array[(Double, Long)], op: String,
+                                   what: String): Unit =
+    if (hist.isEmpty) throw new IllegalArgumentException(s"$op: requires a non-empty $what")
+
+  /** Weighted k-means++ seeding and Lloyd to the exact fixed point over a
+    * [[valueHistogram]], on the driver (no Spark job). */
+  def fitHistogram(hist: Array[(Double, Long)], k: Int, seed: Long = 42L,
+                   maxIter: Int = 500): ClusterModel = {
+    requireValues(hist, "KMeans.fitHistogram", "value histogram")
     val values = hist.map(_._1)
     val weights = hist.map(_._2.toDouble)
     val n = values.length
@@ -313,6 +344,7 @@ object LloydKMeans {
       // the sizing job fills the cache, so the seeder below reads cached
       // partitions
       val transport = graft.util.Transport(data, localThreshold, LocalChunkRows)(_.length.toLong)
+        .requireNonEmpty("LloydKMeans.fit", s"feature frame (no $featCol values)")
       // seeding is shared by both legs; callers that run fit twice with
       // identical seeding (the q267 parity gate) pass the seed once via
       // `init`

@@ -209,6 +209,7 @@ object MiniBatchKMeans {
       // the sizing job fills the cache
       val transport = graft.util.Transport(data, localThreshold,
         LloydKMeans.LocalChunkRows)(_.length.toLong)
+        .requireNonEmpty("MiniBatchKMeans.fit", s"feature frame (no $featCol values)")
       // init: k-means|| on one batch (reference init_strategy kmeans++) —
       // shared by both legs (a handful of jobs on the sampled frame);
       // callers that run fit twice with identical seeding (the q266 parity

@@ -2,6 +2,7 @@ package graft.markov.hmm
 
 import breeze.linalg.{DenseMatrix, DenseVector, sum => bsum}
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import graft.markov.TransitionMatrixMle
 
 /** Hidden Markov model with 1-d Gaussian output densities (reference
@@ -171,145 +172,187 @@ object GaussianHmm {
     * PENULTIMATE parameter set (the E-step of the final iteration runs
     * before that iteration's M-step updates weights/means/sigmas) — the
     * exact semantics of sklearn's `GaussianMixture.lower_bound_`, which
-    * graft matches deliberately for parity. */
+    * graft matches deliberately for parity. `span` is the (min, max) of
+    * the values the mixture was fitted to. */
   case class GmmModel(weights: Array[Double], means: Array[Double],
                       sigmas: Array[Double], logLikelihood: Double,
-                      iterations: Int)
+                      iterations: Int, span: (Double, Double))
 
-  /** Distributed EM fit of a 1-d Gaussian mixture over the pooled
+  /** Distinct values above which [[gmmFit]] seeds through MLlib k-means
+    * rather than the exact histogram Lloyd (`KMeans.fit1dExact`'s cap). */
+  private val MaxSeedDistinct = 1 << 20
+
+  private val invSqrt2Pi = 1.0 / math.sqrt(2.0 * math.Pi)
+
+  /** The E-step statistics of one value `v` of weight `c` under the
+    * mixture (w, mu, sg), added into acc = [r_j, rx_j, rxx_j]*m, ll, n —
+    * the one per-value body of both [[gmmFit]] legs. */
+  private def seqBody(acc: Array[Double], v: Double, c: Double, w: Array[Double],
+                      mu: Array[Double], sg: Array[Double]): Array[Double] = {
+    val m = w.length
+    var tot = 0.0
+    var j = 0
+    val dens = new Array[Double](m)
+    while (j < m) {
+      val z = (v - mu(j)) / sg(j)
+      val d = w(j) * invSqrt2Pi / sg(j) * math.exp(-0.5 * z * z)
+      dens(j) = d; tot += d; j += 1
+    }
+    if (tot < 1e-300) tot = 1e-300
+    j = 0
+    while (j < m) {
+      val r = c * dens(j) / tot
+      acc(3 * j) += r; acc(3 * j + 1) += r * v; acc(3 * j + 2) += r * v * v
+      j += 1
+    }
+    acc(3 * m) += c * math.log(tot); acc(3 * m + 1) += c
+    acc
+  }
+
+  /** acc = [n_j, sx_j, sxx_j]*k, min, max before any value is added. */
+  private def seedZero(k: Int): Array[Double] = {
+    val z = new Array[Double](3 * k + 2)
+    z(3 * k) = Double.PositiveInfinity; z(3 * k + 1) = Double.NegativeInfinity
+    z
+  }
+
+  /** The seed M-step statistics of one value `v` of weight `c`: the
+    * one-hot nearest-center assignment (first-min tie-break) adds
+    * (c, c·v, c·v²) to its center's slots of acc (see [[seedZero]]), and
+    * `v` widens the (min, max) span — the one seed body of both
+    * [[gmmFit]] legs. */
+  private def seedTerm(acc: Array[Double], v: Double, c: Double,
+                       centers: Array[Double]): Array[Double] = {
+    val k = centers.length
+    var best = 0
+    var j = 1
+    while (j < k) {
+      if (math.abs(v - centers(j)) < math.abs(v - centers(best))) best = j
+      j += 1
+    }
+    acc(3 * best) += c; acc(3 * best + 1) += c * v; acc(3 * best + 2) += c * v * v
+    acc(3 * k) = math.min(acc(3 * k), v); acc(3 * k + 1) = math.max(acc(3 * k + 1), v)
+    acc
+  }
+
+  private def seedMerge(a: Array[Double], b: Array[Double]): Array[Double] = {
+    val k3 = a.length - 2
+    var i = 0
+    while (i < k3) { a(i) += b(i); i += 1 }
+    a(k3) = math.min(a(k3), b(k3)); a(k3 + 1) = math.max(a(k3 + 1), b(k3 + 1))
+    a
+  }
+
+  /** EM fit of a 1-d Gaussian mixture over the pooled, non-null
     * observation column (reference init/gaussian/_init_gaussian_impl.py:46
     * `GaussianMixture(n_components).fit`). Seeding is sklearn-parity:
-    * k-means on the pooled values (via the exact 1-d Lloyd path,
-    * deterministic seed) followed by the one-hot-responsibility M-step —
-    * this is what lets a rare far-out mode claim its own component before
-    * EM starts, which is the whole point of the reference's GMM init.
-    * Then per iteration ONE codegen aggregation: the E-step
-    * responsibilities are pure column expressions over the broadcast
-    * (w, mu, sigma) literals and the M-step needs only the 3m
-    * gamma-weighted sums (Σr, Σr·x, Σr·x²) plus the loglik — samples
-    * never hit the driver, any data size is one scan per iteration.
-    * reg_covar = 1e-6 as in sklearn; tol on the mean per-sample loglik. */
+    * k-means on the pooled values (the exact 1-d Lloyd of
+    * `KMeans.fitHistogram`, deterministic seed) followed by the
+    * one-hot-responsibility M-step — this is what lets a rare far-out mode
+    * claim its own component before EM starts, which is the whole point of
+    * the reference's GMM init. reg_covar = 1e-6 as in sklearn; tol on the
+    * mean per-sample loglik.
+    *
+    * The fit starts with ONE aggregation, the (value, count) histogram
+    * (`KMeans.valueHistogram`), and that bounded collect is the size
+    * signal: `localThreshold` counts DISTINCT values. A histogram of at
+    * most min(`localThreshold`, 2^20) values holds everything the fit
+    * needs, so the k-means seeding, the seed M-step, every EM iteration
+    * and the value span run on the driver over the (value, count) pairs
+    * with no further job; each EM pass is one count-weighted loop over the
+    * distinct values, in fixed chunks so the result is the same for any
+    * core count. Above it the values are cached, and the seed M-step sums
+    * with the span, then each EM iteration, are one `treeAggregate` over
+    * them that returns only the seed sums or the 3m responsibility-weighted
+    * sums (Σr, Σr·x, Σr·x²) plus the loglik. Both legs run the same
+    * per-value bodies ([[seedTerm]], [[seqBody]]), a histogram entry
+    * weighted by its count. */
   def gmmFit(traj: DataFrame, nComponents: Int, valueCol: String = "value",
              maxIter: Int = 100, tol: Double = 1e-3,
              seed: Long = 42L,
              localThreshold: Long = BayesianHmm.LocalSweepThreshold): GmmModel = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.{array, col}
+    import graft.clustering.KMeans
     val m = nComponents
     val vals = traj.selectExpr(s"CAST($valueCol AS DOUBLE) AS v")
-      .where(col("v").isNotNull).cache()
-    // k-means seeding + one-hot M-step (sklearn GaussianMixture init)
-    val centers = graft.clustering.KMeans
-      .fit1dExact(vals.select(array(col("v")).as("features")), m, seed = seed)
-      .centers.map(_(0))
-    val mc = centers.length // < m only when the data has < m distinct values
-    val dArr = array(centers.map(c => abs(col("v") - lit(c))): _*)
-    val assign = array_position(dArr, array_min(dArr)) - 1 // first-min tie-break
-    val seedAggs = (0 until mc).flatMap { j =>
-      val in = when(assign === j, 1.0).otherwise(0.0)
-      Seq(sum(in).as(s"n$j"), sum(in * col("v")).as(s"sx$j"),
-        sum(in * col("v") * col("v")).as(s"sxx$j"))
-    }
-    val seedRow = vals.agg(seedAggs.head, seedAggs.tail: _*).collect()(0)
-    val nTot = (0 until mc).map(j => seedRow.getDouble(3 * j)).sum
-    require(nTot > 0,
-      s"gmmFit: column '$valueCol' has no non-null values — cannot seed a " +
-        s"$m-component mixture (an all-NaN model would otherwise be returned silently)")
-    var means = new Array[Double](m)
-    var sigmas = new Array[Double](m)
-    var weights = new Array[Double](m)
-    for (j <- 0 until m) {
-      val nj = if (j < mc) seedRow.getDouble(3 * j) else 0.0
-      if (nj > 0) {
-        weights(j) = nj / nTot
-        means(j) = seedRow.getDouble(3 * j + 1) / nj
-        val v = seedRow.getDouble(3 * j + 2) / nj - means(j) * means(j)
-        sigmas(j) = math.sqrt(math.max(v, 0.0) + 1e-6)
-      } else { // empty/missing cluster: flat stand-in, EM reassigns it
-        weights(j) = 1e-6
-        means(j) = if (mc > 0) centers(j % mc) else 0.0
-        sigmas(j) = 1.0
-      }
-    }
-    var lastLl = Double.NegativeInfinity
-    var ll = Double.NegativeInfinity
-    var iter = 0
-    var converged = false
-    val invSqrt2Pi = 1.0 / math.sqrt(2.0 * math.Pi)
-    // EM iterations run as an RDD aggregation over the cached value
-    // column rather than per-iteration Column expressions: the (w, mu,
-    // sigma) parameters only change LITERALS, and a literal change is a
-    // new expression tree — Spark recompiled a fresh whole-stage codegen
-    // unit for every one of up to 100 sequential iterations (~20-30 ms
-    // each of pure janino time on this box, the dominant cost of q247 /
-    // q253). The closure-captured parameter arrays keep the job
-    // byte-identical in plan shape, so each iteration is one scheduling
-    // round over the cached partitions — the same sanctioned shape as the
-    // HMM EM loop. Accumulator layout: [r_j, rx_j, rxx_j]*m, ll, n.
-    //
-    // Size dispatch: the graft.util.Transport policy (nTot is already in
-    // hand from the seed aggregation), written out here because the local
-    // leg loops over an UNBOXED value column — a generic Transport item
-    // type would box every value in every EM iteration.
-    @inline def seqBody(acc: Array[Double], v: Double, w: Array[Double],
-                        mu: Array[Double], sg: Array[Double], mm: Int): Array[Double] = {
-      var tot = 0.0
-      var j = 0
-      val dens = new Array[Double](mm)
-      while (j < mm) {
-        val z = (v - mu(j)) / sg(j)
-        val d = w(j) * invSqrt2Pi / sg(j) * math.exp(-0.5 * z * z)
-        dens(j) = d; tot += d; j += 1
-      }
-      if (tot < 1e-300) tot = 1e-300
-      j = 0
-      while (j < mm) {
-        val r = dens(j) / tot
-        acc(3 * j) += r; acc(3 * j + 1) += r * v; acc(3 * j + 2) += r * v * v
-        j += 1
-      }
-      acc(3 * mm) += math.log(tot); acc(3 * mm + 1) += 1.0
-      acc
-    }
-    def combine(a: Array[Double], b: Array[Double]): Array[Double] = {
-      var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-    }
-    val localVals: Option[Array[Double]] =
-      if (nTot <= localThreshold.toDouble) {
-        val spark = traj.sparkSession
-        import spark.implicits._
-        Some(vals.as[Double].collect())
-      } else None
-    val rddOpt = if (localVals.isDefined) None else Some({
+      .where(col("v").isNotNull)
+    val feats = vals.select(array(col("v")).as("features"))
+    val hist = KMeans.valueHistogram(feats, MaxSeedDistinct)
+    KMeans.requireValues(hist, "GaussianHmm.gmmFit",
+      s"value column ('$valueCol' has no non-null values to seed a $m-component mixture)")
+    val local = hist.length <= math.min(localThreshold, MaxSeedDistinct.toLong)
+    val values = hist.map(_._1)
+    val counts = hist.map(_._2.toDouble)
+    // distributed leg only: the values the seed and EM passes scan
+    val rdd = if (local) None else Some {
       val spark = traj.sparkSession
       import spark.implicits._
-      vals.as[Double].rdd
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val chunk = 32768 // fixed -> deterministic for any core count
+      vals.as[Double].rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
     try {
-      while (iter < maxIter && !converged) {
-        val (w, mu, sg) = (weights, means, sigmas)
-        val mm = m
-        val row = localVals match {
-          case Some(arr) =>
-            if (arr.length <= chunk) {
-              val acc = new Array[Double](3 * mm + 2)
-              var i = 0
-              while (i < arr.length) { seqBody(acc, arr(i), w, mu, sg, mm); i += 1 }
-              acc
-            } else {
-              val ranges = (0 until arr.length by chunk)
-                .map(s0 => (s0, math.min(s0 + chunk, arr.length)))
-              graft.util.Par.mapOrdered(ranges) { case (s0, e0) =>
-                val acc = new Array[Double](3 * mm + 2)
-                var i = s0
-                while (i < e0) { seqBody(acc, arr(i), w, mu, sg, mm); i += 1 }
-                acc
-              }.reduce(combine)
-            }
-          case None => rddOpt.get.treeAggregate(new Array[Double](3 * mm + 2))(
-            (acc, v) => seqBody(acc, v, w, mu, sg, mm),
-            (a, b) => combine(a, b))
+      val centers = (if (hist.length <= MaxSeedDistinct) KMeans.fitHistogram(hist, m, seed)
+        else KMeans.fit1dLarge(feats, m, seed, "features")).centers.map(_(0))
+      val mc = centers.length // < m only when the data has < m distinct values
+      val seedSums = rdd match {
+        case Some(data) =>
+          data.treeAggregate(seedZero(mc))(seedTerm(_, _, 1.0, centers), seedMerge)
+        case None =>
+          values.indices.foldLeft(seedZero(mc))((acc, i) =>
+            seedTerm(acc, values(i), counts(i), centers))
+      }
+      val span = (seedSums(3 * mc), seedSums(3 * mc + 1))
+      val emStats: (Array[Double], Array[Double], Array[Double]) => Array[Double] = rdd match {
+        case Some(data) => (w, mu, sg) =>
+          data.treeAggregate(new Array[Double](3 * m + 2))(seqBody(_, _, 1.0, w, mu, sg), addInto)
+        case None =>
+          val n = values.length
+          val chunk = 32768 // fixed -> deterministic for any core count
+          def pass(s0: Int, e0: Int, w: Array[Double], mu: Array[Double],
+                   sg: Array[Double]): Array[Double] = {
+            val acc = new Array[Double](3 * m + 2)
+            var i = s0
+            while (i < e0) { seqBody(acc, values(i), counts(i), w, mu, sg); i += 1 }
+            acc
+          }
+          (w, mu, sg) =>
+            if (n <= chunk) pass(0, n, w, mu, sg)
+            else graft.util.Par.mapOrdered(0 until n by chunk) { s0 =>
+              pass(s0, math.min(s0 + chunk, n), w, mu, sg)
+            }.reduce(addInto)
+      }
+      val nTot = (0 until mc).map(j => seedSums(3 * j)).sum
+      var means = new Array[Double](m)
+      var sigmas = new Array[Double](m)
+      var weights = new Array[Double](m)
+      for (j <- 0 until m) {
+        val nj = if (j < mc) seedSums(3 * j) else 0.0
+        if (nj > 0) {
+          weights(j) = nj / nTot
+          means(j) = seedSums(3 * j + 1) / nj
+          val v = seedSums(3 * j + 2) / nj - means(j) * means(j)
+          sigmas(j) = math.sqrt(math.max(v, 0.0) + 1e-6)
+        } else { // empty/missing cluster: flat stand-in, EM reassigns it
+          weights(j) = 1e-6
+          means(j) = centers(j % mc)
+          sigmas(j) = 1.0
         }
+      }
+      var lastLl = Double.NegativeInfinity
+      var ll = Double.NegativeInfinity
+      var iter = 0
+      var converged = false
+      // The EM statistics are closures over captured parameter arrays, not
+      // per-iteration Column expressions: the (w, mu, sigma) parameters
+      // only change LITERALS, and a literal change is a new expression
+      // tree — Spark recompiled a fresh whole-stage codegen unit for every
+      // one of up to 100 sequential iterations (~20-30 ms each of pure
+      // janino time, the dominant cost of q247 / q253). The size dispatch
+      // is written out here rather than through graft.util.Transport
+      // because the local leg loops over the histogram's unboxed
+      // (value, count) arrays, which a generic Transport item type would
+      // box in every EM iteration.
+      while (iter < maxIter && !converged) {
+        val row = emStats(weights, means, sigmas)
         val n = row(3 * m + 1)
         val wNew = new Array[Double](m)
         val muNew = new Array[Double](m)
@@ -329,11 +372,8 @@ object GaussianHmm {
         weights = wNew; means = muNew; sigmas = sNew
         iter += 1
       }
-    } finally {
-      rddOpt.foreach(_.unpersist(blocking = false))
-      vals.unpersist()
-    }
-    GmmModel(weights, means, sigmas, ll, iter)
+      GmmModel(weights, means, sigmas, ll, iter, span)
+    } finally rdd.foreach(_.unpersist(blocking = false))
   }
 
   /** Reference-parity initial guess (init/gaussian/_init_gaussian_impl.py:
@@ -344,49 +384,111 @@ object GaussianHmm {
     * weights — exactly `to_state_probability_trajectory`), run the MLE
     * transition estimator on Nij, and start from its stationary vector.
     *
-    * Distributed shape: the Nij accumulation is one window lead() per
-    * trajectory plus a single m²-column aggregation of pure column
-    * expressions — no per-trajectory collect, no shuffle beyond the
-    * window's traj partitioning. */
+    * Distributed shape: the observations are shuffled once by trajectory
+    * and sorted by time within each partition, and a per-partition kernel
+    * ([[fractionalCounts]]) walks each trajectory in order, computing pobs once
+    * per frame and adding pobs_t ⊗ pobs_{t+1} into m² doubles. One tagged
+    * `treeAggregate` merges them: no per-trajectory collect, and only m²
+    * doubles per partition reach the driver. */
   def initialGuessGmm(traj: DataFrame, nHidden: Int, valueCol: String,
                       reversible: Boolean = true,
                       precomputedGmm: Option[GmmModel] = None,
                       localThreshold: Long = BayesianHmm.LocalSweepThreshold): GaussianHmmModel = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
     val m = nHidden
-    // callers that already ran the distributed EM (q253's battery checks
-    // the GMM itself AND the init built from it) pass it in rather than
-    // paying a second full fit
+    // callers that already ran the EM (q253's battery checks the GMM
+    // itself AND the init built from it) pass it in rather than paying a
+    // second fit
     val gmm = precomputedGmm.getOrElse(
       gmmFit(traj, m, valueCol, localThreshold = localThreshold))
-    val invSqrt2Pi = 1.0 / math.sqrt(2.0 * math.Pi)
-    def stateProbs(v: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] = {
-      val dens = (0 until m).map { j =>
-        val z = (v - lit(gmm.means(j))) / lit(gmm.sigmas(j))
-        lit(invSqrt2Pi / gmm.sigmas(j)) * exp(lit(-0.5) * z * z)
-      }
-      val tot = dens.reduce(_ + _)
-      // outlier guard (_output_model.py ignore_outliers): all-zero row
-      // of state likelihoods normalizes to uniform, not NaN
-      dens.map(d => when(tot < 1e-300, lit(1.0 / m)).otherwise(d / tot))
-    }
-    val w = Window.partitionBy("traj_id").orderBy("t")
-    val pairs = traj
-      .selectExpr("traj_id", "t", s"CAST($valueCol AS DOUBLE) AS v")
-      .withColumn("vn", lead(col("v"), 1).over(w))
-      .where(col("vn").isNotNull)
-    val p = stateProbs(col("v"))
-    val q = stateProbs(col("vn"))
-    val aggs = for (i <- 0 until m; j <- 0 until m)
-      yield sum(p(i) * q(j)).as(s"n_${i}_$j")
-    val row = pairs.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val nij = DenseMatrix.tabulate(m, m)((i, j) => row.getDouble(i * m + j))
+    val nij = fractionalCounts(traj, valueCol, gmm)
+    if (bsum(nij) <= 0.0) throw new IllegalArgumentException(
+      "GaussianHmm.initialGuessGmm: requires a non-empty set of transitions " +
+        s"(no trajectory has two consecutive non-null $valueCol values)")
     val a = if (reversible) TransitionMatrixMle.reversible(nij)
             else TransitionMatrixMle.nonReversible(nij)
     val pi = graft.linalg.LinAlg.stationaryDistribution(a)
     GaussianHmmModel(a, gmm.means, gmm.sigmas, pi,
       Double.NegativeInfinity, 0)
+  }
+
+  /** The fractional transition counts Nij = Σ_t pobs_t ⊗ pobs_{t+1} of
+    * [[initialGuessGmm]] under `gmm`'s (means, sigmas): one shuffle by
+    * trajectory, one tagged aggregation of m² doubles. */
+  private[markov] def fractionalCounts(traj: DataFrame, valueCol: String,
+                                       gmm: GmmModel): DenseMatrix[Double] = {
+    import org.apache.spark.sql.functions.col
+    val (means, sigmas) = (gmm.means, gmm.sigmas)
+    val m = means.length
+    val sorted = traj
+      .select(col("traj_id").cast("long"), col("t"), col(valueCol).cast("double").as("v"))
+      .repartition(col("traj_id"))
+      .sortWithinPartitions("traj_id", "t")
+    val counts = graft.util.JobTag.withDescription(traj.sparkSession.sparkContext,
+        s"GaussianHmm GMM-init pair counts (m=$m)") {
+      sorted.queryExecution.toRdd
+        .mapPartitions(rows => Iterator.single(pairCounts(rows, means, sigmas)))
+        .treeAggregate(new Array[Double](m * m))(addInto, addInto)
+    }
+    DenseMatrix.tabulate(m, m)((i, j) => counts(i * m + j))
+  }
+
+  private def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
+    var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
+  }
+
+  /** Row-normalized state likelihoods of `v` into `out`; an all-zero row
+    * (every state below 1e-300) normalizes to uniform, not NaN — the
+    * outlier guard of _output_model.py `ignore_outliers`. */
+  private def stateProbs(v: Double, means: Array[Double], sigmas: Array[Double],
+                         out: Array[Double]): Unit = {
+    val m = means.length
+    var tot = 0.0
+    var j = 0
+    while (j < m) {
+      val z = (v - means(j)) / sigmas(j)
+      out(j) = invSqrt2Pi / sigmas(j) * math.exp(-0.5 * z * z)
+      tot += out(j)
+      j += 1
+    }
+    j = 0
+    while (j < m) { out(j) = if (tot < 1e-300) 1.0 / m else out(j) / tot; j += 1 }
+  }
+
+  /** Σ pobs_t ⊗ pobs_{t+1}, row-major m², over one partition of
+    * (traj_id LONG, t, v DOUBLE) rows sorted by (traj_id, t). A pair
+    * counts only when both values are non-null, so a null value breaks
+    * the chain; rows with a null traj_id form one trajectory. */
+  private def pairCounts(rows: Iterator[InternalRow], means: Array[Double],
+                         sigmas: Array[Double]): Array[Double] = {
+    val m = means.length
+    val acc = new Array[Double](m * m)
+    var prev = new Array[Double](m)
+    var cur = new Array[Double](m)
+    var prevValid = false
+    var curNull = false
+    var curId = 0L
+    while (rows.hasNext) {
+      val r = rows.next()
+      val idNull = r.isNullAt(0)
+      val id = if (idNull) 0L else r.getLong(0)
+      if (idNull != curNull || id != curId) prevValid = false
+      curNull = idNull; curId = id
+      if (r.isNullAt(2)) prevValid = false
+      else {
+        stateProbs(r.getDouble(2), means, sigmas, cur)
+        if (prevValid) {
+          var i = 0
+          while (i < m) {
+            var j = 0
+            while (j < m) { acc(i * m + j) += prev(i) * cur(j); j += 1 }
+            i += 1
+          }
+        }
+        val t = prev; prev = cur; cur = t
+        prevValid = true
+      }
+    }
+    acc
   }
 
   /** Baum-Welch EM over (traj_id, t, value) observations.

@@ -488,9 +488,9 @@ private[graft] object MarkovBatteryQueries extends QueryFamily {
     }),
 
     // ---- Gaussian-HMM GMM-parity init battery (q253): the reference's
-    // init/gaussian/_init_gaussian_impl.py heuristic — distributed GMM
-    // (k-means-seeded EM, one codegen aggregation per iteration) +
-    // fractional-membership transition counts + MLE + stationary start —
+    // init/gaussian/_init_gaussian_impl.py heuristic — GMM (k-means-seeded
+    // EM over the value histogram) + fractional-membership transition
+    // counts (one per-trajectory pass) + MLE + stationary start —
     // gated on its contract: stochastic rows, normalized start, positive
     // sigmas, strictly separated means inside the data span, and the
     // GMM's own invariants (weights simplex, loglik finite). ------------
@@ -501,8 +501,7 @@ private[graft] object MarkovBatteryQueries extends QueryFamily {
       val gmm = graft.markov.hmm.GaussianHmm.gmmFit(ev, 2)
       val init = graft.markov.hmm.GaussianHmm.initialGuessGmm(ev, 2, "value",
         precomputedGmm = Some(gmm))
-      val span = ev.agg(min(col("value")), max(col("value"))).collect()(0)
-      val (vLo, vHi) = (span.getDouble(0) - 1.0, span.getDouble(1) + 1.0)
+      val (vLo, vHi) = (gmm.span._1 - 1.0, gmm.span._2 + 1.0)
       def maxAbs(xs: Iterable[Double]) = if (xs.isEmpty) 0.0 else xs.map(math.abs).max
       val stochResid = maxAbs((0 until 2).map(i =>
         breeze.linalg.sum(init.transition(i, ::).t) - 1.0))

@@ -23,6 +23,24 @@ import graft.queries.QShared._
   * `oracleSql` maps the driver consumes, and ContractSpec keeps the
   * key sets equal. */
 private[graft] object MarkovQueries extends QueryFamily {
+
+  /** q142's simulator statistics: row count, transitions outside the
+    * tridiagonal support (|s_{t+1} - s_t| > 1 within a trajectory) and
+    * the occupancy of each state in [0, nStates). */
+  private[graft] case class SimulationCounts(nRows: Long, offSupport: Long,
+                                             occupancy: Array[Long])
+
+  /** [[SimulationCounts]] of a (traj_id, t, state) frame in ONE
+    * aggregation over the frame with its windowed next state. */
+  private[graft] def simulationCounts(sim: DataFrame, nStates: Int): SimulationCounts = {
+    val s1 = lead(col("state"), 1).over(Window.partitionBy("traj_id").orderBy("t"))
+    def countIf(c: org.apache.spark.sql.Column) = sum(when(c, 1L).otherwise(0L))
+    val aggs = countIf(col("s1").isNotNull && abs(col("s1") - col("state")) > 1) +:
+      (0 until nStates).map(i => countIf(col("state") === i))
+    val r = sim.withColumn("s1", s1).agg(count(lit(1)), aggs: _*).collect()(0)
+    SimulationCounts(r.getLong(0), r.getLong(1), Array.tabulate(nStates)(i => r.getLong(2 + i)))
+  }
+
   val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
 
     // ---- markov counting (SURVEY §2.4) ---------------------------------
@@ -722,20 +740,11 @@ private[graft] object MarkovQueries extends QueryFamily {
       val t = chain.transitionMatrix
       val nTraj = 64; val len = 500
       val sim = graft.data.MarkovSim.simulate(s, t, nTraj, len, seed = 42L)
-        .localCheckpoint()
-      val n = sim.count()
-      val pairs = sim
-        .withColumn("s1", lead(col("state"), 1)
-          .over(Window.partitionBy("traj_id").orderBy("t")))
-        .where(col("s1").isNotNull)
-      // transitions outside the tridiagonal support
-      val offSupport = pairs.where(abs(col("s1") - col("state")) > 1).count()
-      val occ = sim.groupBy("state").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1).toLong).toMap
+      val SimulationCounts(n, offSupport, occ) = simulationCounts(sim, chain.n)
       val pi = chain.stationaryDistribution
       val tol = 4.0 * math.sqrt(0.25 / (n.toDouble / 10.0)) // AC-inflated CLT
       val occResid = (0 until chain.n).map { i =>
-        math.max(0.0, math.abs(occ.getOrElse(i, 0L).toDouble / n - pi(i)) - tol)
+        math.max(0.0, math.abs(occ(i).toDouble / n - pi(i)) - tol)
       }.max
       // double_well_discrete: the analytically-built Metropolis walk on
       // V(x) = (x^2-1)^2 — detailed balance wrt pi ~ exp(-beta V) is
@@ -752,7 +761,7 @@ private[graft] object MarkovQueries extends QueryFamily {
         if math.abs(i - j) > 1) yield math.abs(dw(i, j))).max
       checksDf(s, Seq(
         "n_rows" -> n.toDouble,
-        "n_states_visited" -> occ.size.toDouble,
+        "n_states_visited" -> occ.count(_ > 0).toDouble,
         "off_support_transitions" -> offSupport.toDouble,
         "occupancy_out_of_bounds" -> occResid,
         "double_well_detailed_balance" -> dwDb,

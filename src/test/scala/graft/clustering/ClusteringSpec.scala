@@ -200,4 +200,44 @@ class ClusteringSpec extends SparkSpec with Matchers {
     got(0L) shouldBe 1
     got(1L) shouldBe 0
   }
+
+  test("fit1dExact is fitHistogram over valueHistogram, to the bit") {
+    import spark.implicits._
+    val rng = new java.util.SplittableRandom(29L)
+    // heavy duplicates: three modes on a 0.05 grid
+    val df = (0 until 4000).map { i =>
+      val mu = Array(-3.0, 0.5, 4.0)(i % 3)
+      Seq(math.rint((mu + 0.6 * rng.nextGaussian()) * 20.0) / 20.0)
+    }.toDF("features").repartition(3).cache()
+    try {
+      for (k <- Seq(1, 3, 5); seed <- Seq(7L, 42L)) {
+        val direct = KMeans.fit1dExact(df, k, seed = seed)
+        val composed = KMeans.fitHistogram(KMeans.valueHistogram(df, 1 << 20), k, seed = seed)
+        withClue(s"k=$k seed=$seed: ") {
+          composed.centers.map(_.toSeq).toSeq shouldBe direct.centers.map(_.toSeq).toSeq
+        }
+      }
+    } finally { df.unpersist(); () }
+  }
+
+  test("the 1-d and k-means fits raise a named non-empty precondition on an empty frame") {
+    import spark.implicits._
+    val empty = Seq.empty[Seq[Double]].toDF("features")
+    def fails(op: String)(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      e.getMessage should include(op)
+      e.getMessage should include("non-empty")
+    }
+    fails("KMeans.fit1dExact")(KMeans.fit1dExact(empty, 2))
+    fails("KMeans.fitHistogram")(KMeans.fitHistogram(Array.empty, 2))
+    for (threshold <- Seq(0L, Long.MaxValue)) {
+      fails("LloydKMeans.fit")(LloydKMeans.fit(empty, 2, localThreshold = threshold))
+      // with init the loop would otherwise return the init centers unchanged
+      fails("LloydKMeans.fit")(LloydKMeans.fit(empty, 2, localThreshold = threshold,
+        init = Some(Array(Array(0.0), Array(1.0)))))
+      fails("MiniBatchKMeans.fit")(MiniBatchKMeans.fit(empty, 2, localThreshold = threshold))
+      fails("MiniBatchKMeans.fit")(MiniBatchKMeans.fit(empty, 2, localThreshold = threshold,
+        init = Some(Array(Array(0.0), Array(1.0)))))
+    }
+  }
 }

@@ -378,4 +378,160 @@ class HmmSpec extends SparkSpec with Matchers {
       Array(0.0, 1.0), Array(1.0, 1.0), DenseVector(0.5, 0.5), Double.NegativeInfinity, 0)
     fails("BayesianHmm.sampleGaussian")(BayesianHmm.sampleGaussian(empty, mlG))
   }
+
+  /** Two overlapping modes on a 0.05 grid: heavy duplicate values. */
+  private def gridMixture(n: Int, seed: Long): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val rng = new java.util.SplittableRandom(seed)
+    (0 until n).map { _ =>
+      val v = if (rng.nextDouble() < 0.6) -1.5 + 0.5 * rng.nextGaussian()
+              else 2.0 + 0.4 * rng.nextGaussian()
+      math.rint(v * 20.0) / 20.0
+    }.toDF("value").repartition(3)
+  }
+
+  test("gmmFit's histogram EM equals the per-value EM on duplicated values to 1e-9") {
+    val data = gridMixture(6000, 83L).cache()
+    try {
+      val (m, iters) = (3, 25)
+      val g = GaussianHmm.gmmFit(data, m, maxIter = iters, tol = 0.0)
+      // the per-value EM it replaced: k-means seeding, one-hot seed
+      // M-step and every EM pass over each value in turn
+      val feats = data.selectExpr("CAST(value AS DOUBLE) AS v").where(col("v").isNotNull)
+        .select(array(col("v")).as("features"))
+      val centers = graft.clustering.KMeans.fit1dExact(feats, m).centers.map(_(0))
+      val xs = data.collect().map(_.getDouble(0))
+      val nearest = xs.map(v => centers.indices.minBy(j => math.abs(v - centers(j))))
+      var w = Array.tabulate(m)(j => nearest.count(_ == j).toDouble / xs.length)
+      var mu = Array.tabulate(m)(j => xs.indices.filter(nearest(_) == j).map(xs).sum /
+        nearest.count(_ == j))
+      var sg = Array.tabulate(m) { j =>
+        val sel = xs.indices.filter(nearest(_) == j).map(xs)
+        math.sqrt(math.max(sel.map(v => v * v).sum / sel.length - mu(j) * mu(j), 0.0) + 1e-6)
+      }
+      var ll = 0.0
+      for (_ <- 0 until iters) {
+        val acc = new Array[Double](3 * m)
+        ll = 0.0
+        xs.foreach { v =>
+          val dens = Array.tabulate(m) { j =>
+            val z = (v - mu(j)) / sg(j)
+            w(j) / (sg(j) * math.sqrt(2.0 * math.Pi)) * math.exp(-0.5 * z * z)
+          }
+          val tot = math.max(dens.sum, 1e-300)
+          for (j <- 0 until m) {
+            val r = dens(j) / tot
+            acc(3 * j) += r; acc(3 * j + 1) += r * v; acc(3 * j + 2) += r * v * v
+          }
+          ll += math.log(tot)
+        }
+        mu = Array.tabulate(m)(j => acc(3 * j + 1) / acc(3 * j))
+        sg = Array.tabulate(m)(j =>
+          math.sqrt(math.max(acc(3 * j + 2) / acc(3 * j) - mu(j) * mu(j), 0.0) + 1e-6))
+        w = Array.tabulate(m)(j => acc(3 * j) / xs.length)
+      }
+      g.iterations shouldBe iters
+      for (j <- 0 until m) {
+        g.weights(j) shouldBe w(j) +- 1e-9
+        g.means(j) shouldBe mu(j) +- 1e-9
+        g.sigmas(j) shouldBe sg(j) +- 1e-9
+      }
+      g.logLikelihood shouldBe ll +- 1e-9 * math.abs(ll)
+      g.span shouldBe ((xs.reduce(math.min(_: Double, _: Double)), xs.reduce(math.max(_: Double, _: Double))))
+    } finally { data.unpersist(); () }
+  }
+
+  test("gmmFit dispatches on distinct values and its local leg caches nothing") {
+    val data = gridMixture(5000, 73L).cache()
+    try {
+      val distinct = data.distinct().count()
+      distinct should be < 5000L
+      def fit(threshold: Long) = GaussianHmm.gmmFit(data, 2, maxIter = 8, tol = 0.0,
+        localThreshold = threshold)
+      val persisted = sc.getPersistentRDDs.keySet
+      var byDistinct, loc, dist: GaussianHmm.GmmModel = null
+      // more rows than the threshold, as many distinct values: local
+      val jobsByDistinct = jobsLaunchedBy { byDistinct = fit(distinct) }
+      sc.getPersistentRDDs.keySet shouldBe persisted
+      val jobsLocal = jobsLaunchedBy { loc = fit(Long.MaxValue) }
+      val jobsDist = jobsLaunchedBy { dist = fit(distinct - 1) }
+      jobsByDistinct shouldBe jobsLocal
+      jobsDist should be > jobsLocal
+      def flat(g: GaussianHmm.GmmModel) = (g.weights ++ g.means ++ g.sigmas).toSeq
+      flat(byDistinct) shouldBe flat(loc)
+      flat(loc).zip(flat(dist)).foreach { case (p, q) => p shouldBe q +- 1e-7 }
+      loc.span shouldBe dist.span
+    } finally { data.unpersist(); () }
+  }
+
+  test("gmmFit without non-null values raises the named non-empty precondition") {
+    import spark.implicits._
+    val nulls = Seq((0L, 0L, Option.empty[Double]), (0L, 1L, None)).toDF("traj_id", "t", "value")
+    val persisted = sc.getPersistentRDDs.keySet
+    for (df <- Seq(nulls, nulls.limit(0))) {
+      val e = intercept[IllegalArgumentException](GaussianHmm.gmmFit(df, 2))
+      e.getMessage should include("GaussianHmm.gmmFit")
+      e.getMessage should include("non-empty")
+    }
+    sc.getPersistentRDDs.keySet shouldBe persisted
+  }
+
+  test("the GMM init without any consecutive non-null pair raises the named precondition") {
+    import spark.implicits._
+    // every trajectory has length 1: the GMM fits, but no transition exists
+    val single = (0 until 20).map(i => (i.toLong, 0L, if (i % 2 == 0) -1.0 + 0.01 * i else 2.0))
+      .toDF("traj_id", "t", "value")
+    val e = intercept[IllegalArgumentException](GaussianHmm.initialGuessGmm(single, 2, "value"))
+    e.getMessage should include("GaussianHmm.initialGuessGmm")
+    e.getMessage should include("non-empty")
+  }
+
+  test("the fractional-count kernel equals the window + column aggregation it " +
+    "replaced to 1e-12, in tagged jobs") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val rng = new java.util.SplittableRandom(97L)
+    def obs() = if (rng.nextDouble() < 0.12) None
+                else Some(if (rng.nextDouble() < 0.5) -1.0 + 0.4 * rng.nextGaussian()
+                          else 1.5 + 0.5 * rng.nextGaussian())
+    val rows =
+      (0 until 6).flatMap(id => (0 until 40 + 17 * id).map(t => (Option(id.toLong), t.toLong, obs()))) ++
+        Seq((Some(6L), 0L, Some(0.3)),                                  // length 1
+          (Some(7L), 0L, None), (Some(7L), 1L, None), (Some(7L), 2L, None), // all null
+          (Some(8L), 0L, Some(-1.0)), (Some(8L), 1L, Some(1e6)),          // outlier row
+          (Some(8L), 2L, Some(1.2))) ++
+        (0 until 5).map(t => (Option.empty[Long], t.toLong, obs()))      // null traj_id
+    val df = new scala.util.Random(5L).shuffle(rows).toDF("traj_id", "t", "value")
+      .repartition(3)
+    val gmm = GaussianHmm.GmmModel(Array(0.5, 0.5), Array(-1.0, 1.5), Array(0.4, 0.5),
+      0.0, 0, (-2.0, 3.0))
+    val m = 2
+    var kernel: DenseMatrix[Double] = null
+    val descs = jobDescriptionsLaunchedBy {
+      kernel = GaussianHmm.fractionalCounts(df, "value", gmm)
+    }
+    descs should not be empty
+    descs.toSet shouldBe Set("GaussianHmm GMM-init pair counts (m=2)")
+    // the body it replaced: lead() over the trajectory window, then one
+    // m²-column aggregation of normalized density products
+    def stateProbs(v: org.apache.spark.sql.Column) = {
+      val dens = (0 until m).map { j =>
+        val z = (v - lit(gmm.means(j))) / lit(gmm.sigmas(j))
+        lit(1.0 / math.sqrt(2.0 * math.Pi) / gmm.sigmas(j)) * exp(lit(-0.5) * z * z)
+      }
+      val tot = dens.reduce(_ + _)
+      dens.map(d => when(tot < 1e-300, lit(1.0 / m)).otherwise(d / tot))
+    }
+    val pairs = df.selectExpr("traj_id", "t", "CAST(value AS DOUBLE) AS v")
+      .withColumn("vn", lead(col("v"), 1).over(Window.partitionBy("traj_id").orderBy("t")))
+      .where(col("vn").isNotNull)
+    val (p, q) = (stateProbs(col("v")), stateProbs(col("vn")))
+    val aggs = for (i <- 0 until m; j <- 0 until m) yield sum(p(i) * q(j))
+    val row = pairs.agg(aggs.head, aggs.tail: _*).collect()(0)
+    for (i <- 0 until m; j <- 0 until m) {
+      val ref = row.getDouble(i * m + j)
+      ref should be > 0.0
+      kernel(i, j) shouldBe ref +- 1e-12 * math.max(1.0, ref)
+    }
+  }
 }
