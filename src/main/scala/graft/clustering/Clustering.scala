@@ -33,6 +33,8 @@ object BoxDiscretization {
     val aggs = (0 until d).flatMap(i =>
       Seq(min(col(featCol).getItem(i)).as(s"mn$i"), max(col(featCol).getItem(i)).as(s"mx$i")))
     val r = traj.agg(aggs.head, aggs.tail: _*).collect()(0)
+    if (r.isNullAt(0)) throw new IllegalArgumentException(
+      s"BoxDiscretization.fit: requires a non-empty feature frame (no $featCol values)")
     val v0 = Array.tabulate(d)(i => r.getDouble(2 * i))
     val v1 = Array.tabulate(d)(i => r.getDouble(2 * i + 1))
     BoxModel(v0, v1, nBins)
@@ -100,12 +102,17 @@ case class ClusterModel(centers: Array[Array[Double]]) {
     traj.withColumn("state", assignColumn(col(featCol), metric))
 }
 
-/** Standalone k-means++ seeding (reference clustering/_kmeans.py exports
-  * `kmeans_plusplus`; MLlib's fit path uses k-means|| internally — this is
-  * the composable initializer for custom loops). D^2-weighted selection
-  * runs on the driver over a deterministic hash-sampled row cap: seeding
+/** The one k-means++ seeder (reference clustering/_kmeans.py exports
+  * `kmeans_plusplus`): greedy D^2-weighted selection on the driver, the
+  * variant sklearn's `kmeans_plusplus` uses — each step draws 2 + ln(k)
+  * candidates by D^2 and keeps the one that lowers the summed D^2 most,
+  * so a step rarely lands a second seed in an already covered cluster
+  * (ScaleAudit cluster100 failed with one draw per step). [[seed]]
+  * draws its rows from a deterministic hash-sampled row cap: seeding
   * quality needs a representative sample, not the corpus, so the 100 TB
-  * contract is the same row-capped landmark rule as the kernel methods. */
+  * contract is the same row-capped landmark rule as the kernel methods.
+  * [[seedRows]] is the same selection over rows the caller already holds
+  * (the PQ sub-codebooks). */
 object KMeansPlusPlus {
   def seed(traj: DataFrame, k: Int, seedVal: Long = 42L,
            maxSampleRows: Long = 65536L, featCol: String = FeatCol): Array[Array[Double]] = {
@@ -115,12 +122,20 @@ object KMeansPlusPlus {
       .collect().map(_.getSeq[Double](0).toArray)
     if (rows.isEmpty) throw new IllegalArgumentException(
       s"KMeansPlusPlus.seed: requires a non-empty feature frame (no $featCol rows)")
+    seedRows(rows, k, seedVal)
+  }
+
+  /** Up to `k` seeds drawn from the non-empty `rows`, in the order given.
+    * Fewer than `k` come back when the rows hold fewer distinct points. */
+  def seedRows(rows: Array[Array[Double]], k: Int, seedVal: Long): Array[Array[Double]] = {
+    require(k > 0, "k must be positive")
     val rnd = new java.util.Random(seedVal)
     def d2(a: Array[Double], b: Array[Double]): Double = {
       var s = 0.0; var i = 0
       while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
       s
     }
+    val trials = 2 + math.log(k).toInt
     val centers = scala.collection.mutable.ArrayBuffer(rows(rnd.nextInt(rows.length)))
     val minD2 = rows.map(d2(_, centers(0)))
     var exhausted = false
@@ -132,34 +147,33 @@ object KMeansPlusPlus {
         // count (mirrors the reference, which cannot pick a zero-D^2 point)
         exhausted = true
       } else {
-        var r = rnd.nextDouble() * total
-        var i = 0
-        while (i < rows.length - 1 && r >= minD2(i)) { r -= minD2(i); i += 1 }
-        val c = rows(i)
-        centers += c
-        var j = 0
-        while (j < rows.length) { minD2(j) = math.min(minD2(j), d2(rows(j), c)); j += 1 }
+        // greedy step: keep the candidate that lowers the summed D^2 most
+        var best: Array[Double] = null
+        var bestD2: Array[Double] = null
+        var bestSum = Double.PositiveInfinity
+        var t = 0
+        while (t < trials) {
+          var r = rnd.nextDouble() * total
+          var i = 0
+          while (i < rows.length - 1 && r >= minD2(i)) { r -= minD2(i); i += 1 }
+          val c = rows(i)
+          val next = Array.tabulate(rows.length)(j => math.min(minD2(j), d2(rows(j), c)))
+          val sum = next.sum
+          if (sum < bestSum) { best = c; bestD2 = next; bestSum = sum }
+          t += 1
+        }
+        centers += best
+        System.arraycopy(bestD2, 0, minD2, 0, rows.length)
       }
     }
     centers.toArray
   }
 }
 
-/** Lloyd k-means on the canonical trajectory frame via Spark MLlib
-  * (reference clustering/_kmeans.py; MLlib = broadcast centers +
-  * treeAggregate partial sums, the exact distributed shape SURVEY §2.7
-  * prescribes). Deterministic via fixed seed. */
+/** The 1-d k-means fits: the exact histogram Lloyd of the quantized
+  * 1-d measurements (reference clustering/_kmeans.py), with
+  * [[LloydKMeans]] above its distinct-value cap. */
 object KMeans {
-  def fit(traj: DataFrame, k: Int, maxIter: Int = 50, seed: Long = 42L,
-          featCol: String = FeatCol, tol: Double = 1e-4): ClusterModel = {
-    import org.apache.spark.ml.functions.array_to_vector
-    val df = traj.select(array_to_vector(col(featCol).cast("array<double>")).as("fv"))
-    val km = new org.apache.spark.ml.clustering.KMeans()
-      .setK(k).setMaxIter(maxIter).setSeed(seed).setFeaturesCol("fv").setTol(tol)
-    val model = km.fit(df)
-    ClusterModel(model.clusterCenters.map(_.toArray))
-  }
-
   /** Exact Lloyd fixed point for 1-d features via distinct-value
     * pre-aggregation (reference clustering/_kmeans.py Lloyd loop; the
     * histogram trick is the standard low-dimensional scale path — BIRCH /
@@ -171,23 +185,24 @@ object KMeans {
     * point reached is exactly the full-data fixed point, at driver cost
     * instead of one full scan per iteration. At 100 TB a quantized 1-d
     * measurement has bounded distinct values; above `maxDistinct` of them
-    * the fit falls back to the general MLlib path. */
+    * the fit is [[LloydKMeans.fit]] with the same `k`, `seed` and
+    * `maxIter`, to [[LargeTol]]. */
   def fit1dExact(traj: DataFrame, k: Int, seed: Long = 42L,
                  maxIter: Int = 500, maxDistinct: Int = 1 << 20,
                  featCol: String = FeatCol): ClusterModel = {
     val hist = valueHistogram(traj, maxDistinct, featCol)
-    if (hist.length > maxDistinct) fit1dLarge(traj, k, seed, featCol)
+    if (hist.length > maxDistinct)
+      LloydKMeans.fit(traj, k, maxIter = maxIter, tol = LargeTol, seed = seed, featCol = featCol)
     else {
       requireValues(hist, "KMeans.fit1dExact", s"feature frame (no $featCol rows)")
       fitHistogram(hist, k, seed, maxIter)
     }
   }
 
-  /** The 1-d fit above [[fit1dExact]]'s distinct-value cap: MLlib k-means
-    * run to a tight tolerance. */
-  private[graft] def fit1dLarge(traj: DataFrame, k: Int, seed: Long,
-                                featCol: String): ClusterModel =
-    fit(traj, k, maxIter = 50, seed = seed, featCol = featCol, tol = 1e-9)
+  /** The center-movement tolerance of a 1-d fit above the distinct-value
+    * cap: tight, since the histogram fit below the cap runs to the exact
+    * fixed point. */
+  private[graft] val LargeTol = 1e-9
 
   /** The (value, count) histogram of the first feature, in the order the
     * aggregation returns it (that order seeds [[fitHistogram]]'s
@@ -272,13 +287,15 @@ object KMeans {
   }
 }
 
-/** Custom-metric full Lloyd k-means — completes parity with the reference's
-  * metric-pluggable loop (clustering/_kmeans.py:148-473 + metric.h registry:
-  * the metric drives ASSIGNMENT; the center update is the arithmetic mean of
-  * assigned points, exactly as kmeans_bits.h's cluster_loop). Distributed
-  * shape per SURVEY §2.7: broadcast centers, per-partition partial
-  * (sum, count) accumulators, a single reduce per iteration — the data is
-  * never shuffled and nothing but k*(d+1) doubles crosses the network. */
+/** The one Lloyd k-means: k-means++ seeding ([[KMeansPlusPlus]]) and a
+  * metric-pluggable Lloyd loop (reference clustering/_kmeans.py:148-473 +
+  * metric.h registry: the metric drives ASSIGNMENT; the center update is
+  * the arithmetic mean of assigned points, exactly as kmeans_bits.h's
+  * cluster_loop). Every k-means of the engine fits through it, except
+  * the weighted 1-d [[KMeans.fitHistogram]]. Distributed shape per SURVEY
+  * §2.7: centers in the task closure, per-partition partial (sum, count)
+  * accumulators, a single reduce per iteration — the data is never
+  * shuffled and nothing but k*(d+1) doubles crosses the network. */
 object LloydKMeans {
 
   /** The [[graft.util.Transport]] threshold of the Lloyd loop, in VALUES
@@ -291,7 +308,7 @@ object LloydKMeans {
   /** Rows per local-leg chunk of the k-means transports: fixed, so the
     * chunked merge is the same for any core count; arrays of at most one
     * chunk take the single sequential pass. */
-  private[clustering] val LocalChunkRows = 32768
+  private[graft] val LocalChunkRows = 32768
 
   /** Per-center (sums, counts) merge of [[iterStats]] partials. */
   private[clustering] def mergeSums(a: (Array[Array[Double]], Array[Long]),
@@ -324,6 +341,20 @@ object LloydKMeans {
     (sums, counts)
   }
 
+  /** A row's weight in values. A NaN or infinite value is rejected here,
+    * in the sizing pass, because one such row would turn its center, and
+    * from there every assignment, into NaN. */
+  private def finiteLength(x: Array[Double]): Long = {
+    var i = 0
+    while (i < x.length) {
+      if (!java.lang.Double.isFinite(x(i)))
+        throw new IllegalArgumentException(
+          "LloydKMeans.fit: requires finite feature values (got NaN or Infinity)")
+      i += 1
+    }
+    x.length.toLong
+  }
+
   def fit(traj: DataFrame, k: Int, metric: Metric = EuclideanMetric,
           maxIter: Int = 50, tol: Double = 1e-6, seed: Long = 42L,
           featCol: String = FeatCol,
@@ -343,28 +374,37 @@ object LloydKMeans {
     try {
       // the sizing job fills the cache, so the seeder below reads cached
       // partitions
-      val transport = graft.util.Transport(data, localThreshold, LocalChunkRows)(_.length.toLong)
+      val transport = graft.util.Transport(data, localThreshold, LocalChunkRows)(finiteLength)
         .requireNonEmpty("LloydKMeans.fit", s"feature frame (no $featCol values)")
       // seeding is shared by both legs; callers that run fit twice with
       // identical seeding (the q267 parity gate) pass the seed once via
       // `init`
-      var centers = init.getOrElse(
+      val centers = init.getOrElse(
         KMeansPlusPlus.seed(data.toDF(featCol), k, seed, featCol = featCol))
-      val m = metric
-      var iter = 0
-      var moved = Double.MaxValue
-      while (iter < maxIter && moved > tol) {
-        val cs = centers
-        val (sums, counts) = transport.sweep(s"LloydKMeans iteration $iter")(
-          iterStats(_, cs, m))(mergeSums)
-        val next = centers.indices.map { j =>
-          if (counts(j) > 0) sums(j).map(_ / counts(j)) else centers(j)
-        }.toArray
-        moved = centers.indices.map(j => m.dist(centers(j), next(j))).max
-        centers = next
-        iter += 1
-      }
-      ClusterModel(centers)
+      ClusterModel(iterate(transport, centers, metric, maxIter, tol))
     } finally data.unpersist()
+  }
+
+  /** The Lloyd loop from `init` over `transport`: at most `maxIter`
+    * sweeps, until no center moves by more than `tol` under `metric`. A
+    * center that no row picks stays where it is. */
+  def iterate(transport: graft.util.Transport[Array[Double]], init: Array[Array[Double]],
+              metric: Metric = EuclideanMetric, maxIter: Int = 50,
+              tol: Double = 1e-6): Array[Array[Double]] = {
+    var centers = init
+    var iter = 0
+    var moved = Double.MaxValue
+    while (iter < maxIter && moved > tol) {
+      val cs = centers
+      val (sums, counts) = transport.sweep(s"LloydKMeans iteration $iter")(
+        iterStats(_, cs, metric))(mergeSums)
+      val next = centers.indices.map { j =>
+        if (counts(j) > 0) sums(j).map(_ / counts(j)) else centers(j)
+      }.toArray
+      moved = centers.indices.map(j => metric.dist(centers(j), next(j))).max
+      centers = next
+      iter += 1
+    }
+    centers
   }
 }

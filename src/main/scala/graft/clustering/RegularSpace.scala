@@ -210,11 +210,11 @@ object MiniBatchKMeans {
       val transport = graft.util.Transport(data, localThreshold,
         LloydKMeans.LocalChunkRows)(_.length.toLong)
         .requireNonEmpty("MiniBatchKMeans.fit", s"feature frame (no $featCol values)")
-      // init: k-means|| on one batch (reference init_strategy kmeans++) —
-      // shared by both legs (a handful of jobs on the sampled frame);
+      // init: a short Lloyd fit, k-means++ seeded, on one batch-sized
+      // sample (reference init_strategy kmeans++) — shared by both legs;
       // callers that run fit twice with identical seeding (the q266 parity
       // gate) pass the seed once via `init`
-      var centers = init.getOrElse(KMeans.fit(
+      var centers = init.getOrElse(LloydKMeans.fit(
         data.sample(withReplacement = false, math.min(1.0, batchFraction), seed)
           .select(col("x").as(featCol)), k, maxIter = 5, seed = seed,
         featCol = featCol).centers)

@@ -178,8 +178,9 @@ object GaussianHmm {
                       sigmas: Array[Double], logLikelihood: Double,
                       iterations: Int, span: (Double, Double))
 
-  /** Distinct values above which [[gmmFit]] seeds through MLlib k-means
-    * rather than the exact histogram Lloyd (`KMeans.fit1dExact`'s cap). */
+  /** Distinct values above which [[gmmFit]] seeds through
+    * `LloydKMeans.fit` over the values rather than the exact histogram
+    * Lloyd (`KMeans.fit1dExact`'s cap). */
   private val MaxSeedDistinct = 1 << 20
 
   private val invSqrt2Pi = 1.0 / math.sqrt(2.0 * math.Pi)
@@ -291,7 +292,8 @@ object GaussianHmm {
     }
     try {
       val centers = (if (hist.length <= MaxSeedDistinct) KMeans.fitHistogram(hist, m, seed)
-        else KMeans.fit1dLarge(feats, m, seed, "features")).centers.map(_(0))
+        else graft.clustering.LloydKMeans.fit(feats, m, maxIter = 50, tol = KMeans.LargeTol,
+          seed = seed, featCol = "features")).centers.map(_(0))
       val mc = centers.length // < m only when the data has < m distinct values
       val seedSums = rdd match {
         case Some(data) =>

@@ -151,7 +151,7 @@ private[graft] object CoreQueries extends QueryFamily {
       val serResid = Seq(diff(vs.u, vamp.u), diff(vs.singularValues,
         vamp.singularValues)).max
       // ClusterModel JSON roundtrip (k-means on the embeddings)
-      val km = graft.clustering.KMeans.fit(
+      val km = graft.clustering.LloydKMeans.fit(
         Trajectories.table(s, dir, "embeddings")
           .select(col("embedding").cast("array<double>").as(Trajectories.FeatCol)),
         k = 4, maxIter = 3, seed = 11L)

@@ -83,8 +83,8 @@ private[graft] object DecompositionQueries extends QueryFamily {
     // own-center distance equals its minimum center distance — both checked
     // over the FULL data with our codegen argmin assignment. The fit is the
     // distinct-value-histogram exact Lloyd (fit1dExact): one aggregation
-    // scan replaces the r04 shape's ~200 sequential MLlib jobs (the 2.31x
-    // bench-cap violation), and because every row equals its value the
+    // scan replaces ~200 sequential per-iteration jobs (the r04 shape's
+    // 2.31x bench-cap violation), and because every row equals its value the
     // histogram fixed point IS the full-data fixed point — the oracle
     // contract is unchanged and tighter. The row count has an exact SQL
     // twin.
@@ -227,10 +227,9 @@ private[graft] object DecompositionQueries extends QueryFamily {
     "q266_minibatch_dist_transport" -> ((s, dir) => {
       val traj = Trajectories.fromEvents(s, dir)
       // ONE shared seed for both transports: the parity contract requires
-      // identical inits, which the old shape achieved by running the same
-      // MLlib seeding fit twice — computing it once makes the identity
-      // hold by construction and halves the setup jobs
-      val init = graft.clustering.KMeans.fit(
+      // identical inits, so the seeding fit runs once and both runs take
+      // its centers — the identity holds by construction
+      val init = graft.clustering.LloydKMeans.fit(
         traj.select(col(Trajectories.FeatCol).cast("array<double>")
             .as(Trajectories.FeatCol))
           .sample(withReplacement = false, 0.2, 42L),

@@ -179,7 +179,7 @@ private[graft] object SimilarityQueries extends QueryFamily {
     }),
 
     // ---- IVF ANN -------------------------------------------------------
-    // The MLlib-seeded codebook isn't SQL-reproducible, so the oracle
+    // The k-means codebook isn't SQL-reproducible, so the oracle
     // gates the CONTRACT instead: recall@5 vs the in-query brute force
     // (>= 0.9, the VERDICT r02 bar), exactly 5 results per query, and the
     // query count (exact SQL twin). A recall drop — from codebook drift,
@@ -240,7 +240,7 @@ private[graft] object SimilarityQueries extends QueryFamily {
 
     // ---- D4-style prototypicality pruning (q171): after SemDeDup (q99),
     // the second D4 leg — drop the most-prototypical 25% of every k-means
-    // cell (cosine-to-own-centroid rank). The MLlib codebook isn't
+    // cell (cosine-to-own-centroid rank). The k-means codebook isn't
     // SQL-reproducible, so the oracle gates the CONTRACT: per-cell drop
     // counts match ceil(0.25*|cell|) exactly, no kept vector outranks a
     // dropped one within its cell (beyond fp epsilon), and the total

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * shuffle, no all-pairs). The scale path is LSH bucketing via seeded
   * sign (Rademacher +-1) hyperplanes, which turns top-k into a
   * bucket-local problem; at 100 TB add IVF (k-means coarse quantizer from
-  * graft.clustering.KMeans) so each query probes a few cells.
+  * graft.clustering.LloydKMeans) so each query probes a few cells.
   *
   * LSH candidate generation is deliberately id-only: the bucket join
   * shuffles (tbl, bucket, id) rows, candidates dedup on ids, and vectors
@@ -208,10 +208,10 @@ object Similarity {
     val trainDf = corpus.sample(withReplacement = false, frac, seed)
       .select(unit(col(vecCol)).as(graft.core.Trajectories.FeatCol))
     // a COARSE quantizer only needs rough Voronoi cells — recall is set by
-    // the probe fraction, not codebook polish; maxIter=20 (the r04 value)
-    // spent ~25 sequential MLlib jobs converging cells that nProbe/nCells
-    // smooths over anyway (recall unchanged at 6/8 probes, IvfSpec)
-    val codebook = graft.clustering.KMeans.fit(trainDf, nCells, maxIter = 6, seed = seed)
+    // the probe fraction, not codebook polish, so 6 Lloyd iterations
+    // suffice (the training sample sits under the Lloyd transport's
+    // threshold, so they run on the driver with no job each)
+    val codebook = graft.clustering.LloydKMeans.fit(trainDf, nCells, maxIter = 6, seed = seed)
     // corpus side: each row to its single nearest cell
     val corpusCells = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("cv"), codebook.assignColumn(unit(col(vecCol))).as("cell"))
@@ -335,7 +335,7 @@ object Similarity {
     val frac = if (n <= cap) 1.0 else cap.toDouble / n
     val trainDf = corpus.sample(withReplacement = false, frac, seed)
       .select(unit(col(vecCol)).as(graft.core.Trajectories.FeatCol))
-    val codebook = graft.clustering.KMeans.fit(trainDf, k, maxIter = maxIter, seed = seed)
+    val codebook = graft.clustering.LloydKMeans.fit(trainDf, k, maxIter = maxIter, seed = seed)
     // The intra-cell pairwise sweep runs on int8-QUANTIZED vectors with
     // the certified residual bound (quantResidualRel): both self-join
     // legs ship (id, tinyint[d], rho) through the cell exchange — 1/8th
@@ -374,9 +374,9 @@ object Similarity {
     // check and could certify sure=true without the float64 re-check)
     // rather than leaning on Spark's NaN-ordering semantics; non-finite
     // band values route to the exact re-check. (Non-finite INPUT vectors
-    // are additionally rejected loudly upstream by the k-means
-    // summarizer — this guard is defense in depth for cell providers
-    // that bypass clustering; QuantBoundSpec pins both layers.)
+    // are additionally rejected loudly upstream by LloydKMeans.fit's
+    // finite-value check — this guard is defense in depth for cell
+    // providers that bypass clustering; QuantBoundSpec pins both layers.)
     def nonFinite(c: org.apache.spark.sql.Column) =
       isnan(c) || abs(c) > lit(Double.MaxValue)
     val qcosBad = nonFinite(col("qcos")) || nonFinite(col("m"))
@@ -418,7 +418,7 @@ object Similarity {
     val frac = if (n <= cap) 1.0 else cap.toDouble / n
     val trainDf = corpus.sample(withReplacement = false, frac, seed)
       .select(unit(col(vecCol)).as(graft.core.Trajectories.FeatCol))
-    val codebook = graft.clustering.KMeans.fit(trainDf, nCells, maxIter = 6, seed = seed)
+    val codebook = graft.clustering.LloydKMeans.fit(trainDf, nCells, maxIter = 6, seed = seed)
     // fine quantizer (global PQ on unit vectors)
     val pq = pqTrain(corpus, dim, m, ksub, seed + 1, idCol, vecCol)
     val encodeU = udf { (v: Seq[Double]) => pq.encode(v.toArray) }
@@ -462,7 +462,8 @@ object Similarity {
     * the templated/boilerplate mass; the diverse tail is what a training
     * mix wants.
     *
-    * Scale shape: quantizer fit on a row-capped sample (one MLlib fit);
+    * Scale shape: quantizer fit on a row-capped sample (one
+    * `LloydKMeans.fit`, driver-local at sample sizes);
     * assignment + centroid cosine are one codegen map pass against the
     * BROADCAST centroid table; the only corpus shuffle is the per-cell
     * rank window, keyed by cell. Per-cell drop count is
@@ -485,7 +486,7 @@ object Similarity {
     val frac = if (n <= cap) 1.0 else cap.toDouble / n
     val trainDf = corpus.sample(withReplacement = false, frac, seed)
       .select(unit(col(vecCol)).as(graft.core.Trajectories.FeatCol))
-    val codebook = graft.clustering.KMeans.fit(trainDf, k, maxIter = maxIter, seed = seed)
+    val codebook = graft.clustering.LloydKMeans.fit(trainDf, k, maxIter = maxIter, seed = seed)
     val centersDf = broadcast(corpus.sparkSession.createDataFrame(
       codebook.centers.toIndexedSeq.zipWithIndex
         .map { case (c, i) => (i, c.toSeq) })
@@ -504,10 +505,12 @@ object Similarity {
       .select(col(idCol), col("cell"), col("proto"), col("keep"))
   }
 
-  /** Product-quantization model: `m` subspaces of `dsub` dims each, `ksub`
-    * centroids per subspace. `codebooks(j)(t)` is centroid t of subspace j.
-    * Codes compress a d-float vector to m small ints — at 100 TB the
-    * difference between scanning 256 bytes/vector and m bytes/vector. */
+  /** Product-quantization model: `m` subspaces of `dsub` dims each, at
+    * most `ksub` centroids per subspace (fewer where the training sample
+    * has fewer distinct sub-vectors). `codebooks(j)(t)` is centroid t of
+    * subspace j. Codes compress a d-float vector to m small ints — at
+    * 100 TB the difference between scanning 256 bytes/vector and m
+    * bytes/vector. */
   case class PqModel(m: Int, ksub: Int, dsub: Int,
                      codebooks: Array[Array[Array[Double]]]) {
     /** PQ codes of a unit-normalized vector (nearest centroid per subspace,
@@ -519,7 +522,7 @@ object Similarity {
         val cb = codebooks(j)
         var best = 0; var bestD = Double.MaxValue
         var t = 0
-        while (t < ksub) {
+        while (t < cb.length) {
           var d2 = 0.0; var i = 0
           while (i < dsub) {
             val d = v(j * dsub + i) - cb(t)(i); d2 += d * d; i += 1
@@ -534,13 +537,14 @@ object Similarity {
     }
     /** Flattened [m][ksub] ADC lookup table for a unit-normalized query:
       * lut(j*ksub + t) = dot(q_j, c_{j,t}), so Σ_j lut[j*ksub+codes[j]]
-      * approximates dot(q, x). */
+      * approximates dot(q, x). Slots past a short codebook stay 0; no
+      * code points at them. */
     def lut(q: Array[Double]): Array[Double] = {
       val out = new Array[Double](m * ksub)
       var j = 0
       while (j < m) {
         var t = 0
-        while (t < ksub) {
+        while (t < codebooks(j).length) {
           var s = 0.0; var i = 0
           while (i < dsub) { s += q(j * dsub + i) * codebooks(j)(t)(i); i += 1 }
           out(j * ksub + t) = s
@@ -552,78 +556,19 @@ object Similarity {
     }
   }
 
-  /** Seeded local Lloyd on a driver-side sample (k-means++ init). The
-    * sample is BOUNDED (caller caps rows independent of corpus size) and
-    * sorted by id before use, so training is deterministic for a given
-    * (input, seed) at any parallelism. */
-  private def localLloyd(points: Array[Array[Double]], k: Int, seed: Long,
-                         iters: Int = 12): Array[Array[Double]] = {
-    val d = points(0).length
-    val rnd = new java.util.Random(seed)
-    def dist2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < d) { val x = a(i) - b(i); s += x * x; i += 1 }
-      s
-    }
-    // k-means++ seeding
-    val centers = scala.collection.mutable.ArrayBuffer(points(rnd.nextInt(points.length)).clone())
-    val minD = points.map(p => dist2(p, centers(0)))
-    while (centers.length < k) {
-      val tot = minD.sum
-      val pick =
-        if (tot <= 0) points(rnd.nextInt(points.length))
-        else {
-          var r = rnd.nextDouble() * tot
-          var i = 0
-          while (i < points.length - 1 && r > minD(i)) { r -= minD(i); i += 1 }
-          points(i)
-        }
-      centers += pick.clone()
-      var i = 0
-      while (i < points.length) {
-        val dd = dist2(points(i), pick)
-        if (dd < minD(i)) minD(i) = dd
-        i += 1
-      }
-    }
-    val cs = centers.toArray
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(k)(new Array[Double](d))
-      val counts = new Array[Int](k)
-      var i = 0
-      while (i < points.length) {
-        var best = 0; var bd = Double.MaxValue
-        var t = 0
-        while (t < k) { val dd = dist2(points(i), cs(t)); if (dd < bd) { bd = dd; best = t }; t += 1 }
-        counts(best) += 1
-        var j = 0
-        while (j < d) { sums(best)(j) += points(i)(j); j += 1 }
-        i += 1
-      }
-      var t = 0
-      while (t < k) {
-        if (counts(t) > 0) {
-          var j = 0
-          while (j < d) { cs(t)(j) = sums(t)(j) / counts(t); j += 1 }
-        }
-        t += 1
-      }
-      it += 1
-    }
-    cs
-  }
-
   /** Train a PQ model on a seeded row-capped sample (deeptime has no ANN
     * surface; this is the training-data-pipeline extension, after Jégou
     * et al. 2011, "Product quantization for nearest neighbor search").
     * The cap is in ROWS (not a corpus fraction — see ivfTopK): the
     * collected sample is ≤ cap × d doubles on the driver at any corpus
-    * size, and the m sub-trainings run driver-side on that bounded sample
-    * (m tiny Lloyd runs beat m distributed MLlib fits by ~25 jobs each). */
+    * size, sorted by id so training is deterministic for a given (input,
+    * seed) at any parallelism. Each subspace is seeded by
+    * `KMeansPlusPlus.seedRows` and fitted by the `LloydKMeans.iterate`
+    * loop over the sample in hand, with no Spark job per subspace. */
   def pqTrain(corpus: DataFrame, dim: Int, m: Int = 8, ksub: Int = 16,
               seed: Long = 42L, idCol: String = "vec_id",
               vecCol: String = "embedding", maxTrainRows: Long = 0L): PqModel = {
+    import graft.clustering.{KMeansPlusPlus, LloydKMeans}
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val dsub = dim / m
     val cap = if (maxTrainRows > 0) maxTrainRows else math.max(256L * ksub, 16384L)
@@ -635,9 +580,14 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
+    if (sample.isEmpty) throw new IllegalArgumentException(
+      s"Similarity.pqTrain: requires a non-empty corpus (no $vecCol rows)")
     val codebooks = Array.tabulate(m) { j =>
       val sub = sample.map(_.slice(j * dsub, (j + 1) * dsub))
-      localLloyd(sub, ksub, seed + j)
+      LloydKMeans.iterate(
+        graft.util.Transport.local(
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(sub), LloydKMeans.LocalChunkRows),
+        KMeansPlusPlus.seedRows(sub, ksub, seed + j), maxIter = 12)
     }
     PqModel(m, ksub, dsub, codebooks)
   }

@@ -1908,7 +1908,7 @@ object ScaleAudit {
     val train = graft.util.Sampling.rowCap(pts, seed = 7L,
         knownCount = Some(n))
       .select("features")
-    val model = graft.clustering.KMeans.fit(train, k, maxIter = 20, seed = 42L)
+    val model = graft.clustering.LloydKMeans.fit(train, k, maxIter = 20, seed = 42L)
     val secFit = (System.nanoTime() - t0) / 1e9
     def d2(a: Array[Double], b: Array[Double]): Double =
       math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)

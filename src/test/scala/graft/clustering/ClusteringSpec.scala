@@ -220,6 +220,41 @@ class ClusteringSpec extends SparkSpec with Matchers {
     } finally { df.unpersist(); () }
   }
 
+  test("fit1dExact above maxDistinct is LloydKMeans.fit, to the bit, and recovers the planted centers") {
+    import spark.implicits._
+    val rng = new java.util.SplittableRandom(31L)
+    val planted = Array(-4.0, 1.0, 6.0)
+    // every value distinct, far more of them than maxDistinct
+    val df = (0 until 3000).map(i => Seq(planted(i % 3) + 0.2 * rng.nextGaussian()))
+      .toDF("features").repartition(3).cache()
+    try {
+      KMeans.valueHistogram(df, 64).length should be > 64
+      for (seed <- Seq(7L, 42L)) withClue(s"seed=$seed: ") {
+        val viaFallback = KMeans.fit1dExact(df, 3, seed = seed, maxIter = 40, maxDistinct = 64)
+        val direct = LloydKMeans.fit(df, 3, maxIter = 40, tol = KMeans.LargeTol, seed = seed)
+        viaFallback.centers.map(_.toSeq).toSeq shouldBe direct.centers.map(_.toSeq).toSeq
+        val got = viaFallback.centers.map(_(0)).sorted
+        got.length shouldBe 3
+        got.zip(planted).foreach { case (g, p) => g shouldBe p +- 0.05 }
+      }
+    } finally { df.unpersist(); () }
+  }
+
+  test("LloydKMeans.fit rejects a NaN or infinite feature value, naming the operator") {
+    import spark.implicits._
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity); threshold <- Seq(0L, Long.MaxValue)) {
+      val df = (Seq(Seq(bad, 0.0)) ++ (0 until 20).map(i => Seq(i.toDouble, 1.0)))
+        .toDF("features").repartition(2)
+      val e = intercept[Exception](LloydKMeans.fit(df, 2, localThreshold = threshold))
+      def msgs(t: Throwable): Seq[String] =
+        Option(t.getMessage).toSeq ++ Option(t.getCause).toSeq.flatMap(msgs)
+      withClue(s"value=$bad threshold=$threshold: ") {
+        assert(msgs(e).exists(m => m.contains("LloydKMeans.fit") && m.contains("NaN or Infinity")),
+          e.getMessage)
+      }
+    }
+  }
+
   test("the 1-d and k-means fits raise a named non-empty precondition on an empty frame") {
     import spark.implicits._
     val empty = Seq.empty[Seq[Double]].toDF("features")

@@ -22,6 +22,26 @@ class KppSpec extends SparkSpec with Matchers {
     assignedBlobs.toSet shouldBe Set(0, 1, 2, 3) // one seed per blob
   }
 
+  test("greedy k-means++ covers planted clusters that single D^2 draws often miss") {
+    import spark.implicits._
+    // five unit-noise clusters on a line in 4-d (the ScaleAudit cluster100
+    // geometry): one D^2 draw per step lands a second seed in a covered
+    // cluster for about 3 in 10 seeds, the greedy step for about 1 in 100
+    val rnd = new scala.util.Random(1)
+    val k = 5
+    val rows = (0 until 1000).map { i =>
+      val c = i % k
+      (c, Seq(c * 10.0, c * 5.0, c * -3.0, c * 2.0).map(_ + rnd.nextGaussian()))
+    }
+    val traj = rows.map(_._2).toDF("features").cache()
+    def planted(x: Array[Double]): Int = math.rint(x(0) / 10.0).toInt.max(0).min(k - 1)
+    val misses = (1 to 50).count { seed =>
+      KMeansPlusPlus.seed(traj, k, seedVal = seed.toLong).map(planted).toSet.size < k
+    }
+    traj.unpersist()
+    misses should be <= 5
+  }
+
   test("k is capped by the number of available rows") {
     import spark.implicits._
     val traj = Seq((1L, 0L, Seq(1.0)), (1L, 1L, Seq(2.0))).toDF("traj_id", "t", "features")

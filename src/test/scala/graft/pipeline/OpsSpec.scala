@@ -39,6 +39,14 @@ class OpsSpec extends SparkSpec with Matchers {
     out.where(col("t") === 99).select("state").as[Int].head() shouldBe 9
   }
 
+  test("box discretization of an empty frame raises its named non-empty precondition") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long, Array[Double])].toDF("traj_id", "t", "features")
+    val e = intercept[IllegalArgumentException](BoxDiscretization.fit(empty, Array(4, 4)))
+    e.getMessage should include("BoxDiscretization.fit")
+    e.getMessage should include("non-empty")
+  }
+
   test("cluster assignment picks nearest center (codegen path)") {
     import spark.implicits._
     val m = ClusterModel(Array(Array(0.0, 0.0), Array(10.0, 10.0)))

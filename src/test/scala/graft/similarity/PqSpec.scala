@@ -109,6 +109,47 @@ class PqSpec extends SparkSpec with Matchers {
     run() shouldBe run()
   }
 
+  test("pqTrain on an empty corpus raises its named non-empty precondition") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](
+      Similarity.pqTrain(empty, dim = 8, m = 2, ksub = 4, seed = 2L))
+    e.getMessage should include("Similarity.pqTrain")
+    e.getMessage should include("non-empty")
+  }
+
+  test("subspaces with fewer than ksub distinct sub-vectors train, encode and rank") {
+    import spark.implicits._
+    // three distinct vectors repeated: every subspace has 3 distinct
+    // sub-vectors, far fewer than ksub
+    val patterns = Array(
+      Seq(1.0, 0.0, 0.0, 0.0, 1.0, 0.0, 0.0, 0.0),
+      Seq(0.0, 1.0, 0.0, 0.0, 0.0, 1.0, 0.0, 0.0),
+      Seq(0.0, 0.0, 1.0, 1.0, 0.0, 0.0, 1.0, 1.0))
+    val corpus = (0 until 60).map(i => (i.toLong, patterns(i % 3)))
+      .toDF("vec_id", "embedding").cache()
+    val ksub = 16
+    val model = Similarity.pqTrain(corpus, dim = 8, m = 2, ksub = ksub, seed = 2L)
+    model.codebooks.foreach(cb => cb.length should (be >= 1 and be <= 3))
+    patterns.foreach { p =>
+      val v = p.toArray
+      val nrm = math.sqrt(v.map(x => x * x).sum)
+      val u = v.map(_ / nrm)
+      val codes = model.encode(u)
+      codes.zip(model.codebooks).foreach { case (c, cb) => c should be < cb.length }
+      model.lut(u).length shouldBe model.m * ksub
+    }
+    val queries = corpus.where(col("vec_id") < 3)
+    val top = Similarity.pqTopK(corpus, queries, 3, dim = 8, m = 2, ksub = ksub,
+        shortlist = 8, seed = 2L)
+      .select("query_id", "neighbor_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    top.length shouldBe 9
+    // every top-3 neighbor is an exact copy of its query
+    top.foreach { case (q, nb) => (nb % 3) shouldBe (q % 3) }
+    corpus.unpersist()
+  }
+
   test("encode round-trip: a centroid-exact vector encodes to its centroid") {
     val corpus = clusteredEmbeddings(400, 8, 4, seed = 1L).cache()
     val model = Similarity.pqTrain(corpus, dim = 8, m = 2, ksub = 4, seed = 2L)

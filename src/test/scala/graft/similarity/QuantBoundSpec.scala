@@ -115,7 +115,7 @@ class QuantBoundSpec extends SparkSpec {
     import spark.implicits._
     val rnd = new scala.util.Random(41)
     // end-to-end contract: Inf input cannot even reach the band stage —
-    // the clustering summarizer raises, so a caller gets a hard error
+    // LloydKMeans.fit's sizing pass raises, so a caller gets a hard error
     // rather than a sweep whose certification quietly saw +Inf >= tau+m
     val infs = (0 until 4).map { i =>
       val v = Array.fill(16)(rnd.nextGaussian())
@@ -182,11 +182,11 @@ class QuantBoundSpec extends SparkSpec {
     val res2 = Similarity.semDedup(df.repartition(11), tau = 0.8, nClusters = 4, seed = 9L)
       .select("vec_id", "cell", "keep").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sortBy(_._1)
-    // (cell membership itself can shift with input order — a
-    // pre-existing KMeans.fit property on loosely-separated noise, same
-    // caveat as CurationSpec; the gated contract is keep/drop vs the
-    // emitted assignment, asserted above, plus keep stability here on
-    // strongly-separated near-dups)
+    // (cell membership itself can shift with input order — a k-means
+    // property on loosely-separated noise, since the seeder draws rows in
+    // partition order; same caveat as CurationSpec; the gated contract is
+    // keep/drop vs the emitted assignment, asserted above, plus keep
+    // stability here on strongly-separated near-dups)
     assert(res2.map(r => (r._1, r._3)).toSeq == res.map(r => (r._1, r._3)).toSeq,
       "keep flags changed under repartitioning")
   }
