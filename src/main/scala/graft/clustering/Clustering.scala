@@ -159,7 +159,7 @@ object KMeansPlusPlus {
           val c = rows(i)
           val next = Array.tabulate(rows.length)(j => math.min(minD2(j), d2(rows(j), c)))
           val sum = next.sum
-          if (sum < bestSum) { best = c; bestD2 = next; bestSum = sum }
+          if (best == null || sum < bestSum) { best = c; bestD2 = next; bestSum = sum }
           t += 1
         }
         centers += best
