@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 import graft.core.Trajectories.{TrajCol, TimeCol}
+import graft.lag.TrajectoryScan
+import graft.lag.TrajectoryScan.{StateRing, addCount, addCounts}
 
 /** Statistically effective transition counts (reference
   * markov/tools/estimation/sparse/effective_counts.py:220
@@ -20,18 +22,18 @@ import graft.core.Trajectories.{TrajCol, TimeCol}
   *
   * Distributed shape: the reference loops over every nonzero (i,j) and runs
   * a full ACF per pair — O(nnz * N) serial work. Here every pair ACF comes
-  * out of ONE streaming pass: the dtraj is shuffled once by trajectory and
-  * sorted by time within each partition, and a per-partition kernel walks
-  * each trajectory in order. It keeps a tau-deep ring of recent states (the
-  * lead), and per start state a ring of its last maxLag conditional targets
-  * plus the sequence length — O(nStates * maxLag + tau) state per task,
-  * whatever the trajectory lengths. Each new target y of start state i adds
-  * one count to (i, lag, y_{u-lag}, y) for every lag the ring covers, one to
-  * the (i, y) histogram, and the sequence length feeds the per-i maximum.
-  * The per-partition accumulators are sparse (only observed keys) and are
-  * merged by one tagged `treeAggregate`: at most n^3 * maxLag pair counts,
-  * n^2 histogram cells and n maxima reach the driver regardless of input
-  * size, and no dense n^3 * maxLag array is ever allocated. Every count is
+  * out of one [[graft.lag.TrajectoryScan]], whose ring-and-pair step
+  * (`StateRing`) the kernel runs twice: over the dtraj at lag tau, where
+  * each pair (i, y) is the (i, y) histogram cell (the single-lag case of
+  * `Validation.multiLagCounts`' grid) and appends y to the conditional
+  * sequence of start state i; and over each start state's sequence at lags
+  * 1..maxLag, where each pair adds one count to (i, lag, y_{u-lag}, y). So
+  * a task holds O(nStates * maxLag + tau) state, whatever the trajectory
+  * lengths, and the longest sequence per start state feeds the per-i
+  * maximum. The accumulators are sparse (only observed keys): at most
+  * n^3 * maxLag pair counts, n^2 histogram cells and n maxima per
+  * partition reach the driver regardless of input size, and no dense
+  * n^3 * maxLag array is ever allocated. Every count is
   * an exact integer, so the result does not depend on partitioning. The
   * indicator acf needs only co-occurrence counts because a_u in {0,1}:
   * sum (a_u - m)(a_{u+l} - m) = N_jj - m (Sh + St) + m^2 n_l.
@@ -81,109 +83,69 @@ object EffectiveCounts {
       nMax: IndexedSeq[Long],
       pairs: Map[(Int, Int, Int, Int), Long])
 
-  /** Per-partition (then merged) accumulator of the streaming kernel.
-    * Pair keys pack (s0, lag - 1, y0, y1); histogram keys pack (s0, y). */
-  private final class Acc(val nStates: Int, val nLags: Int) extends Serializable {
-    // one-element arrays as mutable count cells: one probe per increment
+  /** The streaming kernel's per-partition accumulator, merged over
+    * partitions. Pair keys pack (s0, lag - 1, y0, y1); histogram keys pack
+    * (s0, y). States outside [0, nStates) never enter a sequence; the
+    * largest one is recorded for the driver check. */
+  private final class Acc(nStates: Int, nLags: Int, tau: Int) extends Serializable {
     val pairs = new mutable.LongMap[Array[Long]]
     val hist = new mutable.LongMap[Array[Long]]
     val nMax = new Array[Long](nStates)
     var maxState = -1
+    // the walk: the lead ring, per start state the ring of its conditional
+    // targets (a multi-lag grid over lags 1..nLags of its own), and the
+    // start states the current trajectory has touched
+    @transient private lazy val lead = new StateRing(Array(tau))
+    @transient private lazy val seqs = {
+      val acfLags = Array.range(1, nLags + 1)
+      Array.fill(nStates)(new StateRing(acfLags))
+    }
+    @transient private lazy val touched = new Array[Int](nStates)
+    private var nTouched = 0
+
+    /** One (traj_id, t, state) frame; `first` opens a trajectory. */
+    def frame(r: InternalRow, first: Boolean): Unit = {
+      if (first) {
+        var k = 0
+        while (k < nTouched) { seqs(touched(k)).restart(); k += 1 }
+        nTouched = 0
+        lead.restart()
+      }
+      val raw = if (r.isNullAt(2)) -1 else r.getInt(2)
+      if (raw > maxState) maxState = raw
+      val x = if (raw < nStates) raw else -1
+      lead.push(x)((_, s) => target(s, x))
+    }
+
+    /** Appends target y to start state s's conditional sequence. */
+    private def target(s: Int, y: Int): Unit = {
+      val seq = seqs(s)
+      if (seq.length == 0) { touched(nTouched) = s; nTouched += 1 }
+      seq.push(y)((l, y0) =>
+        addCount(pairs, ((s.toLong * nLags + l) * nStates + y0) * nStates + y, 1L))
+      if (seq.length > nMax(s)) nMax(s) = seq.length
+      addCount(hist, s.toLong * nStates + y, 1L)
+    }
 
     def merge(o: Acc): Acc = {
-      o.pairs.foreachEntry((k, n) => Acc.add(pairs, k, n(0)))
-      o.hist.foreachEntry((k, n) => Acc.add(hist, k, n(0)))
+      addCounts(pairs, o.pairs)
+      addCounts(hist, o.hist)
       for (i <- 0 until nStates) nMax(i) = math.max(nMax(i), o.nMax(i))
       maxState = math.max(maxState, o.maxState)
       this
     }
   }
 
-  private object Acc {
-    def add(m: mutable.LongMap[Array[Long]], k: Long, n: Long): Unit =
-      m.getOrElseUpdate(k, new Array[Long](1))(0) += n
-  }
-
-  /** The streaming kernel over one partition of (traj_id LONG, t, state
-    * INT) rows sorted by (traj_id, t). States outside [0, nStates) never
-    * enter a sequence; the largest one is recorded for the driver check. */
-  private def scan(rows: Iterator[InternalRow], tau: Int, nStates: Int,
-                   nLags: Int): Acc = {
-    val acc = new Acc(nStates, nLags)
-    val recent = new Array[Int](tau)             // s_{p mod tau}
-    val targets = new Array[Int](nStates * nLags) // per s0: Y_{u mod nLags}
-    val len = new Array[Long](nStates)
-    val touched = new Array[Int](nStates)
-    var nTouched = 0
-    var pos = 0L
-    var curNull = false
-    var cur = 0L
-
-    def endTrajectory(): Unit = {
-      var k = 0
-      while (k < nTouched) {
-        val s = touched(k)
-        if (len(s) > acc.nMax(s)) acc.nMax(s) = len(s)
-        len(s) = 0
-        k += 1
-      }
-      nTouched = 0
-      pos = 0
-    }
-
-    def push(s: Int, y: Int): Unit = {
-      val n = len(s)
-      if (n == 0) { touched(nTouched) = s; nTouched += 1 }
-      val base = s * nLags
-      val top = math.min(n, nLags.toLong).toInt
-      var l = 1
-      while (l <= top) {
-        val y0 = targets(base + ((n - l) % nLags).toInt)
-        Acc.add(acc.pairs, ((s.toLong * nLags + (l - 1)) * nStates + y0) * nStates + y, 1L)
-        l += 1
-      }
-      targets(base + (n % nLags).toInt) = y
-      len(s) = n + 1
-      Acc.add(acc.hist, s.toLong * nStates + y, 1L)
-    }
-
-    while (rows.hasNext) {
-      val r = rows.next()
-      val idNull = r.isNullAt(0)
-      val id = if (idNull) 0L else r.getLong(0)
-      if (pos > 0 && (idNull != curNull || id != cur)) endTrajectory()
-      curNull = idNull; cur = id
-      val raw = if (r.isNullAt(2)) -1 else r.getInt(2)
-      if (raw > acc.maxState) acc.maxState = raw
-      val x = if (raw < nStates) raw else -1
-      val ring = (pos % tau).toInt
-      if (pos >= tau) {
-        val s = recent(ring)
-        if (s >= 0 && x >= 0) push(s, x)
-      }
-      recent(ring) = x
-      pos += 1
-    }
-    endTrajectory()
-    acc
-  }
-
-  /** The sufficient statistics in one streaming pass (see the object doc):
-    * one shuffle by trajectory, one aggregation, bounded driver result. */
+  /** The sufficient statistics in one [[TrajectoryScan]] (see the object
+    * doc): one shuffle by trajectory, one aggregation, bounded driver
+    * result. */
   private[markov] def conditionalCounts(dtraj: DataFrame, tau: Int, nStates: Int,
                                         maxLag: Int): ConditionalCounts = {
     require(tau >= 1, s"EffectiveCounts: tau must be >= 1, got $tau")
     val nLags = math.max(1, maxLag)
-    val sorted = dtraj
-      .select(col(TrajCol).cast("long"), col(TimeCol), col("state").cast("int"))
-      .repartition(col(TrajCol))
-      .sortWithinPartitions(TrajCol, TimeCol)
-    val acc = graft.util.JobTag.withDescription(dtraj.sparkSession.sparkContext,
-        s"EffectiveCounts streaming counts (tau=$tau, maxLag=$nLags)") {
-      sorted.queryExecution.toRdd
-        .mapPartitions(rows => Iterator.single(scan(rows, tau, nStates, nLags)))
-        .treeAggregate(new Acc(nStates, nLags))(_ merge _, _ merge _)
-    }
+    val acc = TrajectoryScan.fold(dtraj, Seq(col("state").cast("int")),
+        s"EffectiveCounts streaming counts (tau=$tau, maxLag=$nLags)")(
+        new Acc(nStates, nLags, tau))(_.frame(_, _))(_ merge _)
     require(acc.maxState < nStates,
       s"EffectiveCounts: state ${acc.maxState} is outside [0, $nStates); " +
         s"every state must be < nStates (negative states are skipped)")

@@ -1,10 +1,12 @@
 package graft.markov
 
 import breeze.linalg.{DenseMatrix, DenseVector, sum => bsum}
+import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.core.Trajectories.{TrajCol, TimeCol}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.col
+import graft.lag.TrajectoryScan
+import graft.lag.TrajectoryScan.{addCount, addCounts}
 
 /** Model validation workflows (reference util/validation.py:8
   * `implied_timescales`, :196 `ck_test`; markov/_observables.py:9
@@ -13,30 +15,63 @@ import graft.core.Trajectories.{TrajCol, TimeCol}
   * Scale design: an ITS/CK scan needs count matrices at a GRID of lagtimes.
   * Estimating them one lag at a time re-reads the trajectory table once per
   * lag — at 100 TB that is the whole job cost multiplied by the grid size.
-  * `multiLagCounts` instead computes every lag in ONE scan: one window pass
-  * adds a `lead` column per lag, an array-of-structs explode stacks them,
-  * and a single partially-aggregated groupBy(lag, s0, s1) shuffles at most
-  * |lags| * n^2 rows regardless of input size.
+  * [[multiLagCounts]] instead counts every lag in one
+  * [[graft.lag.TrajectoryScan]]: its kernel keeps a ring of the last
+  * max(lags) states per trajectory and sparse (lag, s0, s1) counts, so the
+  * one shuffle is the scan's traj_id hash and at most |lags| * n^2 cells
+  * per partition reach the driver regardless of input size.
   */
 object Validation {
 
-  private def w = Window.partitionBy(TrajCol).orderBy(TimeCol)
+  /** The multi-lag grid kernel, merged over partitions: per lag, sparse
+    * (s0, s1) counts keyed s0 << 32 | s1, and each state's frame count. */
+  private final class LagGrid(val lags: Array[Int]) extends Serializable {
+    val pairs = Array.fill(lags.length)(new mutable.LongMap[Array[Long]])
+    val visits = new mutable.LongMap[Array[Long]]
+    @transient private lazy val ring = new TrajectoryScan.StateRing(lags)
+
+    def frame(r: InternalRow, first: Boolean): Unit = {
+      if (first) ring.restart()
+      val x = if (r.isNullAt(2)) -1 else r.getInt(2)
+      if (x >= 0) addCount(visits, x, 1L)
+      ring.push(x)((i, s0) => addCount(pairs(i), s0.toLong << 32 | x, 1L))
+    }
+
+    def merge(o: LagGrid): LagGrid = {
+      pairs.indices.foreach(i => addCounts(pairs(i), o.pairs(i)))
+      addCounts(visits, o.visits)
+      this
+    }
+
+    /** (lag, s0, s1, count) of every observed pair. */
+    def cells: Seq[(Int, Int, Int, Long)] =
+      for (i <- lags.indices; (k, n) <- pairs(i).toSeq) yield (lags(i), (k >>> 32).toInt, k.toInt, n(0))
+  }
+
+  /** Sliding-window counts at every distinct lag in `lags` and the state
+    * histogram, from one scan. Null and negative states are blanks. */
+  private def multiLagGrid(dtraj: DataFrame, lags: Seq[Int]): LagGrid = {
+    require(lags.nonEmpty && lags.forall(_ > 0), "lags must be positive")
+    val distinct = lags.distinct.toArray
+    TrajectoryScan.fold(dtraj, Seq(col("state").cast("int")),
+        s"Validation multi-lag counts (lags=${distinct.mkString(",")})")(
+        new LagGrid(distinct))(_.frame(_, _))(_ merge _)
+  }
 
   /** Sliding-window transition counts for every lag in `lags`, one scan.
-    * Output columns: lag, s0, s1, cnt. Blank states (-1) excluded. */
+    * Output columns: lag, s0, s1, cnt. Blank states (null or negative)
+    * excluded. */
   def multiLagCounts(dtraj: DataFrame, lags: Seq[Int]): DataFrame = {
-    require(lags.nonEmpty && lags.forall(_ > 0), "lags must be positive")
-    val withLeads = lags.foldLeft(dtraj) { (df, tau) =>
-      df.withColumn(s"s1_$tau", lead(col("state"), tau).over(w))
-    }
-    val stacked = array(lags.map(tau =>
-      struct(lit(tau).as("lag"), col(s"s1_$tau").as("s1"))): _*)
-    withLeads
-      .select(col("state").as("s0"), explode(stacked).as("p"))
-      .select(col("p.lag").as("lag"), col("s0"), col("p.s1").as("s1"))
-      .where(col("s1").isNotNull && col("s0") >= 0 && col("s1") >= 0)
-      .groupBy("lag", "s0", "s1")
-      .agg(count(lit(1)).as("cnt"))
+    val spark = dtraj.sparkSession
+    import spark.implicits._
+    multiLagGrid(dtraj, lags).cells.toDF("lag", "s0", "s1", "cnt")
+  }
+
+  /** The grid's dense nStates x nStates count matrix per lag. */
+  private def denseCounts(grid: LagGrid, nStates: Int): Map[Int, DenseMatrix[Double]] = {
+    val dense = grid.lags.map(_ -> DenseMatrix.zeros[Double](nStates, nStates)).toMap
+    grid.cells.foreach { case (lag, s0, s1, n) => dense(lag)(s0, s1) = n.toDouble }
+    dense
   }
 
   /** Implied-timescales data over a lag grid (util/validation.py:56
@@ -53,11 +88,13 @@ object Validation {
     * timescales (validation.py:8). `k` = number of processes (excludes the
     * stationary one). */
   def impliedTimescales(dtraj: DataFrame, lags: Seq[Int], nStates: Int,
-                        k: Int = -1, reversible: Boolean = true): ItsData = {
-    val models = msmPerLag(dtraj, lags, nStates, reversible)
+                        k: Int = -1, reversible: Boolean = true): ItsData =
+    timescales(msmPerLag(dtraj, lags, nStates, reversible), lags, k)
+
+  /** The implied-timescales grid of per-lag models, e.g. [[msmPerLag]]'s. */
+  def timescales(models: Map[Int, MarkovStateModel], lags: Seq[Int], k: Int = -1): ItsData = {
     val sorted = lags.sorted
-    ItsData(sorted.toArray,
-      sorted.map(l => models(l).timescales(k).toArray).toArray)
+    ItsData(sorted.toArray, sorted.map(l => models(l).timescales(k).toArray).toArray)
   }
 
   /** Implied timescales WITH Bayesian error bars (validation.py:40-52: the
@@ -92,21 +129,14 @@ object Validation {
 
   /** All per-lag MSMs from a single multi-lag scan. */
   def msmPerLag(dtraj: DataFrame, lags: Seq[Int], nStates: Int,
-                reversible: Boolean): Map[Int, MarkovStateModel] = {
-    val rows = multiLagCounts(dtraj, lags).collect()
-    val byLag = rows.groupBy(_.getInt(0))
-    lags.map { tau =>
-      val dense = DenseMatrix.zeros[Double](nStates, nStates)
-      byLag.getOrElse(tau, Array.empty).foreach { r =>
-        dense(r.getInt(1), r.getInt(2)) = r.getLong(3).toDouble
-      }
+                reversible: Boolean): Map[Int, MarkovStateModel] =
+    denseCounts(multiLagGrid(dtraj, lags), nStates).map { case (tau, dense) =>
       val lcs = Connectivity.largestConnectedSet(dense)
       val sub = Connectivity.submatrix(dense, lcs)
       val t = if (reversible) TransitionMatrixMle.reversible(sub)
               else TransitionMatrixMle.nonReversible(sub)
       tau -> MarkovStateModel(t, tau, lcs)
-    }.toMap
-  }
+    }
 
   /** CK test WITH posterior samples on the predictions (validation.py:257
     * `err_est` path): the test model's Bayesian samples are each propagated
@@ -233,22 +263,15 @@ object Validation {
     // largest-connected-set restriction: the SQL twin sums over all
     // observed pairs, and an LCS-restricted model would silently diverge
     // from it on data where a state drops out of the LCS at some lag.
-    val rows = multiLagCounts(dtraj, lags).collect()
-    val byLag = rows.groupBy(_.getInt(0))
-    val tms: Map[Int, DenseMatrix[Double]] = lags.map { l =>
-      val c = DenseMatrix.zeros[Double](nStates, nStates)
-      byLag.getOrElse(l, Array.empty).foreach { r =>
-        c(r.getInt(1), r.getInt(2)) = r.getLong(3).toDouble
-      }
+    val grid = multiLagGrid(dtraj, lags)
+    val tms = denseCounts(grid, nStates).map { case (l, c) =>
       for (i <- 0 until nStates) {
         val rs = bsum(c(i, ::).t)
         if (rs > 0) c(i, ::) :/= rs
       }
       l -> c
-    }.toMap
-    val hist: Map[Int, Double] = dtraj.where(col("state") >= 0)
-      .groupBy("state").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1).toDouble).toMap
+    }
+    val hist: Map[Int, Double] = grid.visits.toMap.map { case (s, n) => s.toInt -> n(0).toDouble }
     val nSets = sets.length
 
     def coarse(t: DenseMatrix[Double]): DenseMatrix[Double] = {

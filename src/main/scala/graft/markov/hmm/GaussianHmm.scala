@@ -17,11 +17,14 @@ import graft.markov.TransitionMatrixMle
   * per hidden state, so means/sigmas update without materializing gamma. */
 object GaussianHmm {
 
+  /** `span` is the (min, max) of the observed values, carried from the
+    * GMM of [[initialGuessGmm]] (`GmmModel.span`); None otherwise. */
   case class GaussianHmmModel(
       transition: DenseMatrix[Double],  // m x m
       means: Array[Double], sigmas: Array[Double],
       initial: DenseVector[Double],
-      logLikelihood: Double, iterations: Int)
+      logLikelihood: Double, iterations: Int,
+      span: Option[(Double, Double)] = None)
 
   private case class GStats(loglik: Double, xi: Array[Double],
                             gw: Array[Double], gwx: Array[Double], gwxx: Array[Double],
@@ -386,12 +389,11 @@ object GaussianHmm {
     * weights — exactly `to_state_probability_trajectory`), run the MLE
     * transition estimator on Nij, and start from its stationary vector.
     *
-    * Distributed shape: the observations are shuffled once by trajectory
-    * and sorted by time within each partition, and a per-partition kernel
-    * ([[fractionalCounts]]) walks each trajectory in order, computing pobs once
-    * per frame and adding pobs_t ⊗ pobs_{t+1} into m² doubles. One tagged
-    * `treeAggregate` merges them: no per-trajectory collect, and only m²
-    * doubles per partition reach the driver. */
+    * Distributed shape: the counts are one [[graft.lag.TrajectoryScan]]
+    * ([[fractionalCounts]]): its kernel computes pobs once per frame and
+    * adds pobs_t ⊗ pobs_{t+1} into m² doubles, so only m² doubles per
+    * partition reach the driver. The model carries the GMM's value
+    * `span`. */
   def initialGuessGmm(traj: DataFrame, nHidden: Int, valueCol: String,
                       reversible: Boolean = true,
                       precomputedGmm: Option[GmmModel] = None,
@@ -410,27 +412,19 @@ object GaussianHmm {
             else TransitionMatrixMle.nonReversible(nij)
     val pi = graft.linalg.LinAlg.stationaryDistribution(a)
     GaussianHmmModel(a, gmm.means, gmm.sigmas, pi,
-      Double.NegativeInfinity, 0)
+      Double.NegativeInfinity, 0, Some(gmm.span))
   }
 
   /** The fractional transition counts Nij = Σ_t pobs_t ⊗ pobs_{t+1} of
-    * [[initialGuessGmm]] under `gmm`'s (means, sigmas): one shuffle by
-    * trajectory, one tagged aggregation of m² doubles. */
+    * [[initialGuessGmm]] under `gmm`'s (means, sigmas): one
+    * [[graft.lag.TrajectoryScan]], m² doubles per partition. */
   private[markov] def fractionalCounts(traj: DataFrame, valueCol: String,
                                        gmm: GmmModel): DenseMatrix[Double] = {
     import org.apache.spark.sql.functions.col
-    val (means, sigmas) = (gmm.means, gmm.sigmas)
-    val m = means.length
-    val sorted = traj
-      .select(col("traj_id").cast("long"), col("t"), col(valueCol).cast("double").as("v"))
-      .repartition(col("traj_id"))
-      .sortWithinPartitions("traj_id", "t")
-    val counts = graft.util.JobTag.withDescription(traj.sparkSession.sparkContext,
-        s"GaussianHmm GMM-init pair counts (m=$m)") {
-      sorted.queryExecution.toRdd
-        .mapPartitions(rows => Iterator.single(pairCounts(rows, means, sigmas)))
-        .treeAggregate(new Array[Double](m * m))(addInto, addInto)
-    }
+    val m = gmm.means.length
+    val counts = graft.lag.TrajectoryScan.fold(traj, Seq(col(valueCol).cast("double")),
+        s"GaussianHmm GMM-init pair counts (m=$m)")(
+        new PairCounts(gmm.means, gmm.sigmas))(_.frame(_, _))(_ merge _).acc
     DenseMatrix.tabulate(m, m)((i, j) => counts(i * m + j))
   }
 
@@ -456,29 +450,22 @@ object GaussianHmm {
     while (j < m) { out(j) = if (tot < 1e-300) 1.0 / m else out(j) / tot; j += 1 }
   }
 
-  /** Σ pobs_t ⊗ pobs_{t+1}, row-major m², over one partition of
-    * (traj_id LONG, t, v DOUBLE) rows sorted by (traj_id, t). A pair
-    * counts only when both values are non-null, so a null value breaks
-    * the chain; rows with a null traj_id form one trajectory. */
-  private def pairCounts(rows: Iterator[InternalRow], means: Array[Double],
-                         sigmas: Array[Double]): Array[Double] = {
-    val m = means.length
+  /** Σ pobs_t ⊗ pobs_{t+1}, row-major m² in `acc`, over (traj_id, t,
+    * v DOUBLE) frames. A pair counts only when both values are non-null,
+    * so a null value breaks the chain. */
+  private final class PairCounts(means: Array[Double], sigmas: Array[Double])
+      extends Serializable {
+    private val m = means.length
     val acc = new Array[Double](m * m)
-    var prev = new Array[Double](m)
-    var cur = new Array[Double](m)
-    var prevValid = false
-    var curNull = false
-    var curId = 0L
-    while (rows.hasNext) {
-      val r = rows.next()
-      val idNull = r.isNullAt(0)
-      val id = if (idNull) 0L else r.getLong(0)
-      if (idNull != curNull || id != curId) prevValid = false
-      curNull = idNull; curId = id
+    @transient private var prev = new Array[Double](m)
+    @transient private var cur = new Array[Double](m)
+    private var prevValid = false
+
+    def frame(r: InternalRow, first: Boolean): Unit =
       if (r.isNullAt(2)) prevValid = false
       else {
         stateProbs(r.getDouble(2), means, sigmas, cur)
-        if (prevValid) {
+        if (prevValid && !first) {
           var i = 0
           while (i < m) {
             var j = 0
@@ -489,8 +476,8 @@ object GaussianHmm {
         val t = prev; prev = cur; cur = t
         prevValid = true
       }
-    }
-    acc
+
+    def merge(o: PairCounts): PairCounts = { addInto(acc, o.acc); this }
   }
 
   /** Baum-Welch EM over (traj_id, t, value) observations.
@@ -544,7 +531,8 @@ object GaussianHmm {
         val piNew = DenseVector(stats.g0.map(v => if (piSum > 0) v / piSum else 1.0 / m))
         converged = math.abs(stats.loglik - lastLl) < tol * math.abs(stats.loglik)
         lastLl = stats.loglik
-        model = GaussianHmmModel(aNew, meansNew, sigmasNew, piNew, stats.loglik, iter + 1)
+        model = GaussianHmmModel(aNew, meansNew, sigmasNew, piNew, stats.loglik, iter + 1,
+          model.span)
         iter += 1
       }
       model

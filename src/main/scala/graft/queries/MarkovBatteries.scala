@@ -360,8 +360,8 @@ private[graft] object MarkovBatteryQueries extends QueryFamily {
           col("ts").as("t"), col("value"))
       val post = graft.markov.hmm.BayesianHmm.fitGaussian(ev, nHidden = 2,
         nSamples = 10, seed = 47L, maxIterMl = 10)
-      val span = ev.agg(min(col("value")), max(col("value"))).collect()(0)
-      val (vLo, vHi) = (span.getDouble(0) - 1.0, span.getDouble(1) + 1.0)
+      val (lo, hi) = post.prior.span.get // the values the ML fit saw
+      val (vLo, vHi) = (lo - 1.0, hi + 1.0)
       def maxAbs(xs: Iterable[Double]) = if (xs.isEmpty) 0.0 else xs.map(math.abs).max
       val stochResid = maxAbs(post.samples.flatMap(m =>
         (0 until 2).map(i => breeze.linalg.sum(m.transition(i, ::).t) - 1.0)))

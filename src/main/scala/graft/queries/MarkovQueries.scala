@@ -246,8 +246,8 @@ private[graft] object MarkovQueries extends QueryFamily {
       val dtraj = dtrajEv(s, dir)
       val lags = Seq(1, 2, 3, 5)
       val k = 3
-      val its = graft.markov.Validation.impliedTimescales(dtraj, lags, nStates = 5, k = k)
       val models = graft.markov.Validation.msmPerLag(dtraj, lags, 5, reversible = true)
+      val its = graft.markov.Validation.timescales(models, lags, k)
       import s.implicits._
       (for (l <- lags.indices; p <- 0 until k) yield {
         val msm = models(lags(l))

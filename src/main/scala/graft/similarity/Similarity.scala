@@ -564,7 +564,9 @@ object Similarity {
     * size, sorted by id so training is deterministic for a given (input,
     * seed) at any parallelism. Each subspace is seeded by
     * `KMeansPlusPlus.seedRows` and fitted by the `LloydKMeans.iterate`
-    * loop over the sample in hand, with no Spark job per subspace. */
+    * loop over the sample in hand, with no Spark job per subspace. A NaN
+    * or infinite value in a training row is rejected, as in
+    * `LloydKMeans.fit`: it would turn its codewords into NaN. */
   def pqTrain(corpus: DataFrame, dim: Int, m: Int = 8, ksub: Int = 16,
               seed: Long = 42L, idCol: String = "vec_id",
               vecCol: String = "embedding", maxTrainRows: Long = 0L): PqModel = {
@@ -582,6 +584,9 @@ object Similarity {
       .sortBy(_._1).map(_._2)
     if (sample.isEmpty) throw new IllegalArgumentException(
       s"Similarity.pqTrain: requires a non-empty corpus (no $vecCol rows)")
+    if (sample.exists(_.exists(x => !java.lang.Double.isFinite(x))))
+      throw new IllegalArgumentException(
+        "Similarity.pqTrain: requires finite vector values (got NaN or Infinity)")
     val codebooks = Array.tabulate(m) { j =>
       val sub = sample.map(_.slice(j * dsub, (j + 1) * dsub))
       LloydKMeans.iterate(

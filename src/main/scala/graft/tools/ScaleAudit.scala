@@ -2032,18 +2032,23 @@ object ScaleAudit {
   /** 100x family eighteen: the validation-workflow scan contract at a
     * 15M-frame corpus. An ITS/CK study needs count matrices at a GRID of
     * lagtimes; `Validation.multiLagCounts` computes the whole grid in ONE
-    * scan (lead column per lag -> explode -> partial-agg). Invariants:
+    * `TrajectoryScan` (a ring of max(lags) states per trajectory, sparse
+    * (lag, s0, s1) counts per partition). Invariants:
     *   1. EQUALITY: the single-scan counts == per-lag `slidingCounts`
     *      (six separate scans), exactly, for every (lag, s0, s1);
-    *   2. scan shape: the executed multi-lag plan has exactly TWO
-    *      exchanges — the window's traj_id hash (data-sized, once) and
-    *      the partial-combined count (<= partitions * |lags| * n² rows);
+    *   2. scan shape: the grid is ONE Spark job, carrying the grid's
+    *      description, whose plan has exactly ONE exchange — the traj_id
+    *      hash (data-sized, once) — and the driver receives at most
+    *      partitions * |lags| * n² cells (each partition's cells are a
+    *      subset of the merged grid's, so partitions * grid cells bounds
+    *      them);
     *   3. ANALYTIC Chapman-Kolmogorov at scale: the planted chain gives
     *      empirical P̂(lag=L) ≈ T^L — L∞ < 0.005 at every grid lag;
     *   4. ANALYTIC implied timescales: the planted two-block chain has
     *      λ₂ = 1 − 2ε exactly, so ITS(L) = −1/ln λ₂ ≈ 166.2 steps FLAT
     *      across the grid (Markovian input) — each lag within 5%. */
   def its100(spark: SparkSession, src: String): Int = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     var failures = 0
     val eps = 0.003
@@ -2058,15 +2063,31 @@ object ScaleAudit {
     println(s"[scale-100x-its] corpus frames=$n lag grid=${lags.mkString(",")}")
 
     val t0 = System.nanoTime()
-    val multi = graft.markov.Validation.multiLagCounts(dtraj, lags)
+    val metrics = new SweepTransportMetrics
+    spark.sparkContext.addSparkListener(metrics)
+    val multi = try graft.markov.Validation.multiLagCounts(dtraj, lags) finally {
+      org.apache.spark.sql.GraftExpressionBridge.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(metrics)
+    }
     val mm = multi.collect()
       .map(r => ((r.getInt(0), r.getInt(1), r.getInt(2)), r.getLong(3))).toMap
     val secMulti = (System.nanoTime() - t0) / 1e9
-    val nEx = allPlanNodes(multi).count(_.isInstanceOf[ShuffleExchangeExec])
-    val okShape = nEx == 2
+    val jobs = metrics.jobs.values.toSeq
+    val tagged = jobs.count(_.site.startsWith("Validation multi-lag counts"))
+    val exchanges = graft.lag.TrajectoryScan.plan(dtraj, Seq(col("state")))
+      .collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    val onTraj = exchanges.forall {
+      case h: HashPartitioning => h.references.toSeq.map(_.name) == Seq("traj_id")
+      case _ => false
+    }
+    val cells = exchanges.map(_.numPartitions).sum.toLong * mm.size
+    val cellBound = exchanges.map(_.numPartitions).sum.toLong * lags.size * 6 * 6
+    val okShape = jobs.size == 1 && tagged == 1 && exchanges.size == 1 && onTraj &&
+      cells <= cellBound
     if (!okShape) failures += 1
-    println(f"[scale-100x-its] one-scan grid   cells=${mm.size} " +
-      f"exchanges=$nEx (want 2: window hash + partial-agg count)  " +
+    println(f"[scale-100x-its] one-scan grid   cells=${mm.size} jobs=${jobs.size} " +
+      f"(want 1 tagged: $tagged) exchanges=${exchanges.size} (want 1: traj_id hash " +
+      f"$onTraj) driver-cells<=$cells (bound partitions*|lags|*n²=$cellBound)  " +
       f"${secMulti}%6.1f s  ${if (okShape) "OK" else "FAIL"}")
 
     val t1 = System.nanoTime()

@@ -1,22 +1,41 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The engine has one k-means (`graft.clustering.LloydKMeans`), so no
-  * source under `src/main/scala` may reach for Spark MLlib. */
+/** Source-level guards over `src/main/scala`: the engine has one k-means
+  * (`graft.clustering.LloydKMeans`), so no source may reach for Spark
+  * MLlib; and one per-trajectory scan (`graft.lag.TrajectoryScan`), so no
+  * other source sorts partitions by the trajectory key. */
 class MainSourcesSpec extends AnyFunSuite {
 
-  test("no file under src/main/scala mentions org.apache.spark.ml") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"$root is not a directory")
-    val files = java.nio.file.Files.walk(root)
-    val offenders = try {
-      files.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          .contains("org.apache.spark.ml"))
-        .map(root.relativize(_).toString).toSeq.sorted
+  private val root = Paths.get("src/main/scala")
+
+  /** (path relative to `root`, text) of every main Scala source. */
+  private def sources(): Seq[(String, String)] = {
+    assert(Files.isDirectory(root), s"$root is not a directory")
+    val files = Files.walk(root)
+    try {
+      files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .map((p: Path) => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
+        .sortBy(_._1)
     } finally files.close()
+  }
+
+  test("no file under src/main/scala mentions org.apache.spark.ml") {
+    val offenders = sources().collect { case (p, text) if text.contains("org.apache.spark.ml") => p }
     assert(offenders.isEmpty, s"MLlib referenced in: ${offenders.mkString(", ")}")
+  }
+
+  test("only TrajectoryScan sorts partitions by the trajectory key") {
+    val bySortKey = """(?s)sortWithinPartitions\(([^)]*)\)""".r
+    val trajKey = """TrajCol|"traj_id"""".r
+    val offenders = sources().collect {
+      case (p, text) if p != "graft/lag/TrajectoryScan.scala" &&
+          bySortKey.findAllMatchIn(text).exists(m => trajKey.findFirstIn(m.group(1)).nonEmpty) => p
+    }
+    assert(offenders.isEmpty,
+      s"per-trajectory sort outside graft.lag.TrajectoryScan in: ${offenders.mkString(", ")}")
   }
 }

@@ -42,6 +42,18 @@ class KppSpec extends SparkSpec with Matchers {
     misses should be <= 5
   }
 
+  test("seedRows returns k centers and no null when a NaN row makes every D^2 sum NaN") {
+    // the NaN row's distance to any center is NaN, so every candidate's
+    // summed D^2 is NaN and no candidate compares below another
+    val rows = Array(Array(0.0, 0.0), Array(10.0, 0.0), Array(0.0, 10.0),
+      Array(Double.NaN, 1.0), Array(10.0, 10.0), Array(5.0, 5.0))
+    for (seed <- 1L to 6L) {
+      val centers = KMeansPlusPlus.seedRows(rows, 3, seed)
+      centers.length shouldBe 3
+      all(centers) should not be null
+    }
+  }
+
   test("k is capped by the number of available rows") {
     import spark.implicits._
     val traj = Seq((1L, 0L, Seq(1.0)), (1L, 1L, Seq(2.0))).toDF("traj_id", "t", "features")

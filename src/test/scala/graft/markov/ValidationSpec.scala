@@ -1,6 +1,7 @@
 package graft.markov
 
 import breeze.linalg.{DenseMatrix, sum => bsum}
+import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 import graft.data.MarkovSim
 import org.scalatest.matchers.should.Matchers
@@ -14,16 +15,46 @@ class ValidationSpec extends SparkSpec with Matchers {
   lazy val dtraj = MarkovSim.simulate(spark, chain.transitionMatrix,
     nTraj = 8, length = 3000, seed = 7L).cache()
 
-  test("multiLagCounts equals per-lag slidingCounts exactly") {
-    val lags = Seq(1, 2, 5)
-    val multi = Validation.multiLagCounts(dtraj, lags).collect()
-      .map(r => ((r.getInt(0), r.getInt(1), r.getInt(2)), r.getLong(3))).toMap
-    lags.foreach { tau =>
-      val single = TransitionCounting.slidingCounts(dtraj, tau).collect()
-        .map(r => ((tau, r.getInt(0), r.getInt(1)), r.getLong(2))).toMap
-      single.foreach { case (k, v) => multi(k) shouldBe v }
-      multi.count(_._1._1 == tau) shouldBe single.size
+  /** Seeded ragged dtrajs over 3 partitions, rows shuffled: one
+    * trajectory with a null traj_id, several one-row trajectories, null
+    * and -1 states. */
+  private def raggedDtraj(seed: Long): DataFrame = {
+    import spark.implicits._
+    val rng = new scala.util.Random(seed)
+    val ids = Seq[Option[Long]](None, Some(1L), Some(2L), Some(3L), Some(40L), Some(5L))
+    val lengths = Seq(25, 1, 1, 40, 1, 12)
+    val rows = ids.zip(lengths).flatMap { case (id, n) =>
+      var t = rng.nextInt(4).toLong
+      (0 until n).map { _ =>
+        t += 1 + rng.nextInt(3)
+        val u = rng.nextDouble()
+        (id, t, if (u < 0.1) None else if (u < 0.2) Some(-1) else Some(rng.nextInt(4)))
+      }
     }
+    rng.shuffle(rows).toDF("traj_id", "t", "state").repartition(3)
+  }
+
+  test("multiLagCounts equals per-lag slidingCounts exactly") {
+    import spark.implicits._
+    val lags = Seq(1, 2, 5)
+    dtraj.count() // fills the cache, which runs jobs of its own
+    for (df <- Seq(dtraj, raggedDtraj(3L), raggedDtraj(8L))) {
+      var counts: DataFrame = null
+      jobDescriptionsLaunchedBy {
+        counts = Validation.multiLagCounts(df, lags)
+      } shouldBe Seq("Validation multi-lag counts (lags=1,2,5)")
+      val multi = counts.collect()
+        .map(r => ((r.getInt(0), r.getInt(1), r.getInt(2)), r.getLong(3))).toMap
+      lags.foreach { tau =>
+        val single = TransitionCounting.slidingCounts(df, tau).collect()
+          .map(r => ((tau, r.getInt(0), r.getInt(1)), r.getLong(2))).toMap
+        single should not be empty
+        single.foreach { case (k, v) => multi(k) shouldBe v }
+        multi.count(_._1._1 == tau) shouldBe single.size
+      }
+    }
+    val none = Seq.empty[(Long, Long, Int)].toDF("traj_id", "t", "state")
+    Validation.multiLagCounts(none, lags).collect() shouldBe empty
   }
 
   test("simulate is deterministic in seed and distribution matches pi") {

@@ -118,6 +118,19 @@ class PqSpec extends SparkSpec with Matchers {
     e.getMessage should include("non-empty")
   }
 
+  test("pqTrain rejects a NaN or infinite vector value, naming the operator") {
+    import spark.implicits._
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity)) {
+      val corpus = (0 until 40).map(i =>
+        (i.toLong, Seq.tabulate(8)(j => if (i == 17 && j == 5) bad else (i * 8 + j) % 7 - 3.0)))
+        .toDF("vec_id", "embedding")
+      val e = intercept[IllegalArgumentException](
+        Similarity.pqTrain(corpus, dim = 8, m = 2, ksub = 4, seed = 2L))
+      e.getMessage should include("Similarity.pqTrain")
+      e.getMessage should include("finite")
+    }
+  }
+
   test("subspaces with fewer than ksub distinct sub-vectors train, encode and rank") {
     import spark.implicits._
     // three distinct vectors repeated: every subspace has 3 distinct
