@@ -114,8 +114,11 @@ case class ClusterModel(centers: Array[Array[Double]]) {
   * [[seedRows]] is the same selection over rows the caller already holds
   * (the PQ sub-codebooks). */
 object KMeansPlusPlus {
+  /** The default row cap of [[seed]]. */
+  val SampleRows: Long = 65536L
+
   def seed(traj: DataFrame, k: Int, seedVal: Long = 42L,
-           maxSampleRows: Long = 65536L, featCol: String = FeatCol): Array[Array[Double]] = {
+           maxSampleRows: Long = SampleRows, featCol: String = FeatCol): Array[Array[Double]] = {
     require(k > 0, "k must be positive")
     val rows = graft.util.Sampling.rowCap(traj, maxSampleRows, seedVal)
       .select(col(featCol).cast("array<double>"))
@@ -378,9 +381,14 @@ object LloydKMeans {
         .requireNonEmpty("LloydKMeans.fit", s"feature frame (no $featCol values)")
       // seeding is shared by both legs; callers that run fit twice with
       // identical seeding (the q267 parity gate) pass the seed once via
-      // `init`
-      val centers = init.getOrElse(
-        KMeansPlusPlus.seed(data.toDF(featCol), k, seed, featCol = featCol))
+      // `init`. A local leg of at most SampleRows rows holds the rows the
+      // seeder's row cap would collect, in the same order, so it seeds
+      // from them without another job.
+      val centers = init.getOrElse(transport.localItems match {
+        case Some(rows) if rows.length <= KMeansPlusPlus.SampleRows =>
+          KMeansPlusPlus.seedRows(rows.toArray, k, seed)
+        case _ => KMeansPlusPlus.seed(data.toDF(featCol), k, seed, featCol = featCol)
+      })
       ClusterModel(iterate(transport, centers, metric, maxIter, tol))
     } finally data.unpersist()
   }

@@ -1,9 +1,12 @@
 package graft.markov.hmm
 
 import breeze.linalg.{DenseMatrix, DenseVector, sum => bsum}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import graft.lag.TrajectoryScan
+import graft.lag.TrajectoryScan.Sequence
 import graft.markov.TransitionMatrixMle
+import graft.util.Transport
 
 /** Hidden Markov model with 1-d Gaussian output densities (reference
   * markov/hmm/_output_model.py:308 `GaussianOutputModel`,
@@ -29,18 +32,12 @@ object GaussianHmm {
   private case class GStats(loglik: Double, xi: Array[Double],
                             gw: Array[Double], gwx: Array[Double], gwxx: Array[Double],
                             g0: Array[Double]) {
-    def merge(o: GStats): GStats = {
-      def add(a: Array[Double], b: Array[Double]): Array[Double] = {
-        val r = a.clone; var i = 0
-        while (i < r.length) { r(i) += b(i); i += 1 }
-        r
-      }
-      GStats(loglik + o.loglik, add(xi, o.xi), add(gw, o.gw),
-        add(gwx, o.gwx), add(gwxx, o.gwxx), add(g0, o.g0))
-    }
+    def merge(o: GStats): GStats =
+      GStats(loglik + o.loglik, plus(xi, o.xi), plus(gw, o.gw),
+        plus(gwx, o.gwx), plus(gwxx, o.gwxx), plus(g0, o.g0))
   }
 
-  @inline private def gaussPdf(x: Double, mu: Double, sigma: Double): Double = {
+  @inline private[hmm] def gaussPdf(x: Double, mu: Double, sigma: Double): Double = {
     val s = math.max(sigma, 1e-8)
     val z = (x - mu) / s
     math.exp(-0.5 * z * z) / (s * math.sqrt(2.0 * math.Pi))
@@ -140,15 +137,6 @@ object GaussianHmm {
       t += 1
     }
     GStats(scale.map(math.log).sum, xi, gw, gwx, gwxx, g0)
-  }
-
-  private def trajectories(traj: DataFrame, valueCol: String): Dataset[(Long, Array[Double])] = {
-    val spark = traj.sparkSession
-    import spark.implicits._
-    traj.selectExpr("traj_id", "t", s"CAST($valueCol AS DOUBLE) AS v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (id, it) => (id, it.toArray.sortBy(_._2).map(_._3)) }
   }
 
   /** Deterministic initial guess: means at evenly spaced quantiles of the
@@ -422,7 +410,7 @@ object GaussianHmm {
                                        gmm: GmmModel): DenseMatrix[Double] = {
     import org.apache.spark.sql.functions.col
     val m = gmm.means.length
-    val counts = graft.lag.TrajectoryScan.fold(traj, Seq(col(valueCol).cast("double")),
+    val counts = TrajectoryScan.fold(traj, Seq(col(valueCol).cast("double")),
         s"GaussianHmm GMM-init pair counts (m=$m)")(
         new PairCounts(gmm.means, gmm.sigmas))(_.frame(_, _))(_ merge _).acc
     DenseMatrix.tabulate(m, m)((i, j) => counts(i * m + j))
@@ -431,6 +419,9 @@ object GaussianHmm {
   private def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
     var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
   }
+
+  /** a + b elementwise, into a new array. */
+  private[hmm] def plus(a: Array[Double], b: Array[Double]): Array[Double] = addInto(a.clone, b)
 
   /** Row-normalized state likelihoods of `v` into `out`; an all-zero row
     * (every state below 1e-300) normalizes to uniform, not NaN — the
@@ -490,53 +481,63 @@ object GaussianHmm {
           reversible: Boolean = true,
           init: String = "gmm",
           localThreshold: Long = BayesianHmm.LocalSweepThreshold): GaussianHmmModel = {
-    val m = nHidden
     if (init != "gmm" && init != "quantile") throw new IllegalArgumentException(
       s"GaussianHmm.fit: unknown init '$init'. Must be one of gmm, quantile.")
     // The size is taken before the initial guess, so an empty frame fails
     // with the precondition rather than inside the GMM seeding.
-    val trajs = trajectories(traj, valueCol).cache()
-    try {
-      val transport = graft.util.Transport.byId(trajs, localThreshold)(_.length)
-        .requireNonEmpty("GaussianHmm.fit",
-          s"observation frame (no (traj_id, t, $valueCol) rows)")
-      var model =
-        if (init == "gmm") initialGuessGmm(traj, nHidden, valueCol, reversible,
-          localThreshold = localThreshold)
-        else initialGuess(traj, nHidden, valueCol)
-      var lastLl = Double.NegativeInfinity
-      var iter = 0
-      var converged = false
-      while (iter < maxIter && !converged) {
-        val a = graft.linalg.LinAlg.toFlat(model.transition)
-        val pi = model.initial.toArray
-        val means = model.means; val sigmas = model.sigmas
-        val stats = transport.sweep(s"GaussianHmm Baum-Welch iteration $iter")(
-            _.map(t => forwardBackward(t._2, a, pi, means, sigmas, m)).reduce(_ merge _))(
-            _ merge _)
-        val xiM = graft.linalg.LinAlg.fromFlat(stats.xi, m)
-        val aNew = if (reversible) TransitionMatrixMle.reversible(xiM)
-                   else TransitionMatrixMle.nonReversible(xiM)
-        val meansNew = new Array[Double](m)
-        val sigmasNew = new Array[Double](m)
-        for (j <- 0 until m) {
-          val w = stats.gw(j)
-          if (w > 1e-12) {
-            meansNew(j) = stats.gwx(j) / w
-            val v = stats.gwxx(j) / w - meansNew(j) * meansNew(j)
-            sigmasNew(j) = math.sqrt(math.max(v, 1e-12))
-          } else { meansNew(j) = model.means(j); sigmasNew(j) = model.sigmas(j) }
-        }
-        val piSum = stats.g0.sum
-        val piNew = DenseVector(stats.g0.map(v => if (piSum > 0) v / piSum else 1.0 / m))
-        converged = math.abs(stats.loglik - lastLl) < tol * math.abs(stats.loglik)
-        lastLl = stats.loglik
-        model = GaussianHmmModel(aNew, meansNew, sigmasNew, piNew, stats.loglik, iter + 1,
-          model.span)
-        iter += 1
+    Hmm.cached(TrajectoryScan.values(traj, valueCol, "GaussianHmm.fit")) { trajs =>
+      val transport = Transport.byId(trajs, localThreshold)
+        .requireNonEmpty("GaussianHmm.fit", nonEmptyValues(valueCol))
+      baumWelch(transport, traj, nHidden, valueCol, maxIter, tol, reversible, init, localThreshold)
+    }
+  }
+
+  /** What the Gaussian fits and the sampler require of their frame. */
+  private[hmm] def nonEmptyValues(valueCol: String): String =
+    s"observation frame (no (traj_id, t, $valueCol) rows)"
+
+  /** The Baum-Welch loop of [[fit]] over `traj`'s sequences in `transport`,
+    * from the `init` guess over `traj`. */
+  private[hmm] def baumWelch(transport: Transport[Sequence[Double]], traj: DataFrame,
+      nHidden: Int, valueCol: String, maxIter: Int, tol: Double, reversible: Boolean,
+      init: String, localThreshold: Long): GaussianHmmModel = {
+    val m = nHidden
+    var model =
+      if (init == "gmm") initialGuessGmm(traj, nHidden, valueCol, reversible,
+        localThreshold = localThreshold)
+      else initialGuess(traj, nHidden, valueCol)
+    var lastLl = Double.NegativeInfinity
+    var iter = 0
+    var converged = false
+    while (iter < maxIter && !converged) {
+      val a = graft.linalg.LinAlg.toFlat(model.transition)
+      val pi = model.initial.toArray
+      val means = model.means; val sigmas = model.sigmas
+      val stats = transport.sweep(s"GaussianHmm Baum-Welch iteration $iter")(
+          _.map(t => forwardBackward(t._3, a, pi, means, sigmas, m)).reduce(_ merge _))(
+          _ merge _)
+      val xiM = graft.linalg.LinAlg.fromFlat(stats.xi, m)
+      val aNew = if (reversible) TransitionMatrixMle.reversible(xiM)
+                 else TransitionMatrixMle.nonReversible(xiM)
+      val meansNew = new Array[Double](m)
+      val sigmasNew = new Array[Double](m)
+      for (j <- 0 until m) {
+        val w = stats.gw(j)
+        if (w > 1e-12) {
+          meansNew(j) = stats.gwx(j) / w
+          val v = stats.gwxx(j) / w - meansNew(j) * meansNew(j)
+          sigmasNew(j) = math.sqrt(math.max(v, 1e-12))
+        } else { meansNew(j) = model.means(j); sigmasNew(j) = model.sigmas(j) }
       }
-      model
-    } finally trajs.unpersist()
+      val piSum = stats.g0.sum
+      val piNew = DenseVector(stats.g0.map(v => if (piSum > 0) v / piSum else 1.0 / m))
+      converged = math.abs(stats.loglik - lastLl) < tol * math.abs(stats.loglik)
+      lastLl = stats.loglik
+      model = GaussianHmmModel(aNew, meansNew, sigmasNew, piNew, stats.loglik, iter + 1,
+        model.span)
+      iter += 1
+    }
+    model
   }
 
   /** True data log-likelihood of a fitted model: the scaled forward pass
@@ -547,14 +548,12 @@ object GaussianHmm {
     * right for EM robustness but wrong for model comparison). */
   def scoreLogLikelihood(traj: DataFrame, model: GaussianHmmModel,
                          valueCol: String = "value"): Double = {
-    val spark = traj.sparkSession
-    import spark.implicits._
     val m = model.transition.rows
     val a = graft.linalg.LinAlg.toFlat(model.transition)
     val pi = model.initial.toArray
     val means = model.means; val sigmas = model.sigmas
-    trajectories(traj, valueCol)
-      .map { case (_, obs) =>
+    TrajectoryScan.values(traj, valueCol, "GaussianHmm.scoreLogLikelihood")
+      .map { case (_, _, obs) =>
         val tLen = obs.length
         val alpha = new Array[Double](m)
         val next = new Array[Double](m)
@@ -595,12 +594,8 @@ object GaussianHmm {
     val a = graft.linalg.LinAlg.toFlat(model.transition)
     val pi = model.initial.toArray
     val means = model.means; val sigmas = model.sigmas
-    traj.selectExpr("traj_id", "t", s"CAST($valueCol AS DOUBLE) AS v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (id, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        val obs = rows.map(_._3)
+    TrajectoryScan.values(traj, valueCol, "GaussianHmm.viterbi")
+      .flatMap { case (id, ts, obs) =>
         val tLen = obs.length
         val logA = a.map(v => math.log(math.max(v, 1e-300)))
         val delta = Array.ofDim[Double](tLen, m)
@@ -632,7 +627,7 @@ object GaussianHmm {
         path(tLen - 1) = (0 until m).maxBy(delta(tLen - 1)(_))
         t = tLen - 2
         while (t >= 0) { path(t) = psi(t + 1)(path(t + 1)); t -= 1 }
-        rows.iterator.zip(path.iterator).map { case ((_, tt, _), h) => (id, tt, h) }
+        ts.indices.iterator.map(i => (id, ts(i), path(i)))
       }
       .toDF("traj_id", "t", "hidden")
   }

@@ -1,17 +1,22 @@
 package graft.markov.hmm
 
 import breeze.linalg.{DenseMatrix, DenseVector, sum => bsum}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import graft.lag.TrajectoryScan
+import graft.lag.TrajectoryScan.Sequence
 import graft.markov.{MarkovStateModel, Pcca, TransitionCounting, TransitionMatrixMle, Msm}
+import graft.util.Transport
 
 /** Hidden Markov model with discrete output
   * (reference markov/hmm/_maximum_likelihood_hmm.py:224-423,
   * _output_model.py DiscreteOutputModel, _hidden_markov_model.py).
   *
   * Distributed shape (SURVEY §3 E3): the EM loop runs on the driver; each
-  * iteration is ONE shuffle-free pass — trajectories are grouped by
-  * traj_id, each group runs the scaled forward-backward recursion locally
-  * and emits O(m^2 + m*nObs) sufficient statistics, which `reduce` merges
+  * iteration is ONE shuffle-free pass over the trajectories, grouped once
+  * by [[graft.lag.TrajectoryScan.states]] and cached; each runs the scaled
+  * forward-backward recursion locally and emits O(m^2 + m*nObs)
+  * sufficient statistics, which `reduce` merges
   * tree-wise. Model state (A, B, pi) ships as a closure broadcast. Gamma
   * trajectories are never materialized globally.
   */
@@ -300,16 +305,17 @@ object Hmm {
     HmmModel(hiddenT, b, hiddenPi, Double.NegativeInfinity, 0)
   }
 
-  /** Collect each trajectory's state sequence ordered by t. */
-  private def trajectories(dtraj: DataFrame): Dataset[(Long, Array[Int])] = {
-    val spark = dtraj.sparkSession
-    import spark.implicits._
-    dtraj.select("traj_id", "t", "state").as[(Long, Long, Int)]
-      .groupByKey(_._1)
-      .mapGroups { (id, it) =>
-        val arr = it.toArray.sortBy(_._2).map(_._3)
-        (id, arr)
-      }
+  /** The state sequences `fit` runs on: those of the frames with
+    * t % lagtime == 0. */
+  private[hmm] def lagged(dtraj: DataFrame, lagtime: Int, op: String): RDD[Sequence[Int]] =
+    TrajectoryScan.states(if (lagtime == 1) dtraj
+      else dtraj.where((org.apache.spark.sql.functions.col("t") % lagtime) === 0), op)
+
+  /** Runs `body` over `trajs`, persisted for its duration (the grouping
+    * is one shuffle, and every sweep of a fit scans it). */
+  private[hmm] def cached[V, R](trajs: RDD[Sequence[V]])(body: RDD[Sequence[V]] => R): R = {
+    trajs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(trajs) finally trajs.unpersist(blocking = false)
   }
 
   /** One M-step from merged E-statistics. */
@@ -340,16 +346,16 @@ object Hmm {
   def fit(dtraj: DataFrame, nHidden: Int, nObs: Int, lagtime: Int = 1,
           maxIter: Int = 100, tol: Double = 1e-6,
           reversible: Boolean = true,
-          localThreshold: Long = BayesianHmm.LocalSweepThreshold): HmmModel = {
-    val trajs = trajectories(if (lagtime == 1) dtraj
-      else dtraj.where((org.apache.spark.sql.functions.col("t") % lagtime) === 0)).cache()
-    try {
-      val transport = graft.util.Transport.byId(trajs, localThreshold)(_.length)
-        .requireNonEmpty("Hmm.fit", "state trajectory frame (no (traj_id, t, state) rows)")
-      baumWelch(transport, (t: (Long, Array[Int])) => t._2,
+          localThreshold: Long = BayesianHmm.LocalSweepThreshold): HmmModel =
+    cached(lagged(dtraj, lagtime, "Hmm.fit")) { trajs =>
+      val transport = Transport.byId(trajs, localThreshold)
+        .requireNonEmpty("Hmm.fit", NonEmptyStates)
+      baumWelch(transport, (t: Sequence[Int]) => t._3,
         initialGuess(dtraj, nHidden, nObs, lagtime), nObs, maxIter, tol, reversible)
-    } finally trajs.unpersist()
-  }
+    }
+
+  /** What the discrete fits and the sampler require of their frame. */
+  private[hmm] val NonEmptyStates = "state trajectory frame (no (traj_id, t, state) rows)"
 
   /** Driver-local Baum-Welch over already-collected observation arrays:
     * same forward-backward kernel and M-step as `fit`, zero Spark jobs per
@@ -360,7 +366,7 @@ object Hmm {
                 maxIter: Int = 100, tol: Double = 1e-6,
                 reversible: Boolean = true,
                 init: Option[HmmModel] = None): HmmModel =
-    baumWelch(graft.util.Transport.local(obsTrajs.toIndexedSeq, unit = 1),
+    baumWelch(Transport.local(obsTrajs.toIndexedSeq, unit = 1),
       (obs: Array[Int]) => obs,
       init.getOrElse(initialGuessFromCounts(
         TransitionCounting.slidingCountsLocal(obsTrajs, 1, nObs), nHidden, nObs, 1)),
@@ -368,7 +374,7 @@ object Hmm {
 
   /** The Baum-Welch loop from `init`: one transport sweep of
     * per-trajectory forward-backward statistics per iteration. */
-  private def baumWelch[T](transport: graft.util.Transport[T],
+  private[hmm] def baumWelch[T](transport: Transport[T],
       obs: T => Array[Int], init: HmmModel, nObs: Int, maxIter: Int,
       tol: Double, reversible: Boolean): HmmModel = {
     var model = init
@@ -399,13 +405,9 @@ object Hmm {
     val a = graft.linalg.LinAlg.toFlat(model.transition)
     val b = graft.linalg.LinAlg.toFlat(model.emission)
     val pi = model.initial.toArray
-    dtraj.select("traj_id", "t", "state").as[(Long, Long, Int)]
-      .groupByKey(_._1)
-      .flatMapGroups { (id, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        val path = viterbiPath(rows.map(_._3), a, b, pi, m, nObs)
-        rows.iterator.zip(path.iterator).map { case ((_, t, _), h) => (id, t, h) }
-      }
-      .toDF("traj_id", "t", "hidden")
+    TrajectoryScan.states(dtraj, "Hmm.viterbi").flatMap { case (id, ts, obs) =>
+      val path = viterbiPath(obs, a, b, pi, m, nObs)
+      ts.indices.iterator.map(i => (id, ts(i), path(i)))
+    }.toDF("traj_id", "t", "hidden")
   }
 }

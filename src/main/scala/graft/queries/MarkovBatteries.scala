@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Trajectories
-import graft.lag.Lag
+import graft.lag.{Lag, TrajectoryScan}
 import graft.agg.Covariance
 import graft.linalg.LinAlg
 import graft.markov.TransitionCounting
@@ -104,22 +104,15 @@ private[graft] object MarkovBatteryQueries extends QueryFamily {
           yield math.min(t(i, j), 0.0)))
       val checks = scala.collection.mutable.LinkedHashMap[String, Double]()
       // ONE Spark job for the whole battery: collect the model-sized dtraj
-      // as per-trajectory arrays, then feed every estimator (HMM EM,
-      // Gibbs posterior, OOM, AMM) from shared driver-side counts. The
+      // as per-trajectory arrays, in traj_id order so the float sums below
+      // do not follow the partition order, then feed every estimator (HMM
+      // EM, Gibbs posterior, OOM, AMM) from shared driver-side counts. The
       // distributed fit paths stay the scale story (q38/q46/q58/q61);
       // this battery verifies per-iterate invariants, which hold at any
       // iteration count — 5 EM sweeps prove the same contract as 15.
-      val trajArrays: Seq[Array[Int]] = {
-        val spark = s
-        import spark.implicits._
-        dtrajEv(s, dir)
-          .select("traj_id", "t", "state").as[(Long, Long, Int)]
-          .groupByKey(_._1)
-          .mapGroups { (_: Long, it: Iterator[(Long, Long, Int)]) =>
-            it.toArray.sortBy(_._2).map(_._3)
-          }
-          .collect().toSeq
-      }
+      val trajArrays: Seq[Array[Int]] =
+        TrajectoryScan.states(dtrajEv(s, dir), "q73_estimator_invariants")
+          .collect().sortBy(_._1).map(_._3).toSeq
       val counts = TransitionCounting.slidingCountsLocal(trajArrays, 1, 5)
       val hmmTrajs = trajArrays.map(_.filter(_ >= 0)).filter(_.nonEmpty)
 
@@ -755,9 +748,9 @@ private[graft] object MarkovBatteryQueries extends QueryFamily {
       // discrete transport: the event dtraj, both thresholds
       val d = dtrajEv(s, dir).where(col("state") >= 0)
       val mlD = Hmm.fit(d, nHidden = 2, nObs = 5, maxIter = 5)
-      // ONE cached grouping shared by both transport runs (each used to
-      // pay its own groupByKey over the identical input)
-      val gD = BayesianHmm.groupDiscrete(d).cache()
+      // ONE cached grouping shared by both transport runs (each would
+      // otherwise group the identical input again)
+      val gD = TrajectoryScan.states(d, "q265_bayes_hmm_dist_transport").cache()
       def runD(th: Long) = BayesianHmm.sample(d, mlD, nObs = 5, nSamples = 4,
         stride = 1, seed = 29L, localThreshold = th,
         groupedOpt = Some(gD)).samples
@@ -773,7 +766,7 @@ private[graft] object MarkovBatteryQueries extends QueryFamily {
         .select(col("user_id").cast("long").as("traj_id"),
           col("ts").as("t"), col("value"))
       val mlG = graft.markov.hmm.GaussianHmm.fit(ev, 2, "value", maxIter = 5)
-      val gG = BayesianHmm.groupGaussian(ev).cache()
+      val gG = TrajectoryScan.values(ev, "value", "q265_bayes_hmm_dist_transport").cache()
       def runG(th: Long) = BayesianHmm.sampleGaussian(ev, mlG, nSamples = 4,
         stride = 1, seed = 47L, localThreshold = th,
         groupedOpt = Some(gG)).samples

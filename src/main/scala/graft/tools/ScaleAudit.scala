@@ -1686,9 +1686,9 @@ object ScaleAudit {
 
   /** 100x family sixteen: distributed Baum-Welch + Viterbi at a 15M-frame
     * corpus. The HMM E-step is the engine's canonical per-trajectory
-    * sequential recursion (`flatMapGroups`/map over grouped state arrays;
-    * SURVEY §2.7): ONE data-sized exchange groups trajectories, the
-    * grouped frame is cached, and every EM iteration is a single job
+    * sequential recursion (a map over the state sequences of
+    * `TrajectoryScan.states`; SURVEY §2.7): ONE data-sized exchange groups
+    * trajectories, the grouping is cached, and every EM iteration is a single job
     * whose reduce ships MODEL-SIZED EStats partials (m² + m·nObs + m
     * doubles) — nothing row-sized ever reaches the driver. Invariants:
     *   1. RECOVERY at 100x: a planted 6-state chain with two metastable
@@ -1795,11 +1795,11 @@ object ScaleAudit {
     * per-trajectory observations — no output frame exists to audit).
     * Invariants:
     *   1. TRANSPORT: among every job the sampler runs after its ML warm
-    *      start, at most ONE writes any shuffle bytes (the groupByKey
-    *      cache fill — observation-sized exactly ONCE); there are
-    *      exactly nSweeps further reduce jobs and each writes ZERO
-    *      shuffle bytes and returns at most sufficient-statistic-sized
-    *      task results (O(m² + m·nObs) ≈ 18 doubles + task-metrics
+    *      start, at most ONE writes any shuffle bytes (the cache fill of
+    *      the `TrajectoryScan.states` grouping — observation-sized
+    *      exactly ONCE); there are exactly nSweeps further reduce jobs
+    *      and each writes ZERO shuffle bytes and returns at most
+    *      sufficient-statistic-sized task results (O(m² + m·nObs) ≈ 18 doubles + task-metrics
     *      overhead; bound 256 KB) — vs the ~2 MB/task an
     *      observation-sized collect of this corpus would ship;
     *   2. RECOVERY: every retained posterior transition sample keeps the
@@ -1840,9 +1840,9 @@ object ScaleAudit {
         f"shuffle-write=${j.shuffleWrite}B shuffle-read=${j.shuffleRead}B " +
         f"max-task-result=${j.maxResult}B site=${j.site}")
     }
-    // sweep jobs carry the BayesianHmm job description; the cache-fill
-    // query may span several scheduler jobs (AQE runs the groupByKey
-    // shuffle-map and read stages as separate jobs), and every per-sweep
+    // sweep jobs carry the BayesianHmm job description; every job before
+    // them is a cache fill of the grouping (its sizing job also runs the
+    // one shuffle), and every per-sweep
     // reduce must be a pure cached-partition scan: zero shuffle bytes
     // either direction, task results sufficient-statistic-sized.
     val sweepJobs = jobAggs.filter(_.site.startsWith("BayesianHmm"))

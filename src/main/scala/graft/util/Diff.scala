@@ -1,8 +1,9 @@
 package graft.util
 
 import breeze.linalg.{DenseMatrix, DenseVector, norm}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import graft.core.Trajectories.{TrajCol, TimeCol, FeatCol}
+import graft.lag.TrajectoryScan
 
 /** Derivative estimation beyond plain windows (reference util/diff.py):
   * Fornberg finite-difference weights on arbitrary grids and the
@@ -159,31 +160,24 @@ object Diff {
   }
 
   /** Distributed per-trajectory TV derivative of every feature dimension:
-    * one trajectory per group, sorted scan, emits (traj_id, t, xdot).
-    * Frames are the unit grid t = 0..T-1 scaled by `dt`. */
+    * one trajectory per task item ([[graft.lag.TrajectoryScan.vectors]]),
+    * emits (traj_id, t, xdot). Frames are the unit grid t = 0..T-1 scaled
+    * by `dt`. */
   def tvDerivativeFrame(traj: DataFrame, dim: Int, alpha: Double = 10.0,
                         tol: Double = 1e-5, maxIt: Int = 100, dt: Double = 1.0,
                         fdWindowRadius: Int = 5): DataFrame = {
     val spark = traj.sparkSession
     import spark.implicits._
-    traj.select(TrajCol, TimeCol, FeatCol)
-      .as[(Long, Long, Seq[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (id, it) =>
-        val frames = it.toArray.sortBy(_._2)
-        val t = frames.length
-        if (t < 2 * fdWindowRadius + 2) Iterator.empty // too short for the operator
-        else {
-          val xs = Array.tabulate(t)(i => i * dt)
-          val perDim = (0 until dim).map { d =>
-            val ys = frames.map(_._3(d))
-            tvDerivative(xs, ys, None, alpha, tol, maxIt, fdWindowRadius)
-          }
-          frames.iterator.zipWithIndex.map { case ((_, time, _), i) =>
-            (id, time, (0 until dim).map(d => perDim(d)(i)))
-          }
+    TrajectoryScan.vectors(traj, FeatCol, "Diff.tvDerivativeFrame").flatMap { case (id, ts, frames) =>
+      val t = frames.length
+      if (t < 2 * fdWindowRadius + 2) Iterator.empty // too short for the operator
+      else {
+        val xs = Array.tabulate(t)(i => i * dt)
+        val perDim = (0 until dim).map { d =>
+          tvDerivative(xs, frames.map(_(d)), None, alpha, tol, maxIt, fdWindowRadius)
         }
+        ts.indices.iterator.map(i => (id, ts(i), Array.tabulate(dim)(d => perDim(d)(i))))
       }
-      .toDF(TrajCol, TimeCol, "xdot")
+    }.toDF(TrajCol, TimeCol, "xdot")
   }
 }

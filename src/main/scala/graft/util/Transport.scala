@@ -3,6 +3,7 @@ package graft.util
 import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import graft.lag.TrajectoryScan.Sequence
 
 /** The size-dispatched transport of the iterative fits (Baum-Welch and
   * Bayesian HMM sampling, Lloyd and mini-batch k-means): each sweep of such
@@ -47,6 +48,9 @@ final class Transport[T] private (
         }
     }
 
+  /** The local leg's items, in sweep order; None on the distributed leg. */
+  def localItems: Option[IndexedSeq[T]] = leg.left.toOption
+
   /** Raises `op`'s non-empty precondition when the data weighs nothing. */
   def requireNonEmpty(op: String, what: String): this.type = {
     if (size == 0) throw new IllegalArgumentException(s"$op: requires a non-empty $what")
@@ -58,21 +62,21 @@ object Transport {
 
   /** Items in partition order, `weight` summed for the dispatch. */
   def apply[T](data: Dataset[T], threshold: Long, unit: Int)(weight: T => Long): Transport[T] =
-    build(data, threshold, unit, weight, identity[Array[T]])
+    build(data.rdd, threshold, unit, weight, identity[Array[T]])
 
-  /** Trajectories keyed by id, one per `stats` call, weighed by `length`;
-    * the local leg runs them in id order. */
-  def byId[A](data: Dataset[(Long, A)], threshold: Long)(length: A => Int): Transport[(Long, A)] =
-    build(data, threshold, 1, (t: (Long, A)) => length(t._2).toLong,
-      (arr: Array[(Long, A)]) => arr.sortBy(_._1))
+  /** Trajectories as [[graft.lag.TrajectoryScan]] hands them out, one per
+    * `stats` call, weighed by their frame count; the local leg runs them
+    * in id order. */
+  def byId[V](data: RDD[Sequence[V]], threshold: Long): Transport[Sequence[V]] =
+    build(data, threshold, 1, (s: Sequence[V]) => s._2.length.toLong,
+      (arr: Array[Sequence[V]]) => arr.sortBy(_._1))
 
   /** The local leg over items the caller already holds. */
   def local[T](items: IndexedSeq[T], unit: Int): Transport[T] =
     new Transport(items.length.toLong, Left(items), unit)
 
-  private def build[T](data: Dataset[T], threshold: Long, unit: Int,
+  private def build[T](rdd: RDD[T], threshold: Long, unit: Int,
                        weight: T => Long, order: Array[T] => Array[T]): Transport[T] = {
-    val rdd = data.rdd
     val size = rdd.map(weight).fold(0L)(_ + _)
     val leg =
       if (size <= threshold)

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-level guards over `src/main/scala`: the engine has one k-means
   * (`graft.clustering.LloydKMeans`), so no source may reach for Spark
   * MLlib; and one per-trajectory scan (`graft.lag.TrajectoryScan`), so no
-  * other source sorts partitions by the trajectory key. */
+  * other source sorts partitions by the trajectory key or groups a
+  * trajectory by hand (a `mapGroups`/`flatMapGroups` body that sorts its
+  * group by t, `sortBy(_._2)`). */
 class MainSourcesSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -37,5 +39,29 @@ class MainSourcesSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"per-trajectory sort outside graft.lag.TrajectoryScan in: ${offenders.mkString(", ")}")
+  }
+
+  test("only TrajectoryScan groups a trajectory and sorts it by t") {
+    val grouping = """\.(?:mapGroups|flatMapGroups)\s*[({]""".r
+    // the bracketed body that opens at `from`
+    def body(text: String, from: Int): String = {
+      var depth = 0
+      var i = from
+      do {
+        text(i) match {
+          case '{' | '(' => depth += 1
+          case '}' | ')' => depth -= 1
+          case _ =>
+        }
+        i += 1
+      } while (depth > 0 && i < text.length)
+      text.substring(from, i)
+    }
+    val offenders = sources().collect {
+      case (p, text) if p != "graft/lag/TrajectoryScan.scala" &&
+          grouping.findAllMatchIn(text).exists(m => body(text, m.end - 1).contains("sortBy(_._2)")) => p
+    }
+    assert(offenders.isEmpty,
+      s"per-trajectory grouping outside graft.lag.TrajectoryScan in: ${offenders.mkString(", ")}")
   }
 }

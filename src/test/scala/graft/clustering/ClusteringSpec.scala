@@ -240,6 +240,19 @@ class ClusteringSpec extends SparkSpec with Matchers {
     } finally { df.unpersist(); () }
   }
 
+  test("a local-leg Lloyd fit runs at most 2 jobs and seeds like KMeansPlusPlus.seed, to the bit") {
+    // a local relation: reading a cached or shuffled input would add the
+    // adaptive planner's own materialization job to the count
+    val df = blobs(3000, 41L)
+    for (seed <- Seq(7L, 42L)) withClue(s"seed=$seed: ") {
+      var seeded: ClusterModel = null
+      jobsLaunchedBy { seeded = LloydKMeans.fit(df, 3, maxIter = 0, seed = seed) } should be <= 2
+      seeded.centers.map(_.toSeq).toSeq shouldBe
+        KMeansPlusPlus.seed(df, 3, seed).map(_.toSeq).toSeq
+      jobsLaunchedBy(LloydKMeans.fit(df, 3, seed = seed)) should be <= 2
+    }
+  }
+
   test("LloydKMeans.fit rejects a NaN or infinite feature value, naming the operator") {
     import spark.implicits._
     for (bad <- Seq(Double.NaN, Double.PositiveInfinity); threshold <- Seq(0L, Long.MaxValue)) {

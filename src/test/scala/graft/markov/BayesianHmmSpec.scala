@@ -120,4 +120,33 @@ class BayesianHmmSpec extends SparkSpec with Matchers {
     aStats.mean(0) shouldBe 0.93 +- 0.05
     aStats.mean(1) shouldBe 0.95 +- 0.05
   }
+
+  test("BayesianHmm.fit samples at its lagtime: prior and posterior describe the same lag") {
+    import spark.implicits._
+    // an alternating chain: self-transition 0.1 at lag 1, 0.82 at lag 2
+    val rng = new java.util.SplittableRandom(97L)
+    val data = (0 until 5).flatMap { id =>
+      var h = 0
+      (0 until 1000).map { t =>
+        val row = (id.toLong, t.toLong, h)
+        h = if (rng.nextDouble() < 0.1) h else 1 - h
+        row
+      }
+    }.toDF("traj_id", "t", "state").cache()
+    val post = BayesianHmm.fit(data, nHidden = 2, nObs = 2, nSamples = 20, lagtime = 2,
+      seed = 5L, maxIterMl = 20)
+    def selfT(m: Hmm.HmmModel) = (m.transition(0, 0) + m.transition(1, 1)) / 2
+    selfT(post.prior) shouldBe 0.82 +- 0.05
+    post.samples.map(selfT).sum / post.samples.size shouldBe 0.82 +- 0.05
+    data.unpersist()
+  }
+
+  test("q247 groups its observations once at sf0.01: 5 jobs") {
+    // the grouping's sizing job and collect, the GMM's value histogram and
+    // the GMM-init pair counts; the ML EM and the Gibbs sweeps share the
+    // collected grouping and run driver-local
+    jobsLaunchedBy {
+      graft.SparkEntry.queries("q247_bayes_gauss_hmm")(spark, "/root/testdata/sf0.01").collect()
+    } shouldBe 5
+  }
 }

@@ -379,6 +379,44 @@ class HmmSpec extends SparkSpec with Matchers {
     fails("BayesianHmm.sampleGaussian")(BayesianHmm.sampleGaussian(empty, mlG))
   }
 
+  test("the trajectory groupers reject a null traj_id, t or value, naming the operator " +
+    "and the column") {
+    import spark.implicits._
+    val model = Hmm.HmmModel(DenseMatrix((0.9, 0.1), (0.1, 0.9)),
+      DenseMatrix((0.5, 0.5), (0.5, 0.5)), DenseVector(0.5, 0.5), Double.NegativeInfinity, 0)
+    val modelG = GaussianHmm.GaussianHmmModel(DenseMatrix((0.9, 0.1), (0.1, 0.9)),
+      Array(0.0, 1.0), Array(1.0, 1.0), DenseVector(0.5, 0.5), Double.NegativeInfinity, 0)
+    /** Four frames of trajectory 0 and one frame with `nulled` left null. */
+    def frame[V](nulled: String, valueCol: String, v: V)(
+        toDf: Seq[(Option[Long], Option[Long], Option[V])] => org.apache.spark.sql.DataFrame) =
+      toDf((0 until 4).map(t => (Some(0L), Some(t.toLong), Some(v))) :+
+        ((if (nulled == "traj_id") None else Some(1L)), (if (nulled == "t") None else Some(0L)),
+          (if (nulled == valueCol) None else Some(v))))
+    val states = (n: String) => frame(n, "state", 1)(_.toDF("traj_id", "t", "state"))
+    val values = (n: String) => frame(n, "value", 0.5)(_.toDF("traj_id", "t", "value"))
+    val vectors = (n: String) => frame(n, "features", Seq(0.5))(_.toDF("traj_id", "t", "features"))
+    val cases: Seq[(String, String, org.apache.spark.sql.DataFrame => Any)] = Seq(
+      ("Hmm.fit", "state", Hmm.fit(_, nHidden = 2, nObs = 2)),
+      ("Hmm.viterbi", "state", Hmm.viterbi(_, model, nObs = 2).collect()),
+      ("GaussianHmm.fit", "value", GaussianHmm.fit(_, 2)),
+      ("GaussianHmm.viterbi", "value", GaussianHmm.viterbi(_, modelG).collect()),
+      ("Diff.tvDerivativeFrame", "features", graft.util.Diff.tvDerivativeFrame(_, 1).collect()))
+    for ((op, valueCol, run) <- cases; nulled <- Seq("traj_id", "t", valueCol)) {
+      val df = valueCol match {
+        case "state" => states(nulled)
+        case "value" => values(nulled)
+        case _ => vectors(nulled)
+      }
+      val e = intercept[Exception](run(df))
+      def chain(t: Throwable): Seq[Throwable] =
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
+      withClue(s"$op with a null $nulled: ${e.getMessage}") {
+        chain(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage.contains(op) && c.getMessage.contains(s"(got a null $nulled)")) shouldBe true
+      }
+    }
+  }
+
   /** Two overlapping modes on a 0.05 grid: heavy duplicate values. */
   private def gridMixture(n: Int, seed: Long): org.apache.spark.sql.DataFrame = {
     import spark.implicits._

@@ -1,10 +1,12 @@
 package graft.util
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.matchers.should.Matchers
 import graft.SparkSpec
+import graft.lag.TrajectoryScan.Sequence
 import TransportSpec._
 
 /** The iterative-fit transport: the local leg is the plain sequential
@@ -31,6 +33,10 @@ class TransportSpec extends SparkSpec with Matchers {
       .union(sc.parallelize(b, 2)))
   }
 
+  /** The items as [[graft.lag.TrajectoryScan]] sequences, t = 0, 1, ... */
+  private def sequences(ds: Dataset[(Long, Array[Double])]): RDD[Sequence[Double]] =
+    ds.rdd.map { case (id, xs) => (id, Array.tabulate(xs.length)(_.toLong), xs) }
+
   /** The local leg's definition, written as a plain sequential loop. */
   private def fold(xs: Seq[(Long, Array[Double])], unit: Int): Array[Double] =
     xs.grouped(unit).map(c => stats(c.iterator)).reduceLeft(merge)
@@ -42,9 +48,9 @@ class TransportSpec extends SparkSpec with Matchers {
     val ds = frame(xs).cache()
     try {
       ds.rdd.mapPartitions(it => Iterator(it.size)).collect() should contain(0)
-      val byId = Transport.byId(ds, Long.MaxValue)(_.length)
+      val byId = Transport.byId(sequences(ds), Long.MaxValue)
       byId.size shouldBe xs.map(_._2.length.toLong).sum
-      bits(byId.sweep("unused")(stats)(merge)) shouldBe bits(fold(xs.sortBy(_._1), 1))
+      bits(byId.sweep("unused")(seqStats)(merge)) shouldBe bits(fold(xs.sortBy(_._1), 1))
       // partition order, chunks below the item count (the last one short)
       val inOrder = ds.collect().toSeq
       for (unit <- Seq(1, 10, 97, 1000)) {
@@ -76,9 +82,9 @@ class TransportSpec extends SparkSpec with Matchers {
   }
 
   test("the distributed leg runs one tagged job per sweep and leaves the cache") {
-    val ds = frame(items(97, 17L)).persist(StorageLevel.MEMORY_AND_DISK)
+    val ds = sequences(frame(items(97, 17L))).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val t = Transport.byId(ds, 0L)(_.length)
+      val t = Transport.byId(ds, 0L)
       val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val listener = new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -86,15 +92,15 @@ class TransportSpec extends SparkSpec with Matchers {
             .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
       }
       sc.addSparkListener(listener)
-      try (0 until 3).foreach(i => t.sweep(s"TransportSpec sweep $i")(stats)(merge))
+      try (0 until 3).foreach(i => t.sweep(s"TransportSpec sweep $i")(seqStats)(merge))
       finally {
         org.apache.spark.sql.GraftExpressionBridge.drainListenerBus(sc)
         sc.removeSparkListener(listener)
       }
       descs.toArray.toSeq shouldBe (0 until 3).map(i => s"TransportSpec sweep $i")
-      ds.storageLevel shouldBe StorageLevel.MEMORY_AND_DISK
-      Transport.byId(ds, Long.MaxValue)(_.length).sweep("unused")(stats)(merge)
-      ds.storageLevel shouldBe StorageLevel.MEMORY_AND_DISK
+      ds.getStorageLevel shouldBe StorageLevel.MEMORY_AND_DISK
+      Transport.byId(ds, Long.MaxValue).sweep("unused")(seqStats)(merge)
+      ds.getStorageLevel shouldBe StorageLevel.MEMORY_AND_DISK
     } finally ds.unpersist()
   }
 }
@@ -108,4 +114,6 @@ object TransportSpec {
     Array.tabulate(3)(i => x(i) + y(i))
   def stats(it: Iterator[(Long, Array[Double])]): Array[Double] =
     it.map(one).reduce(merge)
+  def seqStats(it: Iterator[Sequence[Double]]): Array[Double] =
+    stats(it.map(s => (s._1, s._3)))
 }
