@@ -21,8 +21,14 @@ case class LagRow(x: Array[Double], y: Array[Double], w: Double)
   * All state is O(d^2) doubles, independent of row count, so a 100 TB scan
   * aggregates into a few KB per task.
   *
-  * Numerics: raw sums with Kahan compensation. Compensated accumulation keeps
-  * the error O(eps) instead of O(N*eps); centering happens once at finalize
+  * Numerics: raw sums with Neumaier (improved Kahan) compensation: each
+  * sum keeps a running total and the exact rounding error of every
+  * addition, `mergeIn` carries the other buffer's error along, and
+  * finalize adds it back. The total is then the correctly rounded sum in
+  * practice, whatever the partitioning and merge order, so a mean that
+  * sits on a 6-dp rounding boundary rounds the same way on every layout
+  * (plain Kahan that dropped the merged buffers' compensation flipped
+  * q03's m0_3 between partitionings). Centering happens once at finalize
   * (Bessel applied there too, cf. _running_moments.py:69-85).
   */
 case class MomentsBuf(
@@ -44,17 +50,25 @@ case class MomentsBuf(
     syy = new Array[Double](dd); syyc = new Array[Double](dd)
   }
 
+  /** The rounding error of `a + b` (which rounds to `t`), exactly. */
+  @inline private def err(a: Double, b: Double, t: Double): Double =
+    if (math.abs(a) >= math.abs(b)) (a - t) + b else (b - t) + a
+
   @inline private def kadd(s: Array[Double], c: Array[Double], i: Int, v: Double): Unit = {
-    val yv = v - c(i)
-    val t = s(i) + yv
-    c(i) = (t - s(i)) - yv
+    val t = s(i) + v
+    c(i) += err(s(i), v, t)
     s(i) = t
+  }
+
+  @inline private def addWeight(v: Double, vc: Double): Unit = {
+    val t = w + v
+    wc += err(w, v, t) + vc
+    w = t
   }
 
   def add(x: Array[Double], y: Array[Double], weight: Double): Unit = {
     init(x.length)
-    val yk = weight - wc
-    val tw = w + yk; wc = (tw - w) - yk; w = tw
+    addWeight(weight, 0.0)
     n += 1
     var i = 0
     while (i < d) {
@@ -75,23 +89,21 @@ case class MomentsBuf(
   def mergeIn(o: MomentsBuf): Unit = {
     if (o.d == 0) return
     init(o.d)
-    val yk = o.w - wc - o.wc
-    val tw = w + yk; wc = (tw - w) - yk; w = tw
+    addWeight(o.w, o.wc)
     n += o.n
-    var i = 0
-    while (i < d) {
-      kadd(sx, sxc, i, o.sx(i)); kadd(sy, syc, i, o.sy(i))
-      i += 1
+    def merge(s: Array[Double], c: Array[Double], os: Array[Double], oc: Array[Double]): Unit = {
+      var k = 0
+      while (k < s.length) { kadd(s, c, k, os(k)); c(k) += oc(k); k += 1 }
     }
-    var k = 0
-    val dd = d * d
-    while (k < dd) {
-      kadd(sxx, sxxc, k, o.sxx(k))
-      kadd(sxy, sxyc, k, o.sxy(k))
-      kadd(syy, syyc, k, o.syy(k))
-      k += 1
-    }
+    merge(sx, sxc, o.sx, o.sxc); merge(sy, syc, o.sy, o.syc)
+    merge(sxx, sxxc, o.sxx, o.sxxc); merge(sxy, sxyc, o.sxy, o.sxyc)
+    merge(syy, syyc, o.syy, o.syyc)
   }
+
+  /** The compensated totals: weight, then each sum plus its error. */
+  def totalWeight: Double = w + wc
+  def total(s: Array[Double], c: Array[Double]): Array[Double] =
+    Array.tabulate(s.length)(k => s(k) + c(k))
 }
 
 object MomentsBuf {
@@ -126,10 +138,10 @@ class MomentsAggregator(bessel: Boolean = true)
     val d = b.d
     if (d == 0) return CovarianceModel(0, 0, 0, Array.empty, Array.empty,
       Array.empty, Array.empty, Array.empty)
-    val wSum = b.w
+    val wSum = b.totalWeight
     val denom = if (bessel) wSum - 1.0 else wSum
-    val m0 = Array.tabulate(d)(i => b.sx(i) / wSum)
-    val mt = Array.tabulate(d)(i => b.sy(i) / wSum)
+    val m0 = b.total(b.sx, b.sxc).map(_ / wSum)
+    val mt = b.total(b.sy, b.syc).map(_ / wSum)
     def cov(s: Array[Double], ma: Array[Double], mb: Array[Double]) =
       Array.tabulate(d * d) { k =>
         val i = k / d; val j = k % d
@@ -137,7 +149,8 @@ class MomentsAggregator(bessel: Boolean = true)
       }
     CovarianceModel(wSum, b.n, d,
       m0, mt,
-      cov(b.sxx, m0, m0), cov(b.sxy, m0, mt), cov(b.syy, mt, mt))
+      cov(b.total(b.sxx, b.sxxc), m0, m0), cov(b.total(b.sxy, b.sxyc), m0, mt),
+      cov(b.total(b.syy, b.syyc), mt, mt))
   }
 
   def bufferEncoder: Encoder[MomentsBuf] = Encoders.product[MomentsBuf]

@@ -1,12 +1,14 @@
 package graft.decomposition
 
+import scala.collection.mutable
 import breeze.linalg.{DenseMatrix, DenseVector, *, sum => bsum}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 import graft.agg.Covariance
 import graft.basis.Observable
 import graft.kernels.Kernel
-import graft.lag.Lag
+import graft.lag.{Lag, TrajectoryScan}
 import graft.linalg.LinAlg
 import graft.core.Trajectories.FeatCol
 
@@ -40,12 +42,9 @@ object Edmd {
     * — callers auditing the normal equations (q49) check against it
     * directly instead of paying a second full lift+aggregate scan. */
   def fitWithCov(traj: DataFrame, basis: Observable, tau: Int, inputDim: Int,
-                 operator: String = "koopman",
-                 pairsOpt: Option[DataFrame] = None): (EdmdModel, graft.agg.CovarianceModel) = {
+                 operator: String = "koopman"): (EdmdModel, graft.agg.CovarianceModel) = {
     val p = basis.outputDim(inputDim)
-    // pairsOpt: a caller-supplied lag-pair frame at the same tau (the
-    // session-memoized liPairs) — skips re-deriving the window sort
-    val pairs = pairsOpt.getOrElse(Lag.pairs(traj, tau))
+    val pairs = Lag.pairs(traj, tau)
       .select(basis(col("x").cast("array<double>"), inputDim).as("x"),
         basis(col("y").cast("array<double>"), inputDim).as("y"))
     val cov = Covariance.fit(pairs, bessel = false)
@@ -71,28 +70,59 @@ object Edmd {
 /** Shared helper: deterministic size-capped landmark sample of lagged
   * pairs, collected to the driver for T x T gram-matrix methods. The cap is
   * the scale contract: kernel-gram methods are inherently O(T^2) memory, so
-  * at 100 TB they run on a bounded landmark subset (Nystrom regime) — the
-  * subset draw itself is a distributed seeded hash, never a full collect. */
+  * at 100 TB they run on a bounded landmark subset (Nystrom regime).
+  *
+  * The draw is a bottom-k hash sample (the mergeable sampling sketch): one
+  * [[TrajectoryScan.fold]] pairs each frame x with the frame `tau` later in
+  * its trajectory (a ring of `tau` frames, as `Lag.pairs` pairs them) and
+  * keeps, per partition, the `maxRows` pairs with the smallest
+  * `xxhash64(traj_id, t, seed)` of x, ties broken by (traj_id, t); merging
+  * two such sets keeps the smallest `maxRows` of their union. So the
+  * landmarks, and their order (ascending by that key), do not depend on
+  * how the input is partitioned. A pair with a null x or y is skipped. */
 object KernelData {
-  /** `pairsOpt`: a caller-supplied lag-pair frame (columns traj_id, t, x,
-    * y at the SAME tau) — the query registry's session-memoized liPairs
-    * materialization; without it every kernel fit re-derived the window
-    * (two full sorts per fit: the sizing count and the landmark collect). */
+
+  /** One candidate landmark pair and its sample key. */
+  private final case class Landmark(hash: Long, id: Long, t: Long,
+                                    x: Array[Double], y: Array[Double])
+
+  private val byKey: Ordering[Landmark] = Ordering.by((l: Landmark) => (l.hash, l.id, l.t))
+
+  /** The pairs of `traj`'s `featCol` at lag `tau` with the `maxRows`
+    * smallest keys, as (xs, ys) in key order. */
   def collectPairs(traj: DataFrame, tau: Int, maxRows: Int, seed: Long = 42L,
-                   featCol: String = FeatCol,
-                   pairsOpt: Option[DataFrame] = None): (Array[Array[Double]], Array[Array[Double]]) = {
-    val pairs = pairsOpt.getOrElse(
-      Lag.pairs(traj.withColumnRenamed(featCol, FeatCol), tau))
-    val n = pairs.count()
-    val frac = math.min(1.0, maxRows.toDouble / math.max(1L, n))
-    val sampled = (if (frac < 1.0)
-      pairs.where(pmod(xxhash64(col("traj_id"), col("t"), lit(seed)), lit(1000000)) <
-        lit((frac * 1000000).toLong))
-    else pairs)
-      .select(col("x").cast("array<double>"), col("y").cast("array<double>"))
-      .limit(maxRows)
-      .collect()
-    (sampled.map(_.getSeq[Double](0).toArray), sampled.map(_.getSeq[Double](1).toArray))
+                   featCol: String = FeatCol): (Array[Array[Double]], Array[Array[Double]]) = {
+    require(tau > 0 && maxRows > 0, "KernelData.collectPairs: requires tau > 0 and maxRows > 0")
+    // per partition: the current trajectory's last `tau` frames (t, x)
+    // and a max-heap holding the `maxRows` smallest keys seen so far
+    final class Acc extends Serializable {
+      val ts = new Array[Long](tau)
+      val xs = new Array[Array[Double]](tau)
+      var pos = 0L
+      val heap = mutable.PriorityQueue.empty[Landmark](byKey)
+      def offer(l: Landmark): Unit =
+        if (heap.size < maxRows) heap += l
+        else if (byKey.lt(l, heap.head)) { heap.dequeue(); heap += l }
+    }
+    val acc = TrajectoryScan.fold(traj, Seq(col(featCol).cast("array<double>")),
+        s"KernelData landmarks (tau=$tau, maxRows=$maxRows)")(new Acc) { (a, r, first) =>
+      if (first) a.pos = 0L
+      val slot = (a.pos % tau).toInt
+      val y = if (r.isNullAt(2)) null else r.getArray(2).toDoubleArray()
+      if (a.pos >= tau && a.xs(slot) != null && y != null) {
+        val id = if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
+        val t = a.ts(slot)
+        // xxhash64(traj_id, t, seed): Spark's hash chain from seed 42,
+        // skipping a null traj_id as Spark does
+        val h0 = if (r.isNullAt(0)) 42L else XXH64.hashLong(id, 42L)
+        a.offer(Landmark(XXH64.hashLong(seed, XXH64.hashLong(t, h0)), id, t, a.xs(slot), y))
+      }
+      a.ts(slot) = if (r.isNullAt(1)) Long.MinValue else r.getLong(1)
+      a.xs(slot) = y
+      a.pos += 1
+    } { (a, b) => b.heap.foreach(a.offer); a }
+    val picked = acc.heap.toArray.sorted(byKey)
+    (picked.map(_.x), picked.map(_.y))
   }
 }
 
@@ -111,10 +141,8 @@ object KernelEdmd {
   }
 
   def fit(traj: DataFrame, kernel: Kernel, tau: Int, epsilon: Double = 0.0,
-          maxLandmarks: Int = 500, seed: Long = 42L,
-          pairsOpt: Option[DataFrame] = None): KernelEdmdModel = {
-    val (xs, ys) = KernelData.collectPairs(traj, tau, maxLandmarks, seed,
-      pairsOpt = pairsOpt)
+          maxLandmarks: Int = 500, seed: Long = 42L): KernelEdmdModel = {
+    val (xs, ys) = KernelData.collectPairs(traj, tau, maxLandmarks, seed)
     val n = xs.length
     val g0 = DenseMatrix.tabulate(n, n)((i, j) => kernel.applyArrays(xs(i), xs(j)))
     val g1 = DenseMatrix.tabulate(n, n)((i, j) => kernel.applyArrays(xs(i), ys(j)))
@@ -143,10 +171,8 @@ object KernelCca {
   }
 
   def fit(traj: DataFrame, kernel: Kernel, tau: Int, nEigs: Int,
-          epsilon: Double = 1e-6, maxLandmarks: Int = 500, seed: Long = 42L,
-          pairsOpt: Option[DataFrame] = None): KernelCcaModel = {
-    val (xs, ys) = KernelData.collectPairs(traj, tau, maxLandmarks, seed,
-      pairsOpt = pairsOpt)
+          epsilon: Double = 1e-6, maxLandmarks: Int = 500, seed: Long = 42L): KernelCcaModel = {
+    val (xs, ys) = KernelData.collectPairs(traj, tau, maxLandmarks, seed)
     val n = xs.length
     val g0raw = DenseMatrix.tabulate(n, n)((i, j) => kernel.applyArrays(xs(i), xs(j)))
     val g1raw = DenseMatrix.tabulate(n, n)((i, j) => kernel.applyArrays(ys(i), ys(j)))
@@ -186,12 +212,10 @@ object Kvad {
 
   def fit(traj: DataFrame, kernel: Kernel, tau: Int, chi: Observable,
           inputDim: Int, dim: Int = -1, epsilon: Double = 1e-6,
-          maxLandmarks: Int = 500, seed: Long = 42L,
-          pairsOpt: Option[DataFrame] = None): KvadModel = {
+          maxLandmarks: Int = 500, seed: Long = 42L): KvadModel = {
     val chiDim = chi.outputDim(inputDim)
     // landmark sample for chi_x, chi_y, and y (gram side)
-    val (xs, ys) = KernelData.collectPairs(traj, tau, maxLandmarks, seed,
-      pairsOpt = pairsOpt)
+    val (xs, ys) = KernelData.collectPairs(traj, tau, maxLandmarks, seed)
     val n = xs.length
     def lift(rows: Array[Array[Double]]): DenseMatrix[Double] = {
       // driver-side evaluation of the observable on the landmark set: reuse

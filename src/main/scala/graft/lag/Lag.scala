@@ -13,7 +13,8 @@ import graft.core.Trajectories.{TrajCol, TimeCol, FeatCol}
   * Spark-first design: this is NOT a self-join. A `lead(features, tau)` over
   * `Window.partitionBy(traj_id).orderBy(t)` produces the pair columns with a
   * single shuffle by `traj_id` (and zero shuffles when the table is already
-  * hash-distributed by traj_id, e.g. bucketed at ingest). At 100 TB this is
+  * hash-distributed by traj_id and ordered by t, e.g. laid out by
+  * `TrajectoryScan.layout` or bucketed at ingest). At 100 TB this is
   * the difference between one exchange and a full shuffle join of the table
   * with itself.
   */

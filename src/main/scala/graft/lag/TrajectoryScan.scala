@@ -3,26 +3,34 @@ package graft.lag
 import scala.collection.mutable
 import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.{QueryExecution, SQLExecutionRDD, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.storage.StorageLevel
 import graft.core.Trajectories.{TrajCol, TimeCol}
+import graft.util.{JobTag, PreparedPlan}
 
 /** The one per-trajectory scan (reference `TransitionCountEstimator` and
   * `timeshifted_split` stream each trajectory once): the frame is projected
   * to (traj_id LONG, t LONG, the caller's columns), shuffled once by
-  * `traj_id` and sorted by (traj_id, t) within each partition. Two walks
-  * share that plan and its boundary rule. [[fold]] runs a kernel over each
-  * partition and merges the per-partition accumulators with one tagged
-  * `treeAggregate`, all in one Spark job, so the driver receives one
-  * accumulator per partition whatever the input size; the count kernels of
+  * `traj_id` and sorted by (traj_id, t) within each partition, SURVEY
+  * §1.1's trajectory-table layout. Its plan is prepared without adaptive
+  * execution ([[graft.util.PreparedPlan]]), so a scan is one Spark job.
+  * Two walks share that plan and its boundary rule. [[fold]] runs a kernel
+  * over each partition and merges the per-partition accumulators with one
+  * tagged `treeAggregate`, so the driver receives one accumulator per
+  * partition whatever the input size; the count kernels of
   * `EffectiveCounts`, `GaussianHmm.initialGuessGmm` and
-  * `Validation.multiLagCounts` run on it. [[states]], [[values]] and
-  * [[vectors]] hand out each trajectory whole, in t order: every HMM fit,
-  * sampler and decoder, q73 and `Diff.tvDerivativeFrame` group their
-  * trajectories through them. */
+  * `Validation.multiLagCounts` and the kernel methods' landmark draw run
+  * on it. [[states]], [[values]] and [[vectors]] hand out each trajectory
+  * whole, in t order: every HMM fit, sampler and decoder, q73 and
+  * `Diff.tvDerivativeFrame` group their trajectories through them.
+  * [[layout]] keeps the layout: the session's shared trajectory tables
+  * (`QShared.liTraj`, `QShared.dtrajEv`) are persisted in it once, and
+  * every scan and `partitionBy(traj_id).orderBy(t)` window over them then
+  * shuffles and sorts nothing. */
 object TrajectoryScan {
 
   /** One trajectory: its id, its t values and its values, in t order. */
@@ -35,7 +43,7 @@ object TrajectoryScan {
     * trajectory. The job carries the description `desc`. */
   def fold[A: ClassTag](df: DataFrame, valueCols: Seq[Column], desc: String)(zero: => A)(
       step: (A, InternalRow, Boolean) => Unit)(merge: (A, A) => A): A = {
-    graft.util.JobTag.withDescription(df.sparkSession.sparkContext, desc) {
+    JobTag.withDescription(df.sparkSession.sparkContext, desc) {
       scan(df, valueCols).mapPartitions { rows =>
         val acc = zero
         var first = true
@@ -98,19 +106,42 @@ object TrajectoryScan {
       }
     }
 
+  /** `df` laid out once for every later scan and window: its rows are
+    * projected, shuffled and sorted as [[plan]] does (traj_id and t first,
+    * then the other columns in order), persisted by one tagged job, and
+    * handed back as a frame whose plan declares that layout,
+    * hash-partitioned by traj_id and ordered by (traj_id, t). A
+    * [[fold]], a [[states]] grouping or a `partitionBy(traj_id)
+    * .orderBy(t)` window over it then plans no exchange and no sort. The
+    * persisted rows keep their lineage (a lost block is recomputed from
+    * `df`), which is only sound when `df`'s plan is deterministic. */
+  def layout(df: DataFrame, op: String): DataFrame = {
+    require(df.queryExecution.analyzed.deterministic,
+      s"$op: a laid-out frame is recomputed from its lineage, so its plan must be deterministic")
+    val ds = scanFrame(df, df.columns.toSeq.filterNot(Set(TrajCol, TimeCol)).map(col))
+    val p = PreparedPlan(ds)
+    val rows = PreparedPlan.rows(ds, p).map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    JobTag.withDescription(df.sparkSession.sparkContext, s"$op layout") { rows.count() }
+    GraftExpressionBridge.laidOut(df.sparkSession, rows, p, ds.queryExecution.optimizedPlan.stats)
+  }
+
   /** The scan's rows: [[plan]] executed, outside any SQL execution. */
-  private def scan(df: DataFrame, valueCols: Seq[Column]): RDD[InternalRow] =
-    new SQLExecutionRDD(plan(df, valueCols).execute(), df.sparkSession.sessionState.conf)
+  private def scan(df: DataFrame, valueCols: Seq[Column]): RDD[InternalRow] = {
+    val ds = scanFrame(df, valueCols)
+    PreparedPlan.rows(ds, PreparedPlan(ds))
+  }
 
   /** The scan's physical plan, prepared without adaptive execution, which
     * would run the shuffle as a job of its own. */
-  private[graft] def plan(df: DataFrame, valueCols: Seq[Column]): SparkPlan = {
-    val qe = df.select(col(TrajCol).cast("long") +: col(TimeCol).cast("long") +: valueCols: _*)
+  private[graft] def plan(df: DataFrame, valueCols: Seq[Column]): SparkPlan =
+    PreparedPlan(scanFrame(df, valueCols))
+
+  /** (traj_id LONG, t LONG, `valueCols`), hash-partitioned by traj_id and
+    * sorted by (traj_id, t) within each partition. */
+  private def scanFrame(df: DataFrame, valueCols: Seq[Column]): DataFrame =
+    df.select(col(TrajCol).cast("long") +: col(TimeCol).cast("long") +: valueCols: _*)
       .repartition(col(TrajCol))
       .sortWithinPartitions(TrajCol, TimeCol)
-      .queryExecution
-    QueryExecution.prepareExecutedPlan(qe.sparkSession, qe.sparkPlan)
-  }
 
   /** The last `lags.max` states of the current trajectory: the ring-and-
     * pair step of the state-pair kernels. A negative state is a blank: it

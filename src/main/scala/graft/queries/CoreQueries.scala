@@ -124,7 +124,7 @@ private[graft] object CoreQueries extends QueryFamily {
     // residual is a max-abs array diff that must be exactly 0; the
     // files go through a temp dir (driver-side, model-sized). ------------
     "q250_model_persistence" -> ((s, dir) => {
-      val cov = Covariance.fit(liPairs(s, dir))
+      val cov = Covariance.fit(Lag.pairs(liTraj(s, dir), 1))
       val vamp = graft.decomposition.Vamp.fitFromCovariance(cov, 1)
       // bench runs this query repeatedly — clean the temp artifacts up on
       // JVM exit instead of littering /tmp per execution
@@ -369,8 +369,8 @@ private[graft] object CoreQueries extends QueryFamily {
     // mean weight is a hash-gated zero residual and the pair count has an
     // exact SQL twin.
     "q63_koopman_weights" -> ((s, dir) => {
-      // session-memoized lag-pair frame (liPairs, the q29 pattern)
-      val pairs = liPairs(s, dir)
+      // lag pairs over the laid-out trajectories (the q29 pattern)
+      val pairs = Lag.pairs(liTraj(s, dir), 1)
       val row = {
         val wm = graft.agg.KoopmanWeighting.fromCovariance(
           graft.agg.Covariance.fit(pairs))
@@ -410,7 +410,7 @@ private[graft] object CoreQueries extends QueryFamily {
     // rows (the associativity the treeAggregate combine tree relies on),
     // with the pair count anchored by exact SQL over lineitem. ----------
     "q148_moments_combine" -> ((s, dir) => {
-      val rows = liPairs(s, dir).where(col("traj_id") % 17 === 0)
+      val rows = Lag.pairs(liTraj(s, dir), 1).where(col("traj_id") % 17 === 0)
         .orderBy(col("traj_id"), col("t"))
         .select(col("traj_id"), col("x"), col("y")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getSeq[Double](2).toArray))

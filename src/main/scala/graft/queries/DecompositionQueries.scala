@@ -35,10 +35,10 @@ private[graft] object DecompositionQueries extends QueryFamily {
     // scan -> lag window -> covariance -> driver eig -> broadcast
     // projection -> covariance is verified end to end, not rows-only.
     "q29_tica_projection" -> ((s, dir) => {
-      // session-memoized lag-pair frame (liPairs): materialized once,
-      // shared with q30/q63/q73 — fit + the projected re-covariance both
-      // read the checkpointed blocks instead of re-running scan+window
-      val pairs = liPairs(s, dir)
+      // lag pairs over the laid-out lineitem trajectories: a narrow
+      // window, so the fit and the projected re-covariance both read the
+      // persisted rows with no shuffle or sort
+      val pairs = Lag.pairs(liTraj(s, dir), 1)
       val cov = Covariance.fit(pairs)
       val m = graft.decomposition.Tica.fitFromCovariance(cov, 1, dim = 2)
       val proj = pairs.select(col("traj_id"), col("t"),
@@ -59,7 +59,7 @@ private[graft] object DecompositionQueries extends QueryFamily {
     // flips the hash.
     "q30_vamp_singular" -> ((s, dir) => {
       import breeze.linalg.DenseMatrix
-      val cov = Covariance.fit(liPairs(s, dir))
+      val cov = Covariance.fit(Lag.pairs(liTraj(s, dir), 1))
       val m = graft.decomposition.Vamp.fitFromCovariance(cov, 1)
       val d = cov.d; val k = m.k
       val c00 = LinAlg.fromFlat(cov.cov00, d)
@@ -128,7 +128,7 @@ private[graft] object DecompositionQueries extends QueryFamily {
       // r04 shape re-scanned the data to rebuild the same moments — same
       // code path, so no extra independence, 2x the data cost)
       val (m, cov) = graft.decomposition.Edmd.fitWithCov(traj, basis, tau = 1,
-        inputDim = 4, pairsOpt = Some(liPairs(s, dir)))
+        inputDim = 4)
       val p = m.p
       def raw(c: Array[Double], ma: Array[Double], mb: Array[Double]) =
         DenseMatrix.tabulate(p, p)((i, j) => c(i * p + j) + ma(i) * mb(j))
@@ -378,7 +378,7 @@ private[graft] object DecompositionQueries extends QueryFamily {
     "q146_kernel_cca" -> ((s, dir) => {
       val m = graft.decomposition.KernelCca.fit(liTraj(s, dir),
         graft.kernels.GaussianKernel(1.0), tau = 1, nEigs = 5,
-        maxLandmarks = 200, seed = 42L, pairsOpt = Some(liPairs(s, dir)))
+        maxLandmarks = 200, seed = 42L)
       val ev = m.eigenvalues
       val inUnit = ev.map(v => math.max(0.0, math.max(-v, v - 1.0 - 1e-3))).max
       val sorted = if (ev.zip(ev.tail).forall { case (a, b) =>
@@ -401,8 +401,7 @@ private[graft] object DecompositionQueries extends QueryFamily {
       val basis = graft.basis.Monomials(1)
       val m = graft.decomposition.Kvad.fit(liTraj(s, dir),
         graft.kernels.GaussianKernel(1.0), tau = 1, chi = basis,
-        inputDim = 4, maxLandmarks = 200, seed = 42L,
-        pairsOpt = Some(liPairs(s, dir)))
+        inputDim = 4, maxLandmarks = 200, seed = 42L)
       val sv = m.singularValues
       val nonneg = sv.map(v => math.max(0.0, -v)).max
       val sorted = if (sv.zip(sv.tail).forall { case (a, b) => a >= b - 1e-12 })

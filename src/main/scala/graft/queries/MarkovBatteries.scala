@@ -63,7 +63,7 @@ private[graft] object MarkovBatteryQueries extends QueryFamily {
       checks("pcca_membership_nonneg") = maxAbs(
         (for (i <- 0 until n; k <- 0 until 2) yield math.min(pcca.memberships(i, k), 0.0)))
       // VAMP whitening identity: U' C00 U = I on the kept components
-      val cov = Covariance.fit(liPairs(s, dir))
+      val cov = Covariance.fit(Lag.pairs(liTraj(s, dir), 1))
       val vamp = graft.decomposition.Vamp.fitFromCovariance(cov, 1)
       val d = cov.d; val k = vamp.k
       val c00 = DenseMatrix.tabulate(d, d)((i, j) => cov.cov00(i * d + j))

@@ -225,7 +225,7 @@ private[graft] object PipelineQueries extends QueryFamily {
     // reference ships as save_/load_model. ------------------------------
     "q141_persistence_roundtrip" -> ((s, dir) => {
       val model = graft.decomposition.Tica.fitFromCovariance(
-        Covariance.fit(liPairs(s, dir)), tau = 1, dim = 2)
+        Covariance.fit(Lag.pairs(liTraj(s, dir), 1)), tau = 1, dim = 2)
       val tmp = java.nio.file.Files.createTempDirectory("graft-q141").toString
       graft.io.Persistence.saveJson(
         graft.io.Persistence.koopmanToJson(model), s"$tmp/koopman.json")

@@ -1,20 +1,19 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.Materialize.FrozenOps
 
 import graft.core.Trajectories
-import graft.lag.Lag
+import graft.lag.TrajectoryScan
 import graft.markov.TransitionCounting
 import graft.dedup.Dedup
 
 /** Helpers shared by every query family: canonical testdata readers, the
-  * per-(session, dir) materialized-frame memo (liTraj/liPairs/dtrajEv and
-  * the verified dup-edge set), oracle-parity rounding, and the small
-  * model-to-DataFrame emitters. Split out of the SparkEntry monolith
-  * (VERDICT r06 item 8); bodies are unchanged. */
+  * per-(session, dir) memo of shared frames (the laid-out liTraj and
+  * dtrajEv, the frozen dup-edge set and postings), oracle-parity
+  * rounding, and the small model-to-DataFrame emitters. */
 private[graft] object QShared {
 
   // deterministic frame index over events (ties broken by event_id)
@@ -24,37 +23,45 @@ private[graft] object QShared {
   private[graft] def docs(s: SparkSession, dir: String) = Trajectories.table(s, dir, "documents")
   private[graft] def emb(s: SparkSession, dir: String) = Trajectories.table(s, dir, "embeddings")
 
-  // Per-(session, dir) materialized canonical frames. A production run
-  // materializes its canonical trajectory table and verified dup-edge set
-  // ONCE and every downstream consumer reads the materialization; the
-  // query rungs below share them the same way instead of re-deriving the
-  // scan+window (or the whole minhash+verify pipeline) per query.
-  // localCheckpoint is eager and safe in local mode (blocks spill to
-  // disk; no executor loss); at cluster scale this is a parquet/Delta
-  // materialization step.
+  // Per-(session, dir) shared frames: a production run materializes its
+  // canonical trajectory tables and verified dup-edge set ONCE and every
+  // downstream consumer reads them; the queries share them the same way
+  // instead of re-deriving the scan+window (or the whole minhash+verify
+  // pipeline) per query. The key holds the session's UUID, so two live
+  // sessions never share a frame. The trajectory tables are laid out
+  // (TrajectoryScan.layout: persisted with their lineage, declaring their
+  // traj_id partitioning and (traj_id, t) order, so scans and lag windows
+  // over them shuffle nothing); the other frames are frozen and pinned,
+  // so a harness that eagerly unfreezes a consumer's lineage
+  // (Verify/Bench per-query release) walks past them instead of handing
+  // DEAD frames to the next query (47/268 CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
+  // r17 draft).
   private[graft] val frameMemo =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[graft] def memoFrame(s: SparkSession, dir: String, key: String)
-                       (build: => DataFrame): DataFrame =
+  private def memo(s: SparkSession, dir: String, key: String)
+                  (build: => DataFrame): DataFrame =
     frameMemo.computeIfAbsent(
-      System.identityHashCode(s) + "|" + dir + "|" + key,
-      // pin: these frames outlive any one query — a harness that eagerly
-      // unfreezes a consumer's lineage (Verify/Bench per-query release)
-      // must walk past them, or the memo hands DEAD frames to the next
-      // query (47/268 CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, r17 draft)
-      _ => graft.util.Materialize.pin(build.frozen()))
+      GraftExpressionBridge.sessionUUID(s) + "|" + dir + "|" + key,
+      _ => build)
 
-  /** lineitem 4-feature trajectories, materialized once per session. */
+  /** `build`, frozen and pinned, once per (session, dir, key). */
+  private[graft] def memoFrame(s: SparkSession, dir: String, key: String)
+                              (build: => DataFrame): DataFrame =
+    memo(s, dir, key)(graft.util.Materialize.pin(build.frozen()))
+
+  private def laidOutMemo(s: SparkSession, dir: String, key: String)
+                         (build: => DataFrame): DataFrame =
+    memo(s, dir, key)(TrajectoryScan.layout(build, s"QShared.$key"))
+
+  /** lineitem 4-feature trajectories, laid out once per session. Lag
+    * pairs over them (`Lag.pairs(liTraj(s, dir), 1)`) are a narrow
+    * window. */
   private[graft] def liTraj(s: SparkSession, dir: String): DataFrame =
-    memoFrame(s, dir, "liTraj")(Trajectories.fromLineitem(s, dir))
+    laidOutMemo(s, dir, "liTraj")(Trajectories.fromLineitem(s, dir))
 
-  /** tau=1 lag pairs over the lineitem trajectories (q29/q30 core). */
-  private[graft] def liPairs(s: SparkSession, dir: String): DataFrame =
-    memoFrame(s, dir, "liPairs")(Lag.pairs(Trajectories.fromLineitem(s, dir), 1))
-
-  /** Discrete event-state trajectories, materialized once per session. */
+  /** Discrete event-state trajectories, laid out once per session. */
   private[graft] def dtrajEv(s: SparkSession, dir: String): DataFrame =
-    memoFrame(s, dir, "dtrajEv")(Trajectories.dtrajFromEvents(s, dir))
+    laidOutMemo(s, dir, "dtrajEv")(Trajectories.dtrajFromEvents(s, dir))
 
   /** The verified near-dup edge set (minhash banding -> exact >= 0.6
     * jaccard), shared by q21/q76/q104/q130 — the judge-flagged q130

@@ -16,12 +16,31 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * parquet, readable by any engine. */
 object Sinks {
 
-  /** Deterministic per-(tag, source-dir) scratch path under java.io.tmpdir
+  /** This process's sink directory, `graft-sink-<pid>` under
+    * java.io.tmpdir: two engine processes on one box never write each
+    * other's sinks. A shutdown hook deletes it when the JVM exits, never
+    * inside a query. */
+  lazy val processRoot: java.io.File = {
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft-sink-${ProcessHandle.current().pid()}")
+    sys.addShutdownHook(deleteProcessSinks())
+    root
+  }
+
+  /** Deletes every sink this process wrote. */
+  def deleteProcessSinks(): Unit = deleteTree(processRoot)
+
+  private def deleteTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
+  }
+
+  /** Deterministic per-(tag, source-dir) scratch path in [[processRoot]]
     * — re-runs overwrite in place; sf0.01 and sf0.1 runs never collide. */
   def scratchPath(tag: String, srcDir: String): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(srcDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s"${System.getProperty("java.io.tmpdir")}/graft-sink-$tag-$h"
+    s"$processRoot/$tag-$h"
   }
 
   /** Write `df` as parquet partitioned by `partCols` (hive-style
@@ -57,13 +76,7 @@ object Sinks {
     val wh = spark.conf.get("spark.sql.warehouse.dir")
       .stripPrefix("file:")
     val loc = new java.io.File(wh, name.toLowerCase)
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(loc)
-    }
+    if (loc.exists()) deleteTree(loc)
     df.write.mode(SaveMode.Overwrite)
       .format("parquet")
       .bucketBy(nBuckets, bucketCol)

@@ -6,8 +6,14 @@ import org.apache.spark.sql.DataFrame
   * CORRECTNESS REQUIREMENT (the nondeterministic-plan rule): frames built
   * on `repartitionByRange` (boundaries re-SAMPLED per materialization) or
   * `spark_partition_id()` that are consumed more than once inside one
-  * plan, and the per-iteration label/rank frames whose lineage must stay
-  * flat.
+  * plan, the per-iteration label/rank frames whose lineage must stay
+  * flat, and the session-shared frames of `QShared` that are not
+  * trajectory tables (the dup-edge set, the postings). A frozen frame
+  * declares no partitioning or order, so every consumer shuffles it
+  * again. The shared trajectory tables (`QShared.liTraj`, `dtrajEv`) are
+  * therefore not frozen: `graft.lag.TrajectoryScan.layout` persists them
+  * with their lineage intact and their layout declared, which is sound
+  * only because their plans are deterministic (it requires that).
   *
   * Default (`spark.graft.reliableCheckpoint=false`): `localCheckpoint()` —
   * eager, executor-local blocks, the right call at local[32] and on

@@ -60,9 +60,11 @@ final class Transport[T] private (
 
 object Transport {
 
-  /** Items in partition order, `weight` summed for the dispatch. */
+  /** Items in partition order, `weight` summed for the dispatch. The
+    * data is read through its [[PreparedPlan]], so sizing a cached or
+    * shuffled input is one job. */
   def apply[T](data: Dataset[T], threshold: Long, unit: Int)(weight: T => Long): Transport[T] =
-    build(data.rdd, threshold, unit, weight, identity[Array[T]])
+    build(PreparedPlan.objects(data), threshold, unit, weight, identity[Array[T]])
 
   /** Trajectories as [[graft.lag.TrajectoryScan]] hands them out, one per
     * `stats` call, weighed by their frame count; the local leg runs them

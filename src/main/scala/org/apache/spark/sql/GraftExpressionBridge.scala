@@ -24,6 +24,28 @@ object GraftExpressionBridge {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
+  /** DataFrame over rows `plan` has already computed, whose logical plan
+    * declares `plan`'s partitioning and ordering, so the planner drops the
+    * exchange and the sort that a consumer's repartition, window or
+    * sort-within-partitions would repeat. `rdd` MUST hold `plan`'s output
+    * rows in `plan`'s partitions (same count, same order); `stats` are
+    * the size estimates joins plan with. The one `LogicalRDD` built in the
+    * engine. */
+  def laidOut(
+      spark: SparkSession,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      plan: org.apache.spark.sql.execution.SparkPlan,
+      stats: org.apache.spark.sql.catalyst.plans.logical.Statistics): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(session, org.apache.spark.sql.execution.LogicalRDD(
+      plan.output, rdd, plan.outputPartitioning, plan.outputOrdering)(session, Some(stats)))
+  }
+
+  /** The session's UUID (`private[sql]` in Spark 4.1): unique per live
+    * session, where `identityHashCode` may repeat. */
+  def sessionUUID(spark: SparkSession): String =
+    spark.asInstanceOf[classic.SparkSession].sessionUUID
+
   /** Leaf attribute name of a (possibly qualified / sort-directed) column:
     * `col("k")`, `df("k")`, `col("t.k")`, `col("k").asc` all yield "k" —
     * used by stringly-typed preconditions (GlobalIndex range_excl) so a

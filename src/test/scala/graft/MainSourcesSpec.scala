@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * MLlib; and one per-trajectory scan (`graft.lag.TrajectoryScan`), so no
   * other source sorts partitions by the trajectory key or groups a
   * trajectory by hand (a `mapGroups`/`flatMapGroups` body that sorts its
-  * group by t, `sortBy(_._2)`). */
+  * group by t, `sortBy(_._2)`); and one place that declares a frame's
+  * layout to the planner (`GraftExpressionBridge.laidOut`), so no other
+  * source builds a `LogicalRDD`. */
 class MainSourcesSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -63,5 +65,13 @@ class MainSourcesSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"per-trajectory grouping outside graft.lag.TrajectoryScan in: ${offenders.mkString(", ")}")
+  }
+
+  test("only GraftExpressionBridge builds a LogicalRDD") {
+    val offenders = sources().collect {
+      case (p, text) if p != "org/apache/spark/sql/GraftExpressionBridge.scala" &&
+          text.contains("LogicalRDD(") => p
+    }
+    assert(offenders.isEmpty, s"LogicalRDD built outside GraftExpressionBridge in: ${offenders.mkString(", ")}")
   }
 }

@@ -83,4 +83,24 @@ class MomentsSpec extends SparkSpec with Matchers {
     val m = agg.finish(buf)
     m.mean0(0) shouldBe (1000.0 / 10002.0) +- 1e-9
   }
+
+  test("the compensated totals do not depend on how the rows are split and merged") {
+    // decimal-valued features (l_tax-like) whose float sums round
+    // differently in every order; the merged totals must not
+    val rnd = new scala.util.Random(11)
+    val rows = Seq.fill(60000) {
+      val v = Array(rnd.nextInt(9) / 100.0, rnd.nextInt(5000) / 97.0)
+      LagRow(v, v, 1.0)
+    }
+    val agg = new MomentsAggregator(true)
+    def fit(chunks: Seq[Seq[LagRow]]): CovarianceModel =
+      agg.finish(chunks.map(c => c.foldLeft(agg.zero)((b, r) => { b.add(r.x, r.y, r.w); b }))
+        .reduce((a, b) => { a.mergeIn(b); a }))
+    val whole = fit(Seq(rows))
+    for (n <- Seq(3, 8, 17)) withClue(s"chunks=$n: ") {
+      val split = fit(rows.zipWithIndex.groupBy(_._2 % n).values.map(_.map(_._1)).toSeq.reverse)
+      split.mean0.toSeq shouldBe whole.mean0.toSeq
+      split.cov00.toSeq shouldBe whole.cov00.toSeq
+    }
+  }
 }

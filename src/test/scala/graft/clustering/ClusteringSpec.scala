@@ -253,6 +253,16 @@ class ClusteringSpec extends SparkSpec with Matchers {
     }
   }
 
+  test("a local-leg Lloyd fit over a cached, repartitioned frame runs at most 2 jobs") {
+    // the transport reads through a plan prepared without adaptive
+    // execution, which would fill the fit's cache in a job of its own
+    val df = blobs(3000, 43L).repartition(3).cache()
+    try {
+      df.count()
+      jobsLaunchedBy(LloydKMeans.fit(df, 3, maxIter = 5, seed = 7L)) should be <= 2
+    } finally { df.unpersist(); () }
+  }
+
   test("LloydKMeans.fit rejects a NaN or infinite feature value, naming the operator") {
     import spark.implicits._
     for (bad <- Seq(Double.NaN, Double.PositiveInfinity); threshold <- Seq(0L, Long.MaxValue)) {

@@ -3,6 +3,7 @@ package graft.decomposition
 import graft.SparkSpec
 import graft.basis.{Identity, Monomials}
 import graft.kernels.{GaussianKernel, PolynomialKernel}
+import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 /** EDMD / KernelEDMD / KernelCCA / KVAD (reference
@@ -79,5 +80,34 @@ class KernelMethodsSpec extends SparkSpec with Matchers {
     model.score.isNaN shouldBe false
     model.score should be > 0.0
     model.koopmanMatrix(0, 0) shouldBe 1.0
+  }
+
+  test("the landmarks are the bottom-k xxhash64 pairs, the same in the same order for 1, 3 or 8 partitions") {
+    val data = linearData(1200)
+    val maxRows = 150
+    val key = xxhash64(col("traj_id"), col("t"), lit(42L))
+    // the reference: the lag-1 pairs with the smallest Spark xxhash64, in key order
+    val want = graft.lag.Lag.pairs(data, 1).select(key.as("h"), col("traj_id"), col("t"), col("x"), col("y"))
+      .orderBy("h", "traj_id", "t").limit(maxRows).collect()
+      .map(r => (r.getSeq[Double](3), r.getSeq[Double](4))).toSeq
+    val key0 = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      for (n <- Seq(1, 3, 8)) withClue(s"partitions=$n: ") {
+        spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+        val (xs, ys) = KernelData.collectPairs(data.repartition(n), tau = 1, maxRows = maxRows)
+        xs.map(_.toSeq).toSeq.zip(ys.map(_.toSeq).toSeq) shouldBe want
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", key0)
+  }
+
+  test("the landmark draw pairs each frame with the one tau later in its trajectory, in one job") {
+    import spark.implicits._
+    // two trajectories with gaps in t, where pairing is by position
+    val df = Seq((1L, 0L, 1.0), (1L, 5L, 2.0), (1L, 9L, 3.0), (1L, 10L, 4.0), (2L, 3L, 10.0), (2L, 4L, 20.0))
+      .toDF("traj_id", "t", "v").withColumn("features", array(col("v")))
+    var got: (Array[Array[Double]], Array[Array[Double]]) = null
+    jobsLaunchedBy { got = KernelData.collectPairs(df, tau = 2, maxRows = 10) } shouldBe 1
+    got._1.map(_.head).zip(got._2.map(_.head)).toSet shouldBe Set(1.0 -> 3.0, 2.0 -> 4.0)
+    KernelData.collectPairs(df, tau = 1, maxRows = 2)._1.length shouldBe 2
   }
 }

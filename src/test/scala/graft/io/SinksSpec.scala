@@ -56,4 +56,20 @@ class SinksSpec extends SparkSpec with Matchers {
     spark.read.parquet(p1).count() shouldBe 1
     Sinks.scratchPath("spec_idem", "srcB") should not be p1
   }
+
+  test("scratch paths live in this process's own directory, which deleteProcessSinks removes") {
+    import spark.implicits._
+    val pid = ProcessHandle.current().pid()
+    Sinks.processRoot.getName shouldBe s"graft-sink-$pid"
+    val other = new java.io.File(Sinks.processRoot.getParentFile, s"graft-sink-${pid + 1}-spec")
+    other.mkdirs()
+    try {
+      val path = Sinks.writePartitioned(Seq((1L, "x")).toDF("id", "kind"), "spec_pid", "srcA", "kind")
+      new java.io.File(path).getParentFile shouldBe Sinks.processRoot
+      Sinks.deleteProcessSinks()
+      new java.io.File(path).exists() shouldBe false
+      Sinks.processRoot.exists() shouldBe false
+      other.exists() shouldBe true
+    } finally { other.delete(); () }
+  }
 }
