@@ -1441,17 +1441,18 @@ object ScaleAudit {
     * at a ~100x corpus. The hard-part contract
     * (decomposition/KernelMethods.scala KernelData) says gram methods are
     * inherently O(T^2) driver memory, so at scale they run on a bounded
-    * landmark subset drawn by a DISTRIBUTED seeded hash + limit — never a
-    * full collect. Invariants:
+    * landmark subset drawn by a DISTRIBUTED bottom-k hash sample (one
+    * TrajectoryScan fold keeping the cap's smallest xxhash64 keys) —
+    * never a full collect. Invariants:
     *   1. the collected landmark set never exceeds maxLandmarks, and
-    *      lands within the hash-sample variance band below it
-    *      (>= 0.75 * cap), at a corpus ~16,000x the cap;
+    *      lands at or above 0.75 * cap (a bottom-k sample fills the cap
+    *      whenever there are more pairs), at a corpus ~16,000x the cap;
     *   2. landmark-estimate CONVERGENCE (the tram100 capped-vs-exact
     *      pattern): a 2x-cap refit moves the leading spectrum by less
     *      than a stated bound — KernelCCA top-3 canonical correlations,
     *      KernelEDMD top-3 |eigenvalue|, KVAD score (relative);
     *   3. wall time stays landmark-dominated (printed; the distributed
-    *      part is one count + one bounded scan per fit). */
+    *      part is one fold per fit). */
   def kernel100(spark: SparkSession, src: String): Int = {
     var failures = 0
     // Corpus: 9.6M frames of Ornstein-Uhlenbeck, generated DISTRIBUTED

@@ -35,6 +35,16 @@ class TrajectoryLayoutSpec extends SparkSpec with Matchers with AdaptiveSparkPla
     }
   }
 
+  test("laying out each shared table shuffles it once") {
+    // dtrajEv's row_number window already hash-partitions by traj_id, so
+    // its layout reuses that exchange instead of adding a second one
+    for ((name, frame, values) <- Seq(
+        ("liTraj", Trajectories.fromLineitem(spark, dir), Seq(col("features"))),
+        ("dtrajEv", Trajectories.dtrajFromEvents(spark, dir), Seq(col("state"))))) withClue(s"$name: ") {
+      TrajectoryScan.plan(frame, values).collect { case e: ShuffleExchangeExec => e } should have size 1
+    }
+  }
+
   test("lag windows over a laid-out frame shuffle nothing by traj_id") {
     exchanges(Lag.pairs(QShared.liTraj(spark, dir), 1)) shouldBe empty
     // the count's own aggregation exchange (by s0, s1) stays
